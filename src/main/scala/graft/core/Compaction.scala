@@ -267,25 +267,6 @@ object Compaction {
     (before, spark.table(fqn).inputFiles.length)
   }
 
-  /** Dynamic-partition-overwrite insert (partitions present in `df` are
-    * replaced, all others untouched), with the session conf set for the
-    * write and restored after — same mechanics as TableStore.insertDynamic.
-    */
-  private def overwriteDynamic(spark: SparkSession,
-                               df: org.apache.spark.sql.DataFrame,
-                               fqn: String): Unit = {
-    import org.apache.spark.sql.functions.col
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try df.select(spark.table(fqn).columns.map(col).toIndexedSeq: _*)
-      .write.mode("overwrite").insertInto(fqn)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   /** Per-partition compaction — the 100 TB form promised by the object
     * scaladoc: only the partitions selected by `partitionPredicate` (a SQL
     * expression over partition columns, e.g. `"od_year = 1997"`) are
@@ -379,7 +360,7 @@ object Compaction {
     val marker = s"${fqn}__publish"
     val qMarker = quoted(marker)
     if (spark.catalog.tableExists(tmp) && spark.catalog.tableExists(marker)) {
-      overwriteDynamic(spark, spark.table(tmp), fqn)
+      PartitionOverwrite.insertDynamic(spark.table(tmp), fqn)
       spark.sql(s"DROP TABLE $qMarker")
       spark.sql(s"DROP TABLE $qTmp")
     } else if (spark.catalog.tableExists(tmp)) {
@@ -435,7 +416,7 @@ object Compaction {
     // refuses, so the in-doubt window (live slice possibly partial) is
     // visible instead of silently writable.
     spark.sql(s"CREATE TABLE $qMarker (pending INT) USING parquet")
-    overwriteDynamic(spark, spark.table(tmp), fqn)
+    PartitionOverwrite.insertDynamic(spark.table(tmp), fqn)
     spark.sql(s"DROP TABLE $qMarker")
     spark.sql(s"DROP TABLE $qTmp")
     spark.catalog.refreshTable(fqn)

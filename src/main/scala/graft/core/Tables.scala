@@ -185,8 +185,10 @@ final class TableStore(spark: SparkSession, config: PipelineConfig) {
     val name = fqn(layer, table)
     resolvePendingPublish(name, mode)
     clearStrandedLocation(layer, table, mode)
-    df.write.format("parquet").mode(mode)
-      .partitionBy(partitionCols: _*).saveAsTable(name)
+    // a CTAS into a partitioned table overwrites dynamically while the
+    // session conf says so — keep a concurrent dynamic insert's conf out
+    PartitionOverwrite.locked(df.write.format("parquet").mode(mode)
+      .partitionBy(partitionCols: _*).saveAsTable(name))
     clearPendingPublish(name, mode)
   }
 
@@ -236,12 +238,14 @@ final class TableStore(spark: SparkSession, config: PipelineConfig) {
         spark.sql(s"CREATE TABLE $name (${df.schema.toDDL}) USING parquet " +
           s"PARTITIONED BY (${ident(batchCol)}) LOCATION '$escapedLoc'")
         spark.sql(s"MSCK REPAIR TABLE $name")
-        insertDynamic(df, name, rebalanceBy = rebalanceCols(name, Seq(batchCol)))
+        PartitionOverwrite.insertDynamic(df, name,
+          rebalanceBy = rebalanceCols(name, Seq(batchCol)))
       } else {
         df.write.format("parquet").partitionBy(batchCol).saveAsTable(name)
       }
     } else {
-      insertDynamic(df, name, rebalanceBy = rebalanceCols(name, Seq(batchCol)))
+      PartitionOverwrite.insertDynamic(df, name,
+        rebalanceBy = rebalanceCols(name, Seq(batchCol)))
     }
   }
 
@@ -254,23 +258,6 @@ final class TableStore(spark: SparkSession, config: PipelineConfig) {
       s"${spark.conf.get("spark.sql.warehouse.dir")}/${db.toLowerCase}.db/" +
         ident(s"${layer}_$table").toLowerCase)
 
-  /** Dynamic-partition-overwrite insert: the writer-level
-    * partitionOverwriteMode option is not honored on this insertInto path,
-    * so the session conf is set for the write and restored after
-    * (df.sparkSession: foreachBatch hands a cloned session).
-    *
-    * `rebalanceBy` (r20, guide §6 "coalesce on write" / Iceberg's
-    * `write.distribution-mode=hash`): without it, every upstream task
-    * holding rows of a partition opens its own file there — an N-task
-    * merge writing P touched partitions emits up to N·P small files per
-    * upsert, compounding into exactly the fragmentation `compactTable`
-    * exists to undo. An AQE REBALANCE on the partition columns clusters
-    * rows per partition at the advisory size — one file per partition
-    * when small, SPLIT when a partition exceeds the advisory bytes (so
-    * a skewed partition does not serialize into one writer task, the
-    * failure mode plain `repartition(partCols)` would have). Rows are
-    * unchanged; only the file layout moves.
-    */
   /** The partition-column rebalance list for a dynamic write into `name`:
     * the partition columns once the table is past
     * [[TableStore.RebalanceMinTableBytes]], else empty. Sized by ONE
@@ -290,24 +277,6 @@ final class TableStore(spark: SparkSession, config: PipelineConfig) {
       try fs.getContentSummary(loc).getLength
       catch { case _: java.io.FileNotFoundException => 0L }
     if (bytes >= TableStore.RebalanceMinTableBytes) partCols else Nil
-  }
-
-  private def insertDynamic(df: DataFrame, name: String,
-                            rebalanceBy: Seq[String] = Nil): Unit = {
-    import org.apache.spark.sql.functions.col
-    val sess = df.sparkSession
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = sess.conf.getOption(key)
-    sess.conf.set(key, "dynamic")
-    val aligned = df.select(spark.table(name).columns.map(col).toIndexedSeq: _*)
-    val shaped =
-      if (rebalanceBy.isEmpty) aligned
-      else aligned.hint("rebalance", rebalanceBy.map(col): _*)
-    try shaped.write.mode(SaveMode.Overwrite).insertInto(name)
-    finally prev match {
-      case Some(v) => sess.conf.set(key, v)
-      case None    => sess.conf.unset(key)
-    }
   }
 
   /** Drop a table from BOTH catalog and storage. The physical location
@@ -661,7 +630,8 @@ final class TableStore(spark: SparkSession, config: PipelineConfig) {
       .unionByName(incoming)
       .observe(presentObs,
         collect_set(struct(partCols.map(col): _*)).as("present"))
-    insertDynamic(merged, name, rebalanceBy = rebalanceCols(name, partCols))
+    PartitionOverwrite.insertDynamic(merged, name,
+      rebalanceBy = rebalanceCols(name, partCols))
     // Driver-side set difference over EXTERNAL row values: both sides
     // come off the same partition columns of the same session (collect
     // and observe use the same external conversion), so value classes

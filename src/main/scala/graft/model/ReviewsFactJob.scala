@@ -3,7 +3,7 @@ package graft.model
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{GameConstants, PipelineConfig, TableStore}
-import graft.ai.SentimentScorer
+import graft.ai.{AiFunctions, SentimentScorer}
 import graft.ingest.{CsvSource, Schemas}
 
 /** Reviews-fact ETL ≙ `/root/reference/src/notebooks/modelling/
@@ -13,6 +13,15 @@ import graft.ingest.{CsvSource, Schemas}
   * against the existing fact so each review is scored exactly once (J2,
   * `reviews_fact.py:150-153`) → take one batch → sentiment-score under the
   * null/empty guard (U1/F4) → sponsored down-weighting (C3/C4) → append.
+  *
+  * Scoring is batched ([[graft.ai.AiFunctions.withSentimentBatched]]): one
+  * scorer per partition streams the batch through
+  * [[graft.ai.SentimentScorer.scoreBatch]], so an HTTP scorer sends one
+  * request per chunk of texts rather than one per row, the form sentiment
+  * scoring takes at scale. The batch stays in the single
+  * partition its `limit` leaves: spreading it over more partitions would
+  * run more scorers at once for little gain on a daily delta, at the cost
+  * of memory.
   *
   * Two deliberate fixes over the reference (SURVEY.md §2.8, §4):
   *  - the reference batches with bare `limit(batch_size)` (non-deterministic)
@@ -67,19 +76,22 @@ final class ReviewsFactJob(spark: SparkSession, store: TableStore,
       .limit(config.batchSize)
       .cache()
 
-    val scoreUdf = { val sc = scorer; udf((t: String) => sc.score(t)) }
-
     // U1 under F4 null-guard — `reviews_fact.py:103-109`; C3/C4 weighting —
     // `reviews_fact.py:157-167`
-    val scored = batch
+    val sc = scorer
+    val scored = AiFunctions.withSentimentBatched(batch, "review_text",
+        "sentiment_score", () => sc)
       .withColumn("sentiment_score",
         when(col("review_text").isNull || col("review_text") === "", lit(0))
-          .otherwise(scoreUdf(col("review_text"))))
+          .otherwise(col("sentiment_score")))
       .withColumn("weighted_score",
         when(col("sponsored_review"), col("sentiment_score") * 0.5)
           .otherwise(col("sentiment_score") * 1.0))
 
-    val n = scored.count() // ≙ `reviews_fact.py:177` batch math
+    // ≙ `reviews_fact.py:177` batch math — counted on the cached batch:
+    // the scoring `mapPartitions` cannot be column-pruned, so counting the
+    // scored frame would score every row a second time
+    val n = batch.count()
     store.save(scored, "fact", "reviews", SaveMode.Append) // `reviews_fact.py:186`
     batch.unpersist()
     n

@@ -1,9 +1,19 @@
 package graft.pipeline
 
+import java.util.concurrent.{Callable, ExecutionException, Executors, ThreadFactory}
+
 /** Minimal DAG runner ≙ the Databricks Jobs workflow
   * (`/root/reference/src/job/workflow.json`, SURVEY.md §2.10):
-  * stages with explicit dependencies, topological sequential execution,
-  * fail-fast (`run_if: ALL_SUCCESS`).
+  * stages with explicit dependencies, run in waves — every stage whose
+  * deps are all done runs concurrently with the others of its wave, as the
+  * reference runs `dimensions` beside `reviews_fact` — fail-fast
+  * (`run_if: ALL_SUCCESS`).
+  *
+  * Stages of one wave share the caller's SparkSession. A stage that
+  * changes session state another stage reads — a conf, a temp-view name,
+  * the current database — must be ordered against that stage by a dep;
+  * stages with no dependency path between them are, by declaration,
+  * independent.
   */
 final case class Stage(name: String, deps: Seq[String] = Nil)(val run: () => Unit)
 
@@ -82,23 +92,60 @@ object Pipeline {
     def failedRuns: Seq[Throwable] = synchronized(failures)
   }
 
-  /** Run stages in dependency order; any failure aborts the rest
-    * (downstream of the reference's quality gate never runs on error —
-    * `workflow.json:49-79`). Returns the executed order.
+  /** Run stages in dependency order, one wave at a time: a wave is every
+    * stage whose deps are all done, and its stages run concurrently, each
+    * on its own thread. Any failure aborts the rest: no stage of a later
+    * wave starts (downstream of the reference's quality gate never runs on
+    * error — `workflow.json:49-79`). Returns the executed order: waves in
+    * order, stages in declaration order within a wave, whichever finished
+    * first.
     */
   def run(stages: Seq[Stage]): Seq[String] = {
     val byName = stages.map(s => s.name -> s).toMap
     stages.foreach(s => s.deps.foreach(d =>
       require(byName.contains(d), s"stage ${s.name}: unknown dep $d")))
     var done = Vector.empty[String]
-    var remaining = stages
+    var remaining = stages.toVector // strict: a lazy wave would submit serially
     while (remaining.nonEmpty) {
       val (ready, blocked) = remaining.partition(_.deps.forall(done.contains))
       require(ready.nonEmpty,
         s"dependency cycle among: ${remaining.map(_.name).mkString(", ")}")
-      ready.foreach { s => s.run(); done :+= s.name }
+      runWave(ready)
+      done ++= ready.map(_.name)
       remaining = blocked
     }
     done
+  }
+
+  /** Runs one wave on a pool of `wave.size` threads and waits for every
+    * stage, even after one fails. The pool is created from the calling
+    * thread, so its threads inherit the caller's SparkContext local
+    * properties (job group, scheduler pool) and active session. The first
+    * failure in declaration order is rethrown as the stage threw it, with
+    * the others attached as suppressed; a fatal error reaches the caller
+    * as itself, never wrapped.
+    */
+  private def runWave(wave: Seq[Stage]): Unit = {
+    val pool = Executors.newFixedThreadPool(wave.size, stageThreads)
+    try {
+      val futures = wave.map(s => pool.submit(new Callable[Unit] {
+        override def call(): Unit = s.run()
+      }))
+      val failures = futures.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: ExecutionException => Some(Option(e.getCause).getOrElse(e)) }
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.filter(_ ne first).foreach(first.addSuppressed)
+        throw first
+      }
+    } finally pool.shutdownNow()
+  }
+
+  /** Daemon threads: a stage that never returns must not keep the JVM up. */
+  private val stageThreads: ThreadFactory = (r: Runnable) => {
+    val t = new Thread(r, "graft-pipeline-stage")
+    t.setDaemon(true)
+    t
   }
 }

@@ -179,6 +179,70 @@ class PipelineE2ESpec extends SparkSpec {
     } finally store.dropAll()
   }
 
+  test("stages of one wave run concurrently") {
+    // serial execution would leave the first stage alone at the barrier
+    val barrier = new java.util.concurrent.CyclicBarrier(2)
+    def meet(): Unit = barrier.await(30, java.util.concurrent.TimeUnit.SECONDS)
+    val order = Pipeline.run(Seq(
+      Stage("left")(() => meet()),
+      Stage("right")(() => meet()),
+      Stage("after", deps = Seq("left", "right"))(() => ())))
+    assert(order == Seq("left", "right", "after"))
+  }
+
+  test("a failing stage's sibling finishes, its dependents never start") {
+    val siblingDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val downstreamRan = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failure = intercept[DQViolationException] {
+      Pipeline.run(Seq(
+        Stage("gate")(() => throw new DQViolationException("1 error row")),
+        Stage("slow")(() => { Thread.sleep(300); siblingDone.set(true) }),
+        Stage("downstream", deps = Seq("gate"))(() => downstreamRan.set(true))))
+    }
+    assert(failure.getSuppressed.isEmpty)
+    assert(siblingDone.get, "the gate's sibling must run to completion")
+    assert(!downstreamRan.get)
+  }
+
+  test("every failure of a wave reaches the caller, first in declaration order") {
+    val e = intercept[IllegalStateException] {
+      Pipeline.run(Seq(
+        Stage("first")(() => { Thread.sleep(200); throw new IllegalStateException("first") }),
+        Stage("second")(() => throw new IllegalArgumentException("second"))))
+    }
+    assert(e.getMessage == "first")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("second"))
+  }
+
+  test("stage threads see the caller's local properties") {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    def jobGroupInTask(stage: String): Unit = seen.put(stage,
+      sc.parallelize(Seq(1), 1)
+        .map(_ => org.apache.spark.TaskContext.get().getLocalProperty("spark.jobGroup.id"))
+        .collect().head)
+    sc.setJobGroup("pipeline-spec-group", "local-property inheritance")
+    try Pipeline.run(Seq(
+      Stage("a")(() => jobGroupInTask("a")),
+      Stage("b")(() => jobGroupInTask("b"))))
+    finally sc.clearJobGroup()
+    assert(seen.get("a") == "pipeline-spec-group")
+    assert(seen.get("b") == "pipeline-spec-group")
+  }
+
+  test("the returned order is declaration order, whichever stage finishes first") {
+    val secondDone = new java.util.concurrent.CountDownLatch(1)
+    val finished = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val order = Pipeline.run(Seq(
+      Stage("first")(() => {
+        assert(secondDone.await(30, java.util.concurrent.TimeUnit.SECONDS))
+        finished.add("first")
+      }),
+      Stage("second")(() => { finished.add("second"); secondDone.countDown() })))
+    assert(finished.toArray.toSeq == Seq("second", "first"))
+    assert(order == Seq("first", "second"))
+  }
+
   test("Runner serializes runs: a trigger during a run queues, FIFO (§2.10)") {
     val runner = new Pipeline.Runner(maxConcurrent = 1)
     val order = scala.collection.mutable.ArrayBuffer.empty[String]

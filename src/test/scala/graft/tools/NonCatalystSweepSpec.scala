@@ -65,9 +65,6 @@ class NonCatalystSweepSpec extends AnyFunSuite {
       "reference-parity", "the ai_query translate prompt " +
         "(auxillary_dims.py:19-25) — the reference's LLM call is the " +
         "contract, not a relational recompute"),
-    Entry("model/ReviewsFactJob.scala", "udf((t: String) => sc.score(t))",
-      "reference-parity", "the U1 sentiment scorer (reviews_fact.py) — " +
-        "rubric + fallback semantics ported as data, not re-derived"),
     Entry("operators/Similarity.scala",
       ".mapPartitions(it => KnnTopK.combine(it, k))",
       "numeric-kernel", "r20: in-stage bounded top-k combiner over the " +
