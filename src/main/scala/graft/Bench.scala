@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every catalog query at the target scale factor and
   * prints ONE JSON line `{"metric":…,"value":…,"unit":"sec","queries":{…},"sf":…}`.
   *
@@ -304,18 +302,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local-mode scan parallelism: harness files are a few MB, so the
-      // 128MB default gives single-task scans; clusters keep the default
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .getOrCreate()
+    val spark = graft.core.Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // NonFatal only: a query failure becomes the never-dropped -1 marker

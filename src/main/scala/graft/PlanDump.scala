@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-dump tool (optimization guide §1/§7.2): writes
   * `explain("formatted")` for every declared catalog query to one file
   * per query, so plan-shape claims (Exchange count, join strategy,
@@ -9,24 +7,16 @@ import org.apache.spark.sql.SparkSession
   * committed as round evidence (`plans/r<N>/<query>_{before,after}.txt`).
   *
   * Usage: `sbt "runMain graft.PlanDump <outDir> [query,query,...]"` with
-  * the same `SPARK_GRAFT_SF_DIR` / `SPARK_GRAFT_CPUS` contract as Bench,
-  * so the dumped plan is the one the bench actually times (same confs,
-  * same AQE seed state). Not a query path: nothing here executes a plan.
+  * the same `SPARK_GRAFT_SF_DIR` / `SPARK_GRAFT_CPUS` contract and the
+  * same [[graft.core.Sessions]] profile as Bench, so the dumped plan is
+  * the one the bench actually times (same confs, same AQE seed state).
+  * Not a query path: nothing here executes a plan.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/graft-plans")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .getOrCreate()
+    val spark = graft.core.Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val only = args.drop(1).headOption
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)

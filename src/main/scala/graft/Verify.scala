@@ -1,25 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // legacy events.parquet generations carried TIMESTAMP(NANOS), which
-      // Spark only reads as LONG under this flag; current generations ship
-      // native µs. QueryUtil.events normalizes either shape to TIMESTAMP.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local-mode scan parallelism: harness files are a few MB, so the
-      // 128MB default gives single-task scans; clusters keep the default
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .getOrCreate()
+    val spark = graft.core.Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // optional comma-separated subset (same contract as Bench) — re-dump
@@ -31,8 +18,9 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      catch { case NonFatal(e) =>
+        System.err.println(s"[verify] $name failed: " +
+          s"${e.getClass.getSimpleName}: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

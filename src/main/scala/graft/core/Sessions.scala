@@ -2,37 +2,41 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory for the engine.
+/** The one session profile every entry point runs under: Bench, Verify,
+  * Profile, PlanDump, the specs and the test-data generator all build
+  * their session here, so a plan measured by one tool is the plan the
+  * others run.
   *
-  * Local-mode defaults tuned for the test harness (local[N] with N shuffle
-  * partitions, AQE on, UTC). On a real cluster the same builder is used
-  * without `master`, letting spark-submit supply cluster config; shuffle
-  * partitions then come from AQE coalescing rather than the static value.
+  * The profile is local mode: `local[cores]` with `cores` static shuffle
+  * partitions, which AQE re-coalesces after each shuffle. Callers add
+  * deployment paths only (a warehouse dir), never a conf that changes
+  * what a query plans.
   */
 object Sessions {
 
-  /** Build a local session. `cores` controls both parallelism and the static
-    * shuffle-partition count — at 100TB scale AQE re-coalesces post-shuffle
-    * partitions so the static setting only seeds the initial number.
+  /** `SPARK_GRAFT_CPUS`, read once: the core count every tool defaults to. */
+  private lazy val defaultCores: Int =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** The profile's confs for `cores` cores, without `spark.master`. */
+  def confs(cores: Int): Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> cores.toString,
+    "spark.ui.enabled" -> "false",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.adaptive.enabled" -> "true",
+    // legacy events.parquet generations carry TIMESTAMP(NANOS) (read as
+    // LONG under this flag); current ones ship native µs — see
+    // QueryUtil.events, which normalizes either shape to TIMESTAMP
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    // local-mode scan parallelism: harness files are a few MB, so the
+    // 128MB default gives single-task scans; clusters keep the default
+    "spark.sql.files.maxPartitionBytes" -> "4m")
+
+  /** A builder carrying the profile; the caller may add deployment paths
+    * and calls `getOrCreate()`.
     */
-  def local(cores: Int = 4, appName: String = "graft"): SparkSession = {
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cores]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      // legacy events.parquet generations carry TIMESTAMP(NANOS) (read as
-      // LONG under this flag); current ones ship native µs — see
-      // QueryUtil.events, which normalizes either shape to TIMESTAMP
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local-mode scan parallelism for few-MB files; clusters keep 128m
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  def builder(cores: Int = defaultCores,
+              appName: String = "graft"): SparkSession.Builder =
+    SparkSession.builder().master(s"local[$cores]").appName(appName)
+      .config(confs(cores))
 }

@@ -42,8 +42,8 @@ object Broadcasts {
     * for a MID-SIZE caller side (say 100k–10M rows) against a HUGE
     * corpus, the broadcast's cluster value is that the corpus NEVER
     * SHUFFLES — a premium a local probe cannot see (local exchanges are
-    * in-memory copies; `IvfRouteProbe` measures the equi-join FASTER
-    * locally from the 64k tier up precisely because the corpus shuffle
+    * in-memory copies; SCALE_SF1.md §Round-16 records the equi-join
+    * FASTER locally from the 64k tier up because the corpus shuffle
     * costs nothing there). A caller who knows their executor headroom
     * and sits in that regime should force the broadcast through the
     * operator's `broadcast*` override — the informed override is the

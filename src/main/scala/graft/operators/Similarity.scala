@@ -488,7 +488,7 @@ object Similarity {
     // and therefore every trained centroid — is BIT-IDENTICAL to the old
     // single-threaded loop (the semd-family oracles pin exact pair sets,
     // so training must not drift). This is what makes the 4·C sample
-    // floor above affordable — MEASURED (TrainerScaleProbe, 32-core
+    // floor above affordable — MEASURED (SCALE_SF1.md §Round-16, 32-core
     // driver, dim 64, 10 iters, ~170 GFLOP/s sustained): C = 10^4 floor
     // sample trains in 5.8 s; C = √(1e9) ≈ 3.2·10^4 — the auto-sizing's
     // shape at a billion-row corpus — in 61 s; a quality caller's 32·C
@@ -564,7 +564,7 @@ object Similarity {
     // difference is invisible, which is why this is reasoned from the
     // 100 TB posture rather than measured locally.
     val bc = vecs.sparkSession.sparkContext.broadcast(centroids)
-    // Hot-loop shape (round 15, IvfGuardOverheadProbe-measured): this UDF
+    // Hot-loop shape (round 15, measured in SCALE_SF1.md §Round-15): this UDF
     // is the dominant per-row cost of every IVF family, so its inner loop
     // must be allocation-free primitive math. The parameter is
     // Array[Double] — Spark deserializes ArrayType(DOUBLE) to a primitive
@@ -667,8 +667,8 @@ object Similarity {
     * draws, and only the route choice (never correctness) depends on
     * the count. `knownQueryRows` lets a caller that already counted
     * (e.g. [[contrastivePairs]]'s anchor gate) share that number
-    * instead of paying a second job. Measured: `RouteCountProbe`
-    * (numbers in SCALE_SF1.md §Round-17).
+    * instead of paying a second job. Measured: SCALE_SF1.md §Round-17
+    * and §Round-18.
     */
   private def ivfScored(index: IvfIndex, queries: DataFrame, idCol: String,
                         vecCol: String, nProbe: Int,

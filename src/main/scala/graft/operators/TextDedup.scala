@@ -225,7 +225,7 @@ object TextDedup {
     *   that cache, so signatures+banding (the dominant derivation
     *   cost) materialize once for guard plus join instead of twice
     *   (measured: the guard-scoped form paid ~1.8× on a probe-shaped
-    *   pipeline, `PreflightOverheadProbe`). The cache therefore
+    *   pipeline, ARCHITECTURE.md §Round-14). The cache therefore
     *   outlives the call — release it after consuming the result via
     *   the handle: `minHashBandedKeys(df, …same args…).unpersist()`
     *   (the CacheManager matches equivalent plans; spec-proven in

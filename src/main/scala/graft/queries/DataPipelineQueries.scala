@@ -267,7 +267,7 @@ object DataPipelineQueries {
     // near-random (max pairwise cosine ~0.6), so true neighbors straddle
     // centroid boundaries — per-query recall at nProbe=12/16 (the sim4 /
     // NegativesIvf setting; 8 was this entry's original pin, but the sf1
-    // tier measured it at 0.2 worst-query — Sim2Probe sweeps the matrix)
+    // tier measured it at 0.2 worst-query — SCALE_SF1.md §Oracle parity)
     // measures a floor of 0.8 at every tier sf0.01/sf0.1/sf1; the
     // asserted bound is the spec floor 0.5, which a correctly-probing
     // index clears everywhere while a broken one (wrong bucket routing)

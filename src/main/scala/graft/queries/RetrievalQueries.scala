@@ -35,7 +35,7 @@ object RetrievalQueries {
       // §Round-18) — a real per-call job for a physical plan that is
       // byte-identical either way on a bounded set (Bm25RoutePlanSpec),
       // so the bounded caller takes the contract's lazy arm; the auto
-      // route's cost stays measured in RouteCountProbe, not hidden
+      // route's cost stays measured (SCALE_SF1 §Round-18), not hidden
       Retrieval.bm25TopK(docs, qs, "doc_id", "text", "qid", "qtext", k = 10,
         broadcastQueryTerms = Some(true))
     }),

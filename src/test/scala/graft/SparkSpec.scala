@@ -3,23 +3,34 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs — one per suite (lazy), small
-  * parallelism, UTC, AQE on.
+/** Shared local session for specs: the [[graft.core.Sessions]] profile at
+  * a fixed 4 cores, so specs do not depend on the host.
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Runs `body` with the given session confs set, then restores each key:
+    * a key that was set before gets its old value back, one that was not
+    * is unset (re-setting the default would pin it explicitly). `getAll`
+    * holds only explicitly set keys; `getOption` would report a default.
+    */
+  def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val set = spark.conf.getAll
+    val prev = kvs.map { case (k, _) => k -> set.get(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
 }
 
 object SparkSpec {
+  val cores = 4
+
   // one session for the whole test JVM; suites share it
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val s = graft.core.Sessions.builder(cores, "graft-test")
       .config("spark.sql.warehouse.dir",
         s"/tmp/graft-test-warehouse-${java.util.UUID.randomUUID()}")
       .getOrCreate()

@@ -46,13 +46,8 @@ object TestDataGen {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("local-data/sf1")
     val scale = if (args.length > 1) args(1).toDouble else 10.0
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-testdata-gen")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Sessions.builder(cores = 8,
+      appName = "graft-testdata-gen").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     generate(spark, outDir, scale)
     spark.stop()

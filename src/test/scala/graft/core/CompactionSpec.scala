@@ -245,11 +245,10 @@ class CompactionSpec extends SparkSpec {
     spark.table(fqn).where("p = 0").write.format("parquet")
       .partitionBy("p").saveAsTable(s"${fqn}__compact")
     spark.sql(s"CREATE TABLE ${fqn}__publish (pending INT) USING parquet")
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    spark.conf.set(key, "dynamic")
-    try spark.table(fqn).where("p = 0 AND id < 10")
-      .write.mode("overwrite").insertInto(fqn)
-    finally spark.conf.unset(key)
+    withConf("spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      spark.table(fqn).where("p = 0 AND id < 10")
+        .write.mode("overwrite").insertInto(fqn)
+    }
     assert(spark.table(fqn).count() < 300) // p=0 is short: crash simulated
     // while the marker stands, every mutator refuses loudly — a merge
     // computed from the short slice would bake the loss into real data

@@ -285,11 +285,11 @@ class TableModelPropertySpec extends SparkSpec {
             spark.sql(s"CREATE TABLE ${fqn}__publish (pending INT) " +
               "USING parquet")
             val shortP = model.values.head % 3
-            val key = "spark.sql.sources.partitionOverwriteMode"
-            spark.conf.set(key, "dynamic")
-            try spark.table(fqn).where(s"p = $shortP").limit(1)
-              .write.mode("overwrite").insertInto(fqn)
-            finally spark.conf.unset(key)
+            withConf("spark.sql.sources.partitionOverwriteMode" ->
+                "dynamic") {
+              spark.table(fqn).where(s"p = $shortP").limit(1)
+                .write.mode("overwrite").insertInto(fqn)
+            }
             // mutators must refuse while the marker stands
             val e = intercept[IllegalStateException] {
               parted.upsert(frame(List((0L, 0L)), wide, zed), "dim", "t",

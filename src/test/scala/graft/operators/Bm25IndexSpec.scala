@@ -50,10 +50,7 @@ class Bm25IndexSpec extends SparkSpec {
       "fewer exchanges than the from-text form") {
     Retrieval.savePostingsIndexBucketed(docs, "doc_id", "text",
       tablePrefix = "graft_bm25b_spec2", nBuckets = 4)
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // same forced route both sides so the only difference is the
       // storage layout; unexecuted frames (the AQE double-count lesson)
       val eText = hashExchanges(Retrieval.bm25TopK(docs, qs, "doc_id",
@@ -65,7 +62,7 @@ class Bm25IndexSpec extends SparkSpec {
       assert(eIndex < eText,
         s"bucketed postings must elide corpus-side exchanges: " +
           s"from-text $eText vs from-index $eIndex")
-    } finally spark.conf.set(key, prev)
+    }
   }
 
   test("meta is read by name, and corrupt meta fails loudly") {

@@ -25,12 +25,8 @@ import org.apache.spark.sql.functions.{col, concat, concat_ws, lit}
   */
 class Bm25RoutePlanSpec extends SparkSpec {
 
-  private def withAutoBroadcastOff[T](body: => T): T = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try body finally spark.conf.set(key, prev)
-  }
+  private def withAutoBroadcastOff[T](body: => T): T =
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
 
   private lazy val docs =
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet")

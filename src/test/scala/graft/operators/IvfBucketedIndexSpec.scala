@@ -38,10 +38,7 @@ class IvfBucketedIndexSpec extends SparkSpec {
     // own statistics broadcast is disabled so the join shape is ours:
     // at sf0.001 the 500-row corpus auto-broadcasts and no corpus-side
     // exchange exists to elide on EITHER path.
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val ePlain = hashExchanges(
         Similarity.knnGraphApprox(plain, k = 3, nProbe = 2))
       val eBucketed = hashExchanges(
@@ -51,7 +48,7 @@ class IvfBucketedIndexSpec extends SparkSpec {
       assert(eBucketed < ePlain,
         s"bucketed build must elide the corpus-side exchange: " +
           s"plain $ePlain vs bucketed $eBucketed exchanges")
-    } finally spark.conf.set(key, prev)
+    }
 
     val gPlain = Similarity.knnGraphApprox(plain, k = 3, nProbe = 2)
     val gBucketed = Similarity.knnGraphApprox(bucketed, k = 3, nProbe = 2)
@@ -75,14 +72,11 @@ class IvfBucketedIndexSpec extends SparkSpec {
     assert(viaBc == mem && viaEq == mem)
     // on the equi-join route the corpus side must not re-shuffle: only
     // the probe side and the final window exchange remain
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val e = hashExchanges(run(false))
       assert(e <= 2, s"bucketed equi-join route must keep ≤2 hash " +
         s"exchanges (probe side + final window), got $e")
-    } finally spark.conf.set(key, prev)
+    }
   }
 
   test("bucketed semantic index: per-increment pairs identical to the " +
@@ -107,10 +101,7 @@ class IvfBucketedIndexSpec extends SparkSpec {
     // the ingest-loop economics: the members side must not re-shuffle
     // per increment (unexecuted frames, estimator broadcast off — the
     // AQE final-plan double-count lesson from the first test applies)
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val ePath = hashExchanges(pairs(spark.read.parquet(p + "/centroids"),
         spark.read.parquet(p + "/members")))
       val eTables = hashExchanges(pairs(
@@ -119,7 +110,7 @@ class IvfBucketedIndexSpec extends SparkSpec {
       assert(eTables < ePath,
         s"bucketed members must elide their exchange: path $ePath vs " +
           s"tables $eTables")
-    } finally spark.conf.set(key, prev)
+    }
   }
 
   test("rebuild over an existing bucketed pair overwrites cleanly") {

@@ -21,12 +21,8 @@ import org.apache.spark.sql.functions.{array, col, lit, sin}
   */
 class IvfRoutePlanSpec extends SparkSpec {
 
-  private def withAutoBroadcastOff[T](body: => T): T = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try body finally spark.conf.set(key, prev)
-  }
+  private def withAutoBroadcastOff[T](body: => T): T =
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
 
   private lazy val emb =
     spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -35,8 +31,9 @@ class IvfRoutePlanSpec extends SparkSpec {
   private lazy val index =
     Similarity.ivfIndex(emb, "vec_id", "embedding", nCentroids = 4)
 
-  /** Deterministic n-row dim-64 query frame (the IvfGuardOverheadProbe
-    * synth recipe) — only its ROW COUNT matters to the route.
+  /** Deterministic n-row dim-64 query frame (the synth recipe of the
+    * SCALE_SF1.md §Round-15 guard measurement) — only its ROW COUNT
+    * matters to the route.
     */
   private def synthQueries(n: Long): DataFrame =
     spark.range(n).select(col("id").as("vec_id"),

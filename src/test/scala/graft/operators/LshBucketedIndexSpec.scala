@@ -55,10 +55,7 @@ class LshBucketedIndexSpec extends SparkSpec {
       .write.parquet(p + "/sigs")
     TextDedup.shingleSets(docs, "doc_id", "text", 5)
       .write.parquet(p + "/sets")
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val ePath = hashExchanges(TextDedup.crossLshPairsFromIndex(
         spark.read.parquet(p + "/sigs"), spark.read.parquet(p + "/sets"),
         batch, "doc_id", "text"))
@@ -67,7 +64,7 @@ class LshBucketedIndexSpec extends SparkSpec {
       assert(eBucketed < ePath,
         s"bucketed banded+sets must elide corpus-side exchanges: " +
           s"path $ePath vs bucketed $eBucketed")
-    } finally spark.conf.set(key, prev)
+    }
     // and the two forms agree on the pairs themselves
     val a = TextDedup.crossLshPairsFromIndex(
       spark.read.parquet(p + "/sigs"), spark.read.parquet(p + "/sets"),

@@ -106,15 +106,10 @@ class ScaleSpec extends SparkSpec {
     // lowered so the split triggers at test scale (the same mechanism
     // fires at 100TB with the defaults); broadcast is disabled because a
     // broadcast join would dodge the skew path entirely.
-    val keys = Seq(
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.autoBroadcastJoinThreshold")
-    val prev = keys.map(k => k -> spark.conf.getOption(k))
-    spark.conf.set(keys(0), "32KB")
-    spark.conf.set(keys(1), "16KB")
-    spark.conf.set(keys(2), "-1")
-    try {
+    withConf(
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val big = spark.range(200000).select(
         when($"id" % 10 =!= 0, 0L).otherwise($"id" % 1000).as("k"),
         $"id".as("payload"))
@@ -126,9 +121,6 @@ class ScaleSpec extends SparkSpec {
       val p = joined.queryExecution.executedPlan.toString
       assert(p.contains("skew=true"),
         s"AQE did not mark the hot-key join skewed:\n$p")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 

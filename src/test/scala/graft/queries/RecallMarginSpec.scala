@@ -40,7 +40,7 @@ class RecallMarginSpec extends SparkSpec {
       Seq("sf0.001", "sf0.01", "sf0.1")),
     ("sim2_ivf_topk", "recall_at_5_ok",
       "in-query IVF nCentroids=16 nProbe=12 (per-query floor 0.5; " +
-        "Sim2Probe sweeps the calibration matrix incl. the sf1 tier)",
+        "calibration matrix incl. the sf1 tier in SCALE_SF1.md)",
       Seq("sf0.001", "sf0.01", "sf0.1")))
 
   for ((name, flag, constants, sfs) <- cases;

@@ -72,8 +72,8 @@ object ScalingAudit {
     }
 
   def main(args: Array[String]): Unit = {
-    val spark = graft.core.Sessions.local(cores = 8,
-      appName = "graft-scaling-audit")
+    val spark = graft.core.Sessions.builder(cores = 8,
+      appName = "graft-scaling-audit").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // 0 args: full catalog, default dirs. 1: filter. 2: (loDir, hiDir).
     // 3: filter + dirs ('-' = no filter).

@@ -1,9 +1,10 @@
 package graft.tools
 
 /** Shared source-scan plumbing for the allowlist sweeps
-  * ([[BroadcastHintSweepSpec]], [[CollectSiteSweepSpec]]): find call
-  * sites of a pattern in `src/main` with comments stripped, so the
-  * sweeps assert over CODE, not scaladoc prose.
+  * ([[BroadcastHintSweepSpec]], [[CollectSiteSweepSpec]],
+  * [[graft.core.SessionsSpec]]): find call sites of a pattern in a
+  * source tree with comments stripped, so the sweeps assert over CODE,
+  * not scaladoc prose.
   *
   * Context absorption, so allowlist markers can name the operand:
   *  - a site line ending in `(` (a wrapped argument) absorbs the NEXT
@@ -16,7 +17,7 @@ package graft.tools
   * literal truncates that line — a site hidden after one would be
   * MISSED, not misreported; no current source shapes do this.
   */
-private[tools] object SourceSites {
+private[graft] object SourceSites {
 
   final case class Site(file: String, line: Int, text: String)
 
