@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.{BigramStats, BpeStats, CosineSimilarity, MarkerCount, NgramCounts, ShingleHashes}
+import org.apache.spark.sql.graftbridge.Bridge
+import graft.functions.{BigramStats, BpeStats, DotProduct, MarkerCount, NgramCounts, ShingleHashes}
 import graft.operators.{ThetaDifferenceEstimate, ThetaIntersectEstimate, ThetaSetEstimate, ThetaSketchAgg, ThetaUnionEstimate}
 
 /** Session extension entry point: makes the library's native functions
@@ -19,9 +20,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectFunction((
       new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        CosineSimilarity.build(exprs)))
+      new ExpressionInfo(classOf[DotProduct].getName, "cosine_sim"),
+      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
+        require(exprs.length == 2,
+          s"cosine_sim expects 2 arguments, got ${exprs.length}")
+        Bridge.analyzerExpression(graft.operators.Similarity.cosine(
+          Bridge.column(exprs(0)), Bridge.column(exprs(1))))
+      }))
     e.injectFunction((
       new FunctionIdentifier("marker_count"),
       new ExpressionInfo(classOf[MarkerCount].getName, "marker_count"),

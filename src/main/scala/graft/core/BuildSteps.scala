@@ -1,9 +1,10 @@
 package graft.core
 
-/** Crash-injection seam for the bucketed index savers (LSH, IVF,
-  * semantic, BM25 postings).
+/** Crash-injection seam for the index publish path
+  * ([[IndexTables.publish]], which every bucketed index saver — LSH,
+  * IVF, semantic, BM25 postings — calls).
   *
-  * Each saver publishes a multi-table index through a fixed sequence of
+  * A multi-table index is published through a fixed sequence of
   * DDL/write steps whose ORDER is the crash-safety argument: the
   * completeness marker (the table every load reads or validates first)
   * is dropped FIRST and written LAST, so a crash between any two steps
@@ -13,21 +14,23 @@ package graft.core
   * order alone, and the round-18 `_meta` role-swap showed the ordering
   * CAN move during a refactor; `IndexCrashPropertySpec` now pins it
   * mechanically by injecting a crash before every step and asserting
-  * the load outcome.
+  * the load outcome, and `IndexTablesSpec` keeps every saver on the
+  * one publish path.
   *
-  * Savers call [[step]] once before each mutating operation (DDL drop
-  * or table write — reads and validations are not steps). Production
-  * cost: one volatile read per call, a handful per build. Tests install
-  * a hook that counts and/or throws at a chosen step; the label names
-  * the saver and operation for failure messages. Hooks are test-only by
-  * contract: nothing in `src/main` ever sets one.
+  * [[IndexTables.publish]] calls [[step]] once before each mutating
+  * operation (DDL drop or table write — reads and validations are not
+  * steps). Production cost: one volatile read per call, a handful per
+  * build. Tests install a hook that counts and/or throws at a chosen
+  * step; the label names the index family and operation for failure
+  * messages. Hooks are test-only by contract: nothing in `src/main`
+  * ever sets one.
   */
 object BuildSteps {
   @volatile private[graft] var hook: String => Unit = _ => ()
 
-  /** Called by a saver immediately BEFORE each mutating step. A hook
-    * that throws simulates a crash with steps `0..n-1` applied and step
-    * `n` (plus everything after) lost.
+  /** Called by the publish path immediately BEFORE each mutating step.
+    * A hook that throws simulates a crash with steps `0..n-1` applied
+    * and step `n` (plus everything after) lost.
     */
   private[graft] def step(label: String): Unit = hook(label)
 }

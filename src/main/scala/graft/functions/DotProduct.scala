@@ -6,31 +6,24 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expres
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftbridge.Bridge
 
 /** Native Catalyst expression for the dot product of two
-  * `array&lt;double&gt;` columns — the pair-time half of the similarity
-  * kernel once norms are precomputed per vector.
-  *
-  * Why it exists (optimization round 20, guide §1.2 "per-task work"):
-  * [[CosineSimilarity]] accumulates dot + BOTH norms in its per-pair
-  * loop, so a block-pair join over n vectors recomputes each vector's
-  * norm n times — two thirds of the kernel FLOPs for work that is
-  * O(n·dim) once. Splitting the kernel lets operators compute
-  * `nrm = sqrt(dot(v,v))` once per vector and pay only the dot per
-  * pair: `cosine = dot(a,b) / (nrm_a · nrm_b)`.
+  * `array&lt;double&gt;` columns — the library's one similarity kernel.
+  * Cosine is `dot(a,b) / (nrm_a · nrm_b)` over it
+  * (`Similarity.cosineFromNorms`), with `nrm = sqrt(dot(v,v))` computed
+  * once per vector, so a block-pair join over n vectors pays only the
+  * dot per pair instead of recomputing each norm n times (optimization
+  * round 20, guide §1.2 "per-task work").
   *
   * Bit-exactness contract: the accumulation is the SAME strict left
-  * fold as [[CosineSimilarity]] (and `Similarity.dot`), `dot(v,v)`
-  * produces exactly the `na` of the fused loop, and
-  * `sqrt(na) * sqrt(nb)` is exactly the fused denominator — so the
-  * recomposed cosine is bit-identical to the fused expression
-  * (DotProductSpec pins this against CosineSimilarity on random and
-  * adversarial vectors). Null semantics likewise compose identically:
-  * length mismatch or any touched null element → null here, which
-  * nulls the recomposed cosine exactly where the fused kernel does,
-  * and a zero norm is the caller's nullif-on-zero-denominator.
+  * fold as the declarative `Similarity.dot`, so `dot(a,b)`, the norms
+  * and the recomposed cosine are bit-identical to
+  * `Similarity.dot(a,b) / (l2Norm(a) · l2Norm(b))` (DotProductSpec pins
+  * this on random and adversarial vectors). Null semantics: length
+  * mismatch or any touched null element → null here, which nulls the
+  * recomposed cosine, and a zero norm is the caller's
+  * null-on-zero-denominator.
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -46,7 +39,8 @@ case class DotProduct(left: Expression, right: Expression)
     }
 
   /** Length-mismatched inputs and null elements yield null even for
-    * non-null children (mirrors [[CosineSimilarity]]).
+    * non-null children (an undefined similarity must never leak out as
+    * a plausible-looking number).
     */
   override def nullable: Boolean = true
 
@@ -60,9 +54,10 @@ case class DotProduct(left: Expression, right: Expression)
 
   /** Can this side's elements be null AT ALL? Read from the child's
     * resolved type: the optimizer's SimplifyCasts strips the
-    * array&lt;double,false&gt;→array&lt;double,true&gt; upcast [[DotProduct.build]]
-    * adds, so a provably null-free source reaches codegen with
-    * `containsNull = false` and its null scan is elided entirely.
+    * array&lt;double,false&gt;→array&lt;double,true&gt; upcast
+    * [[DotProduct.dotProduct]] adds, so a provably null-free source
+    * reaches codegen with `containsNull = false` and its null scan is
+    * elided entirely.
     */
   private def mayHaveNullElems(e: Expression): Boolean = e.dataType match {
     case ArrayType(_, cn) => cn
@@ -143,22 +138,13 @@ case class DotProduct(left: Expression, right: Expression)
 
 object DotProduct {
 
-  /** Column surface: `dot_product(a, b)` over numeric-array columns. */
-  def dotProduct(a: Column, b: Column): Column =
-    Bridge.column(build(Seq(Bridge.expression(a), Bridge.expression(b))))
-
-  /** Builder with a proper arity error; same unconditional upcast story
-    * as [[CosineSimilarity.build]].
+  /** Column surface: `dot_product(a, b)` over numeric-array columns.
+    * Both inputs are cast to array&lt;double&gt; unconditionally: a no-op
+    * for array&lt;double&gt;, an exact upcast for float/int arrays, and a
+    * clear analysis error for non-array inputs.
     */
-  private[graft] def build(exprs: Seq[Expression]): DotProduct = {
-    require(exprs.length == 2,
-      s"dot_product expects 2 arguments, got ${exprs.length}")
-    DotProduct(Cast(exprs(0), ArrayType(DoubleType)),
-      Cast(exprs(1), ArrayType(DoubleType)))
-  }
-
-  /** SQL surface registration (e.g. `SELECT dot_product(v1, v2) FROM …`). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", build, "built-in")
+  def dotProduct(a: Column, b: Column): Column =
+    Bridge.column(DotProduct(
+      Cast(Bridge.expression(a), ArrayType(DoubleType)),
+      Cast(Bridge.expression(b), ArrayType(DoubleType))))
 }

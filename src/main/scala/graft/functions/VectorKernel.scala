@@ -24,7 +24,7 @@ import org.apache.spark.unsafe.Platform
   * Bit-exactness: [[dot]] accumulates the SAME strict ascending-index
   * left fold as the per-element loop it replaces (no reassociation, no
   * pairwise splitting), so results are bit-identical on every input —
-  * DotProductSpec pins this against the fused [[CosineSimilarity]]
+  * DotProductSpec pins this against the declarative `Similarity.dot`
   * reference. The null-scan-then-multiply split changes no observable
   * value either: any null element nulls the result in both shapes.
   *

@@ -262,36 +262,23 @@ object Retrieval {
     * belt-and-braces invariant: a lost-update undercount trips it
     * loudly instead of publishing a meta that skews every idf.
     *
-    * Crash-window discipline (the [[TextDedup.saveLshIndexBucketed]]
-    * rule, marker role MOVED in round 18): deriving `_doclen` from the
-    * written `_postings` forces postings to be written first, so
-    * `_meta` — the table every load reads and validates FIRST — is now
-    * the completeness signal: dropped FIRST, written LAST. Every crash
-    * window leaves the prefix without a `_meta` (all three drops happen
-    * before any write), so a partial build fails the load loudly as a
-    * missing/corrupt meta, never as a mixed-build index.
+    * Crash-window discipline: `_doclen` derives from the written
+    * `_postings`, so postings are written first and `_meta` — the table
+    * every load reads FIRST — is the completeness marker, last in
+    * [[graft.core.IndexTables.publish]]'s order: a partial build fails
+    * the load loudly as a missing meta, never as a mixed build.
     */
   def savePostingsIndexBucketed(docs: DataFrame, docId: String,
                                 textCol: String, tablePrefix: String,
                                 nBuckets: Int): Unit = {
-    require(nBuckets >= 1, s"nBuckets must be positive: $nBuckets")
-    graft.core.TableStore.requireTablePrefix(tablePrefix)
     val sp = docs.sparkSession
     import sp.implicits._
-    // ordering pinned by IndexCrashPropertySpec via the BuildSteps seam
-    graft.core.BuildSteps.step("bm25:drop_meta")
-    sp.sql(s"DROP TABLE IF EXISTS ${tablePrefix}_meta")
-    graft.core.BuildSteps.step("bm25:drop_doclen")
-    sp.sql(s"DROP TABLE IF EXISTS ${tablePrefix}_doclen")
-    graft.core.BuildSteps.step("bm25:drop_postings")
-    sp.sql(s"DROP TABLE IF EXISTS ${tablePrefix}_postings")
     // the ONE corpus tokenize pass — and the ONE corpus read: the two
     // observe nodes accumulate the corpus totals on the rows flowing
-    // through this very write (see scaladoc: single-action meta)
-    graft.core.BuildSteps.step("bm25:write_postings")
+    // through the postings write (see scaladoc: single-action meta)
     val corpusObs = org.apache.spark.sql.Observation()
     val tokenObs = org.apache.spark.sql.Observation()
-    docs
+    val postings = docs
       .observe(corpusObs, count(lit(1)).as("n_docs"))
       .select(col(docId).as("doc_id"),
         explode(graft.functions.NgramCounts.ngramCounts(col(textCol), 1))
@@ -299,38 +286,36 @@ object Retrieval {
       .select(col("doc_id"), col("_tc.gram").as("term"),
         col("_tc.cnt").cast("long").as("tf"))
       .observe(tokenObs, coalesce(sum(col("tf")), lit(0L)).as("sum_dl"))
-      .write.format("parquet")
-      .bucketBy(nBuckets, "term").sortBy("term")
-      .saveAsTable(s"${tablePrefix}_postings")
-    // .get blocks until the write above has committed its metrics
-    val nDocs = corpusObs.get.apply("n_docs").asInstanceOf[Long]
-    val sumDl = tokenObs.get.apply("sum_dl").asInstanceOf[Long]
-    // dl = Σ tf per doc, derived from the WRITTEN postings — a narrow
-    // (doc_id, tf) aggregation (the one exchange this build pays beyond
-    // the bucketed writes), no second pass over the corpus text
-    graft.core.BuildSteps.step("bm25:write_doclen")
-    sp.table(s"${tablePrefix}_postings")
-      .groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-      .write.format("parquet")
-      .bucketBy(nBuckets, "doc_id").sortBy("doc_id")
-      .saveAsTable(s"${tablePrefix}_doclen")
-    // belt-and-braces invariant over the accumulator path (footer-
-    // metadata-only on both sides): every tokenized doc is a doc, so
-    // an n_docs below the written doclen count means the observed
-    // metric lost updates — refuse to publish a meta that would skew
-    // every idf. (An empty corpus writes (0, 0) and the LOAD refuses
-    // it with the corrupt-meta message.)
-    val nTokenized = sp.table(s"${tablePrefix}_doclen").count()
-    require(nDocs >= nTokenized,
-      s"bm25 index build: observed corpus count is inconsistent with " +
-        s"the written snapshot (n_docs=$nDocs < $nTokenized tokenized " +
-        "docs) — the observed metric lost updates; rebuild")
-    graft.core.BuildSteps.step("bm25:write_meta")
-    Seq((nDocs, sumDl, TokenizerTag))
-      .toDF("n_docs", "sum_dl", "tokenizer")
-      .coalesce(1)
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${tablePrefix}_meta")
+    // .get blocks until the postings write has committed its metrics
+    def nDocs = corpusObs.get.apply("n_docs").asInstanceOf[Long]
+    graft.core.IndexTables.publish(sp, tablePrefix, "bm25")(
+      "postings" -> graft.core.IndexTables.bucketed(postings, nBuckets,
+        "term"),
+      // dl = Σ tf per doc, derived from the WRITTEN postings — a narrow
+      // (doc_id, tf) aggregation (the one exchange this build pays
+      // beyond the bucketed writes), no second pass over the corpus text
+      "doclen" -> { name =>
+        graft.core.IndexTables.bucketed(
+          sp.table(s"${tablePrefix}_postings")
+            .groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")),
+          nBuckets, "doc_id")(name)
+        // belt-and-braces invariant over the accumulator path (footer-
+        // metadata-only on both sides): every tokenized doc is a doc, so
+        // an n_docs below the written doclen count means the observed
+        // metric lost updates — refuse to publish a meta that would
+        // skew every idf. (An empty corpus writes (0, 0) and the LOAD
+        // refuses it with the corrupt-meta message.)
+        val nTokenized = sp.table(name).count()
+        require(nDocs >= nTokenized,
+          s"bm25 index build: observed corpus count is inconsistent " +
+            s"with the written snapshot (n_docs=$nDocs < $nTokenized " +
+            "tokenized docs) — the observed metric lost updates; rebuild")
+      },
+      "meta" -> { name =>
+        graft.core.IndexTables.single(Seq((nDocs,
+          tokenObs.get.apply("sum_dl").asInstanceOf[Long], TokenizerTag))
+          .toDF("n_docs", "sum_dl", "tokenizer"))(name)
+      })
   }
 
   /** [[bm25TopK]] against a [[savePostingsIndexBucketed]] index — the
@@ -349,11 +334,9 @@ object Retrieval {
                         k1: Double = 1.2, b: Double = 0.75,
                         broadcastQueryTerms: Option[Boolean] = None)
       : DataFrame = {
-    graft.core.TableStore.requireTablePrefix(tablePrefix)
-    val meta = spark.table(s"${tablePrefix}_meta")
-    require(meta.columns.toSet == Set("n_docs", "sum_dl", "tokenizer"),
-      s"bm25 meta table needs (n_docs, sum_dl, tokenizer), got " +
-        meta.columns.mkString(","))
+    def read(t: String, cols: String*) =
+      graft.core.IndexTables.read(spark, tablePrefix, "bm25", t, cols: _*)
+    val meta = read("meta", "n_docs", "sum_dl", "tokenizer")
     val m = meta.collect()
     require(m.length == 1,
       s"bm25 meta table must hold one row, got ${m.length}")
@@ -368,14 +351,8 @@ object Retrieval {
     require(tok == TokenizerTag,
       s"bm25 index tokenizer '$tok' does not match this build's " +
         s"'$TokenizerTag' — rebuild the index rather than mix schemes")
-    val postings = spark.table(s"${tablePrefix}_postings")
-    val docLen = spark.table(s"${tablePrefix}_doclen")
-    require(postings.columns.toSet == Set("doc_id", "term", "tf"),
-      s"bm25 postings table needs (doc_id, term, tf), got " +
-        postings.columns.mkString(","))
-    require(docLen.columns.toSet == Set("doc_id", "dl"),
-      s"bm25 doclen table needs (doc_id, dl), got " +
-        docLen.columns.mkString(","))
+    val postings = read("postings", "doc_id", "term", "tf")
+    val docLen = read("doclen", "doc_id", "dl")
     val dfreq = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
     import spark.implicits._
     val totals = Seq((nDocs, sumDl)).toDF("n_docs", "sum_dl")

@@ -173,81 +173,43 @@ object SemanticDedup {
   // together.
   // ---------------------------------------------------------------------
 
-  /** Build and persist the semantic index under `path` as two parquet
-    * tables: `centroids` (centroid_id, centroid) and `members`
+  /** Build and persist the semantic index as a pair of MANAGED tables,
+    * `<prefix>_centroids` (centroid_id, centroid) and `<prefix>_members`
     * (vid, v, nrm, cluster — the corpus's `assignProbes`-way overlapping
-    * memberships). Layout mirrors [[Similarity.saveIvfIndex]]; the
-    * members table is written LAST, so its `_SUCCESS` marker implies a
-    * complete index.
+    * memberships), with the members side BUCKETED BY the cluster id
+    * (the [[Similarity.saveIvfIndexBucketed]] layout, applied where it
+    * pays most): an ingest loop joins the stored memberships on
+    * `cluster` once PER BATCH ([[incrementalPairsFromIndex]] — feed it
+    * `spark.table(s"${prefix}_centroids")` / `_members`), and on plain
+    * parquet every one of those joins re-shuffles the full membership
+    * table — corpus × assignProbes rows CARRYING VECTORS — to co-locate
+    * with a batch that is orders of magnitude smaller. The bucketed scan
+    * comes back hash-clustered on `cluster`, the corpus-side exchange
+    * disappears from every increment, and only the batch memberships
+    * shuffle (pinned in `IvfBucketedIndexSpec`). The index is computed
+    * before anything is dropped, then published through
+    * [[graft.core.IndexTables.publish]]: `_members` is the completeness
+    * marker.
     */
-  def saveSemanticIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                        nClusters: Int, assignProbes: Int, path: String,
-                        seed: Long = 42L): Unit = {
+  def saveSemanticIndexBucketed(corpus: DataFrame, idCol: String,
+                                vecCol: String, nClusters: Int,
+                                assignProbes: Int, tablePrefix: String,
+                                nBuckets: Int, seed: Long = 42L): Unit = {
+    // validated here because the k-means build below runs before publish
     require(assignProbes >= 1, s"assignProbes must be >= 1: $assignProbes")
+    require(nBuckets >= 1, s"nBuckets must be positive: $nBuckets")
+    graft.core.TableStore.requireTablePrefix(tablePrefix)
     // nClusters <= 0: C ≈ √corpus (the semanticDupPairs auto-size rule)
     val c = if (nClusters > 0) nClusters
             else Similarity.ivfSizing(corpus.count())
     val (index, members) = Similarity.ivfIndexAndMembers(corpus, idCol,
       vecCol, c, probes = assignProbes, seed = seed)
     val sp = corpus.sparkSession
-    import sp.implicits._
-    // REBUILD ordering: the completeness marker must be invalidated FIRST
-    // — overwriting centroids while a PRIOR build's members/_SUCCESS
-    // survives would let a crash-between-writes leave a marker-valid
-    // index whose two tables come from different builds.
-    val membersPath = new org.apache.hadoop.fs.Path(path + "/members")
-    val fs = membersPath.getFileSystem(sp.sparkContext.hadoopConfiguration)
-    if (fs.exists(membersPath)) fs.delete(membersPath, true)
-    index.centroids.toSeq.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }
-      .toDF("centroid_id", "centroid")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(path + "/centroids")
-    members.write.mode("overwrite").parquet(path + "/members")
-  }
-
-  /** [[saveSemanticIndex]] as a pair of MANAGED tables with the members
-    * side BUCKETED BY the cluster id (the
-    * [[Similarity.saveIvfIndexBucketed]] layout, applied where it pays
-    * most): an ingest loop joins the stored memberships on `cluster`
-    * once PER BATCH ([[incrementalPairsFromIndex]] — feed it
-    * `spark.table(s"${prefix}_centroids")` / `_members`), and on plain
-    * parquet every one of those joins re-shuffles the full membership
-    * table — corpus × assignProbes rows CARRYING VECTORS — to
-    * co-locate with a batch that is orders of magnitude smaller. The
-    * bucketed scan comes back hash-clustered on `cluster`, the
-    * corpus-side exchange disappears from every increment, and only
-    * the batch memberships shuffle (pinned in `IvfBucketedIndexSpec`).
-    * Same crash-window discipline: the members table (written last,
-    * the completeness signal) is dropped before centroids overwrite.
-    */
-  def saveSemanticIndexBucketed(corpus: DataFrame, idCol: String,
-                                vecCol: String, nClusters: Int,
-                                assignProbes: Int, tablePrefix: String,
-                                nBuckets: Int, seed: Long = 42L): Unit = {
-    require(assignProbes >= 1, s"assignProbes must be >= 1: $assignProbes")
-    require(nBuckets >= 1, s"nBuckets must be positive: $nBuckets")
-    graft.core.TableStore.requireTablePrefix(tablePrefix)
-    val c = if (nClusters > 0) nClusters
-            else Similarity.ivfSizing(corpus.count())
-    val (index, members) = Similarity.ivfIndexAndMembers(corpus, idCol,
-      vecCol, c, probes = assignProbes, seed = seed)
-    val sp = corpus.sparkSession
-    import sp.implicits._
-    // ordering pinned by IndexCrashPropertySpec via the BuildSteps seam
-    graft.core.BuildSteps.step("sem:drop_members")
-    sp.sql(s"DROP TABLE IF EXISTS ${tablePrefix}_members")
-    graft.core.BuildSteps.step("sem:write_centroids")
-    index.centroids.toSeq.zipWithIndex
-      .map { case (cc, i) => (i, cc.toSeq) }
-      .toDF("centroid_id", "centroid")
-      .coalesce(1)
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${tablePrefix}_centroids")
-    graft.core.BuildSteps.step("sem:write_members")
-    members.write.format("parquet")
-      .bucketBy(nBuckets, "cluster").sortBy("cluster")
-      .saveAsTable(s"${tablePrefix}_members")
+    graft.core.IndexTables.publish(sp, tablePrefix, "sem")(
+      "centroids" -> graft.core.IndexTables.single(
+        Similarity.centroidFrame(sp, index.centroids)),
+      "members" -> graft.core.IndexTables.bucketed(members, nBuckets,
+        "cluster"))
   }
 
   /** [[incrementalPairs]] over the persisted tables — the increment's

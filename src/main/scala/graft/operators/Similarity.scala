@@ -30,21 +30,24 @@ object Similarity {
   def toDouble(v: Column): Column = v.cast("array<double>")
 
   /** Σ aᵢ·bᵢ as a strict left fold (deterministic order). Declarative
-    * reference form; hot paths use the native `CosineSimilarity` expression
-    * (Spark's higher-order array functions evaluate interpreted per element
-    * — an order of magnitude slower over millions of pairs).
+    * reference form, which `DotProductSpec` pins the native kernel
+    * against bit for bit; hot paths use [[dotNative]] (Spark's
+    * higher-order array functions evaluate interpreted per element — an
+    * order of magnitude slower over millions of pairs).
     */
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
   def l2Norm(v: Column): Column = sqrt(dot(v, v))
 
-  /** Cosine via the native codegen'd Catalyst expression
-    * (`graft.functions.CosineSimilarity`) — same strict left-fold math as
-    * `dot`/`l2Norm`, fused into whole-stage codegen with no UDF boundary.
+  /** Cosine of two numeric-array columns: [[cosineFromNorms]] over the
+    * native kernel, with both norms computed in place. The `cosine_sim`
+    * SQL function builds this same expression.
     */
-  def cosine(a: Column, b: Column): Column =
-    graft.functions.CosineSimilarity.cosineSim(a, b)
+  def cosine(a: Column, b: Column): Column = {
+    val (x, y) = (toDouble(a), toDouble(b))
+    cosineFromNorms(x, y, l2NormNative(x), l2NormNative(y))
+  }
 
   /** Native codegen'd dot product (`graft.functions.DotProduct`) — the
     * pair-time half of the cosine kernel once norms are precomputed.
@@ -52,24 +55,24 @@ object Similarity {
   def dotNative(a: Column, b: Column): Column =
     graft.functions.DotProduct.dotProduct(a, b)
 
-  /** ‖v‖ via the native kernel: `sqrt(dot(v,v))` accumulates exactly the
-    * fused kernel's `na`, so norms precomputed here recompose to
-    * bit-identical cosines. (The declarative [[l2Norm]] computes the same
-    * fold interpreted per element — kept as the reference form.)
+  /** ‖v‖ via the native kernel, `sqrt(dot(v,v))` — computed once per
+    * vector and fed to [[cosineFromNorms]]. (The declarative [[l2Norm]]
+    * computes the same fold interpreted per element — kept as the
+    * reference form.)
     */
   def l2NormNative(v: Column): Column = sqrt(dotNative(v, v))
 
   /** Cosine recomposed from per-vector norms (optimization round 20,
-    * guide §1.2 "per-task work"): the fused [[cosine]] loop accumulates
-    * dot + BOTH norms per pair, so a pair join over n vectors recomputes
-    * each norm n times — two thirds of the kernel FLOPs. With
-    * `na`/`nb` = [[l2NormNative]] computed once per vector, this is
-    * bit-identical to [[cosine]]: same left-fold dot, and
-    * `na · nb` IS the fused `sqrt(Σa²) · sqrt(Σb²)` denominator
-    * (DotProductSpec pins equality on random + adversarial vectors).
-    * Null composition matches too: length mismatch / null element null
-    * the dot (and the norms), and the zero-denominator guard below
-    * reproduces the fused kernel's null-on-zero-norm.
+    * guide §1.2 "per-task work"): a pair join over n vectors would
+    * recompute each norm n times if the pair kernel accumulated them —
+    * two thirds of the kernel FLOPs. With `na`/`nb` = [[l2NormNative]]
+    * computed once per vector, only the dot is paid per pair, and the
+    * value is bit-identical to the declarative
+    * `dot(a,b) / (l2Norm(a) · l2Norm(b))` (same left-fold dot;
+    * DotProductSpec pins equality on random + adversarial vectors).
+    * Null semantics: a length mismatch or a null element nulls the dot
+    * (and the norms), and the zero-denominator guard below returns null
+    * on a zero norm without ever dividing by zero (so ANSI cannot raise).
     */
   def cosineFromNorms(a: Column, b: Column, na: Column, nb: Column): Column = {
     val denom = na * nb
@@ -167,7 +170,8 @@ object Similarity {
     * doing B× the work of the first). Nothing is collected to the driver —
     * shuffle volume is ~n·(B+1) (id, vector) rows, against a driver-memory
     * ceiling in the old collect+broadcast form. Per-pair math is the
-    * codegen'd native `CosineSimilarity` loop.
+    * codegen'd native dot over norms precomputed per vector
+    * ([[cosineFromNorms]]).
     *
     * This is the exact-output variant (every qualifying pair, no
     * probabilistic recall) — the VERIFICATION COMPANION, not the default:
@@ -499,7 +503,7 @@ object Similarity {
     // hour-class — a caller needing BOTH that C and that sample quality
     // should cap C and raise nProbe instead (recall is governed by
     // nProbe), or accept the one-time build cost against a stored index
-    // ([[saveIvfIndex]]), where it amortizes across every later query.
+    // ([[saveIvfIndexBucketed]]), where it amortizes across every later query.
     val best = new Array[Int](points.length)
     for (_ <- 0 until iters) {
       val cents = centroids
@@ -884,85 +888,58 @@ object Similarity {
   // one-time cost; the increments are ~nProbe/nCentroids scans.
   // ---------------------------------------------------------------------
 
-  /** Write an index as two plain parquet tables under `path`:
-    * `centroids` (centroid_id, centroid) — nCentroids tiny rows — and
-    * `vectors` (vid, v, nrm, centroid) — the assigned corpus.
-    */
-  def saveIvfIndex(index: IvfIndex, path: String): Unit = {
-    val sp = index.vectors.sparkSession
+  /** The (centroid_id, centroid) table form of a centroid matrix. */
+  private[graft] def centroidFrame(sp: org.apache.spark.sql.SparkSession,
+                                   centroids: Array[Array[Double]]): DataFrame = {
     import sp.implicits._
-    // REBUILD ordering: invalidate the completeness marker (vectors/,
-    // written last) BEFORE overwriting centroids — else a crash between
-    // the two writes leaves a prior build's vectors/_SUCCESS validating
-    // an index whose tables come from different builds.
-    val vectorsPath = new org.apache.hadoop.fs.Path(path + "/vectors")
-    val fs = vectorsPath.getFileSystem(sp.sparkContext.hadoopConfiguration)
-    if (fs.exists(vectorsPath)) fs.delete(vectorsPath, true)
-    index.centroids.toSeq.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }
+    centroids.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
       .toDF("centroid_id", "centroid")
-      .coalesce(1) // nCentroids rows — one file, not one per partition
-      .write.mode("overwrite").parquet(path + "/centroids")
-    index.vectors.write.mode("overwrite").parquet(path + "/vectors")
   }
 
-  /** Persist an index as a pair of MANAGED tables with the vectors side
-    * BUCKETED BY the centroid id — the storage-layout complement of the
-    * round-16 probe-join route. Every repeated consumer of a stored
-    * index joins the corpus on `centroid` (the equi-join route of
-    * [[ivfScored]] past the broadcast budget, every [[knnGraphApprox]]
-    * build), and on a plain parquet index each of those joins SHUFFLES
-    * THE CORPUS on that key — at 10⁹ rows × dim 64 that is a ~0.5 TB
-    * exchange per run, paid every run, for a table whose join key never
-    * changes between rebuilds. Bucketing the stored table by `centroid`
-    * moves that exchange into the ONE-TIME build write: scans come back
-    * hash-clustered on the join key, Spark elides the corpus-side
-    * exchange, and only the (narrow, per-run) query/probe side
-    * shuffles — the same "pay the layout once, ride it every run"
-    * economics as the stored LSH index and the z-order layouts.
-    * `nBuckets` should be sized like shuffle partitions at the target
-    * scale (enough for parallelism, few enough that a bucket's cells
-    * fit a task); it need not equal the centroid count.
-    *
-    * Same crash-window discipline as [[saveIvfIndex]]: the vectors
-    * table (written last, the completeness signal) is DROPPED before
-    * the centroid table is overwritten, so no interleaving of a crashed
-    * rebuild leaves a mixed-build pair standing.
+  /** Persist an index as a pair of MANAGED tables, `<prefix>_centroids`
+    * (centroid_id, centroid) and `<prefix>_vectors` (vid, v, nrm,
+    * centroid), with the vectors side BUCKETED BY the centroid id — the
+    * storage-layout complement of the round-16 probe-join route. Every
+    * repeated consumer of a stored index joins the corpus on `centroid`
+    * (the equi-join route of [[ivfScored]] past the broadcast budget,
+    * every [[knnGraphApprox]] build), and on a plain parquet index each
+    * of those joins SHUFFLES THE CORPUS on that key — at 10⁹ rows × dim
+    * 64 that is a ~0.5 TB exchange per run, paid every run, for a table
+    * whose join key never changes between rebuilds. Bucketing the stored
+    * table by `centroid` moves that exchange into the ONE-TIME build
+    * write: scans come back hash-clustered on the join key, Spark elides
+    * the corpus-side exchange, and only the (narrow, per-run)
+    * query/probe side shuffles — the same "pay the layout once, ride it
+    * every run" economics as the stored LSH index and the z-order
+    * layouts. `nBuckets` should be sized like shuffle partitions at the
+    * target scale (enough for parallelism, few enough that a bucket's
+    * cells fit a task); it need not equal the centroid count. Published
+    * through [[graft.core.IndexTables.publish]]: `_vectors` is the
+    * completeness marker.
     */
   def saveIvfIndexBucketed(index: IvfIndex, tablePrefix: String,
                            nBuckets: Int): Unit = {
-    require(nBuckets >= 1, s"nBuckets must be positive: $nBuckets")
-    graft.core.TableStore.requireTablePrefix(tablePrefix)
     val sp = index.vectors.sparkSession
-    import sp.implicits._
-    // ordering pinned by IndexCrashPropertySpec via the BuildSteps seam
-    graft.core.BuildSteps.step("ivf:drop_vectors")
-    sp.sql(s"DROP TABLE IF EXISTS ${tablePrefix}_vectors")
-    graft.core.BuildSteps.step("ivf:write_centroids")
-    index.centroids.toSeq.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }
-      .toDF("centroid_id", "centroid")
-      .coalesce(1) // nCentroids rows — one file
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${tablePrefix}_centroids")
-    graft.core.BuildSteps.step("ivf:write_vectors")
-    index.vectors
-      .write.format("parquet")
-      .bucketBy(nBuckets, "centroid").sortBy("centroid")
-      .saveAsTable(s"${tablePrefix}_vectors")
+    graft.core.IndexTables.publish(sp, tablePrefix, "ivf")(
+      "centroids" -> graft.core.IndexTables.single(
+        centroidFrame(sp, index.centroids)),
+      "vectors" -> graft.core.IndexTables.bucketed(index.vectors, nBuckets,
+        "centroid"))
   }
 
   /** Rebuild an [[IvfIndex]] from the [[saveIvfIndexBucketed]] tables.
-    * Identical validation to [[loadIvfIndex]]; the vectors scan carries
-    * the bucket spec, so downstream centroid-key joins skip the
-    * corpus-side exchange (pinned in `IvfBucketedIndexSpec`).
+    * Identical validation to [[loadIvfIndex]] after the shared table
+    * checks; the vectors scan carries the bucket spec, so downstream
+    * centroid-key joins skip the corpus-side exchange (pinned in
+    * `IvfBucketedIndexSpec`).
     */
   def loadIvfIndexFromTables(spark: org.apache.spark.sql.SparkSession,
-                             tablePrefix: String): IvfIndex = {
-    graft.core.TableStore.requireTablePrefix(tablePrefix)
-    loadIvfIndex(spark.table(s"${tablePrefix}_centroids"),
-      spark.table(s"${tablePrefix}_vectors"))
-  }
+                             tablePrefix: String): IvfIndex =
+    loadIvfIndex(
+      graft.core.IndexTables.read(spark, tablePrefix, "ivf", "centroids",
+        "centroid_id", "centroid"),
+      graft.core.IndexTables.read(spark, tablePrefix, "ivf", "vectors",
+        "vid", "v", "nrm", "centroid"))
 
   /** Rebuild an [[IvfIndex]] from its persisted tables. The only driver
     * materialization is the centroid table (nCentroids rows — the same
@@ -1117,7 +1094,7 @@ case object NegativesBruteForce extends NegativeMining
   * pair mining is what it usually is — a one-shot assembly job per corpus
   * snapshot, where the single build amortizes across every anchor of the
   * job and persisting it would only add I/O. A mining loop that re-runs
-  * against a stable corpus should build once ([[Similarity.saveIvfIndex]])
+  * against a stable corpus should build once ([[Similarity.saveIvfIndexBucketed]])
   * and mine with [[NegativesFromIndex]], which cannot train by
   * construction.
   *
@@ -1129,7 +1106,7 @@ final case class NegativesIvf(nCentroids: Int, nProbe: Int,
                               maxPairFactor: Option[Double] = None)
     extends NegativeMining
 
-/** Probe a PERSISTED IVF index (the [[Similarity.saveIvfIndex]] layout):
+/** Probe a PERSISTED IVF index (the [[Similarity.saveIvfIndexBucketed]] tables):
   * the repeated-mining form of [[NegativesIvf]] — reads the stored
   * centroid matrix and assignments, trains nothing; its `maxPairFactor`
   * guard reads the stored `centroid` column at pruned-scan cost.

@@ -710,43 +710,24 @@ object TextDedup {
     *    this is the WIDE table (full shingle sets) whose per-increment
     *    shuffle hurts most.
     *
-    * Crash-window discipline: `_sets` is written LAST (the completeness
-    * signal) and dropped FIRST on rebuild.
+    * Published through [[graft.core.IndexTables.publish]]: `_sets` is
+    * the completeness marker.
     */
   def saveLshIndexBucketed(corpus: DataFrame, idCol: String,
                            textCol: String, tablePrefix: String,
                            nBuckets: Int, n: Int = 5, numHashes: Int = 32,
                            bands: Int = 16): Unit = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    require(nBuckets >= 1, s"nBuckets must be positive: $nBuckets")
-    graft.core.TableStore.requireTablePrefix(tablePrefix)
     val sp = corpus.sparkSession
     import sp.implicits._
-    // _sets is the completeness signal: drop it FIRST, then the middle
-    // table (bucketed saveAsTable cannot overwrite in place — a stale
-    // _banded would fail the rebuild's create); any crash in between
-    // leaves a pair without its marker table, never a mixed-build index.
-    // The ordering is pinned mechanically by IndexCrashPropertySpec via
-    // the BuildSteps seam.
-    graft.core.BuildSteps.step("lsh:drop_sets")
-    sp.sql(s"DROP TABLE IF EXISTS ${tablePrefix}_sets")
-    graft.core.BuildSteps.step("lsh:drop_banded")
-    sp.sql(s"DROP TABLE IF EXISTS ${tablePrefix}_banded")
-    graft.core.BuildSteps.step("lsh:write_meta")
-    Seq((n, numHashes, bands)).toDF("n", "num_hashes", "bands")
-      .coalesce(1)
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${tablePrefix}_meta")
-    graft.core.BuildSteps.step("lsh:write_banded")
-    minHashBandedKeys(corpus, idCol, textCol, n, numHashes, bands)
-      .write.format("parquet")
-      .bucketBy(nBuckets, "bh").sortBy("bh")
-      .saveAsTable(s"${tablePrefix}_banded")
-    graft.core.BuildSteps.step("lsh:write_sets")
-    shingleSets(corpus, idCol, textCol, n)
-      .write.format("parquet")
-      .bucketBy(nBuckets, "doc").sortBy("doc")
-      .saveAsTable(s"${tablePrefix}_sets")
+    graft.core.IndexTables.publish(sp, tablePrefix, "lsh")(
+      "meta" -> graft.core.IndexTables.single(
+        Seq((n, numHashes, bands)).toDF("n", "num_hashes", "bands")),
+      "banded" -> graft.core.IndexTables.bucketed(
+        minHashBandedKeys(corpus, idCol, textCol, n, numHashes, bands),
+        nBuckets, "bh"),
+      "sets" -> graft.core.IndexTables.bucketed(
+        shingleSets(corpus, idCol, textCol, n), nBuckets, "doc"))
   }
 
   /** [[crossMinHashLshPairs]] against a [[saveLshIndexBucketed]] index:
@@ -763,11 +744,9 @@ object TextDedup {
                                    tablePrefix: String, batch: DataFrame,
                                    idCol: String, textCol: String,
                                    minJaccard: Double = 0.5): DataFrame = {
-    graft.core.TableStore.requireTablePrefix(tablePrefix)
-    val meta = spark.table(s"${tablePrefix}_meta")
-    require(meta.columns.toSet == Set("n", "num_hashes", "bands"),
-      s"lsh meta table needs (n, num_hashes, bands), got " +
-        meta.columns.mkString(","))
+    def read(t: String, cols: String*) =
+      graft.core.IndexTables.read(spark, tablePrefix, "lsh", t, cols: _*)
+    val meta = read("meta", "n", "num_hashes", "bands")
     val m = meta.collect()
     require(m.length == 1, s"lsh meta table must hold one row, got ${m.length}")
     // by NAME, not position: the column require above checks a SET, so a
@@ -783,13 +762,8 @@ object TextDedup {
     require(n >= 1 && numHashes >= 1 && bands >= 1 && numHashes % bands == 0,
       s"corrupt lsh meta: n=$n, num_hashes=$numHashes, bands=$bands " +
         "(need all >= 1 and bands | num_hashes)")
-    val cb = spark.table(s"${tablePrefix}_banded")
-    val corpusSets = spark.table(s"${tablePrefix}_sets")
-    require(cb.columns.toSet == Set("doc", "band", "bh"),
-      s"lsh banded table needs (doc, band, bh), got ${cb.columns.mkString(",")}")
-    require(corpusSets.columns.toSet == Set("doc", "sh_set"),
-      s"lsh sets table needs (doc, sh_set), got " +
-        corpusSets.columns.mkString(","))
+    val cb = read("banded", "doc", "band", "bh")
+    val corpusSets = read("sets", "doc", "sh_set")
     val bb = bandedKeys(
       minHashSignatures(batch, idCol, textCol, n, numHashes),
       bands, numHashes / bands)

@@ -349,18 +349,17 @@ object DataPipelineQueries {
       val qs = emb.filter(col("vec_id") >= 10 && col("vec_id") < 20)
       // index build = setup, compute-if-absent (the dc2/mh1 scheme):
       // repeated runs time query-from-persisted-index, the operator's
-      // actual cost. saveIvfIndex writes vectors/ after centroids/, so
-      // the vectors/ marker implies a complete index.
-      val base = QueryUtil.scopedTmp(s, d, "sim4-index")
-      val done = new org.apache.hadoop.fs.Path(base + "/vectors/_SUCCESS")
+      // actual cost. The vectors table is the publish's completeness
+      // marker, so its existence implies a complete index.
+      val prefix = QueryUtil.scopedTable(s, d, "sim4")
       QueryUtil.stateBuildGate.synchronized {
-        if (!done.getFileSystem(s.sparkContext.hadoopConfiguration).exists(done))
-          Similarity.saveIvfIndex(
+        if (!s.catalog.tableExists(prefix + "_vectors"))
+          Similarity.saveIvfIndexBucketed(
             Similarity.ivfIndex(emb, "vec_id", "embedding", nCentroids = 16),
-            base)
+            prefix, s.conf.get("spark.sql.shuffle.partitions").toInt)
       }
       val ivf = Similarity.ivfTopKFromIndex(
-        QueryUtil.stateTable(s, base + "/centroids"), QueryUtil.stateTable(s, base + "/vectors"),
+        s.table(prefix + "_centroids"), s.table(prefix + "_vectors"),
         qs, "vec_id", "embedding", k = 5, nProbe = 12)
       val bf = Similarity.bruteForceTopK(emb, qs, "vec_id", "embedding", k = 5)
       bf.select(col("qid"), col("neighbor"))

@@ -57,7 +57,7 @@ object QueryUtil {
   }
 
   /** [[table]]'s memo for the compute-if-absent STATE tables (the
-    * dc2/mh1/sim4/semd2 scoped-tmp indexes): those directories are
+    * dc2/mh1/zo2 scoped-tmp indexes): those directories are
     * write-once per (dataset, app) — the `_SUCCESS`-marker gate under
     * [[stateBuildGate]] builds them exactly once and nothing mutates
     * them afterwards — so their relations (file listing + schema) are as
@@ -130,6 +130,14 @@ object QueryUtil {
   def scopedTmp(spark: SparkSession, dir: String, tag: String): String =
     System.getProperty("java.io.tmpdir") + s"/graft-$tag-" +
       dir.replaceAll("[^a-z0-9.]", "_") + "-" + spark.sparkContext.applicationId
+
+  /** [[scopedTmp]]'s scoping for a managed-table prefix (the sim4/semd2
+    * stored indexes): the same dataset and application suffixes, as one
+    * identifier.
+    */
+  def scopedTable(spark: SparkSession, dir: String, tag: String): String =
+    s"graft_${tag}_${dir}_${spark.sparkContext.applicationId}"
+      .replaceAll("[^A-Za-z0-9_]", "_")
 
   /** Cast every top-level DECIMAL output column to DOUBLE.
     *

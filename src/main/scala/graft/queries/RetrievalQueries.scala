@@ -109,20 +109,20 @@ object RetrievalQueries {
     // cell-local incremental path found it". The corpus index build
     // (k-means + membership shuffle — O(corpus)) is ingest-time state,
     // compute-if-absent like dc2/sim4: repeated runs time the INCREMENT
-    // riding the persisted centroids/members tables (members/ is written
-    // last, so its _SUCCESS marker implies a complete index).
+    // riding the persisted centroids/members tables (members is
+    // published last, so its existence implies a complete index).
     "semd2_incremental_semantic" -> ((s, d) => {
       val emb = table(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       val batch = nearDupCopies(emb)
-      val base = QueryUtil.scopedTmp(s, d, "semd2-index")
-      val done = new org.apache.hadoop.fs.Path(base + "/members/_SUCCESS")
+      val prefix = QueryUtil.scopedTable(s, d, "semd2")
       QueryUtil.stateBuildGate.synchronized {
-        if (!done.getFileSystem(s.sparkContext.hadoopConfiguration).exists(done))
-          SemanticDedup.saveSemanticIndex(emb, "vec_id", "embedding",
-            nClusters = 16, assignProbes = 2, base)
+        if (!s.catalog.tableExists(prefix + "_members"))
+          SemanticDedup.saveSemanticIndexBucketed(emb, "vec_id", "embedding",
+            nClusters = 16, assignProbes = 2, prefix,
+            s.conf.get("spark.sql.shuffle.partitions").toInt)
       }
       val inc = SemanticDedup.incrementalPairsFromIndex(
-        QueryUtil.stateTable(s, base + "/centroids"), QueryUtil.stateTable(s, base + "/members"),
+        s.table(prefix + "_centroids"), s.table(prefix + "_members"),
         batch, "vec_id", "embedding", threshold = 0.9, assignProbes = 2)
       val b = batch.select(col("vec_id").as("new_id"),
         Similarity.toDouble(col("embedding")).as("_bv"))

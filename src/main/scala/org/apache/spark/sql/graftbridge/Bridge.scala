@@ -13,6 +13,24 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** `c` converted in full by the active session's converter. A function
+    * builder's result goes straight to the analyzer, which does not
+    * expand the lazy column nodes [[expression]] leaves for a Dataset to
+    * convert.
+    */
+  def analyzerExpression(c: Column): Expression =
+    org.apache.spark.sql.SparkSession.active
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession].expression(c)
+
+  /** Register the functions `ext` has collected into the session's
+    * function registry — what a session built with `ext` in
+    * `spark.sql.extensions` does at start-up, so a spec can resolve the
+    * injected builders on an already-running session.
+    */
+  def registerFunctions(ext: org.apache.spark.sql.SparkSessionExtensions,
+                        spark: org.apache.spark.sql.SparkSession): Unit =
+    ext.registerFunctions(spark.sessionState.functionRegistry)
+
   /** True when the session's CacheManager holds no cached plans — the
     * signal the cache-leak sweep needs ([[graft]]'s persist discipline:
     * an operator that `.persist()`s during construction must either

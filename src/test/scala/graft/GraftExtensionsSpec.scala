@@ -1,16 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
-
 class GraftExtensionsSpec extends SparkSpec {
 
   test("extensions inject cosine_sim for SQL-only sessions") {
-    // apply the extension against the live session's injection points
-    val ext = new SparkSessionExtensions
-    new GraftExtensions()(ext)
-    // and via the function registry on the shared session, prove the SQL
-    // surface resolves end to end
-    graft.functions.CosineSimilarity.register(spark)
+    SparkSpec.injectExtensions(spark)
     val r = spark.sql(
       "SELECT cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c")
       .collect().head.getDouble(0)
@@ -18,7 +11,7 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("cosine_sim implicitly casts array<float> SQL inputs") {
-    graft.functions.CosineSimilarity.register(spark)
+    SparkSpec.injectExtensions(spark)
     spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .createOrReplaceTempView("emb_f")
     // embedding is array<float>: analyzer must insert the cast, not read
@@ -78,7 +71,7 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("cosine_sim wrong arity raises a clear error; length mismatch → null") {
-    graft.functions.CosineSimilarity.register(spark)
+    SparkSpec.injectExtensions(spark)
     val e = intercept[Exception](spark.sql("SELECT cosine_sim(array(1.0d))"))
     assert(e.getMessage.contains("2 arguments"))
     val row = spark.sql(

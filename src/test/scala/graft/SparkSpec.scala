@@ -28,6 +28,16 @@ trait SparkSpec extends AnyFunSuite {
 object SparkSpec {
   val cores = 4
 
+  /** Register the functions [[GraftExtensions]] injects into `spark`'s
+    * function registry, through the injected builders themselves — what
+    * `spark.sql.extensions=graft.GraftExtensions` does at session start.
+    */
+  def injectExtensions(spark: SparkSession): Unit = {
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new GraftExtensions()(ext)
+    org.apache.spark.sql.graftbridge.Bridge.registerFunctions(ext, spark)
+  }
+
   // one session for the whole test JVM; suites share it
   lazy val session: SparkSession = {
     val s = graft.core.Sessions.builder(cores, "graft-test")

@@ -4,14 +4,14 @@ import graft.SparkSpec
 import graft.operators.Similarity
 import org.apache.spark.sql.functions._
 
-/** The recomposed cosine (`dot(a,b) / (‖a‖·‖b‖)` with norms precomputed
-  * by [[Similarity.l2NormNative]]) must be BIT-identical to the fused
-  * [[CosineSimilarity]] kernel — the r20 optimization moved the norm
-  * work out of the pair loop on the strength of exactly this equality
-  * (`sqrt(Σa²)·sqrt(Σb²)` is the fused denominator verbatim, and the
-  * dot is the same strict left fold), and every similarity operator's
-  * oracle hash rides on it. Null semantics must compose identically
-  * too: length mismatch, null elements, zero norms, empty vectors.
+/** The one cosine kernel (`Similarity.cosine`: the native dot over norms
+  * from [[Similarity.l2NormNative]]) must be BIT-identical to the
+  * declarative reference `Similarity.dot(a,b) / (l2Norm(a) · l2Norm(b))`
+  * — the r20 optimization moved the norm work out of the pair loop on
+  * the strength of exactly this equality (the dot is the same strict
+  * left fold either way), and every similarity operator's oracle hash
+  * rides on it. Null semantics must compose identically too: length
+  * mismatch, null elements, zero norms, empty vectors.
   */
 class DotProductSpec extends SparkSpec {
   import spark.implicits._
@@ -21,24 +21,24 @@ class DotProductSpec extends SparkSpec {
     val df = rows.toDF("a", "b")
       .select(Similarity.toDouble($"a").as("a"),
         Similarity.toDouble($"b").as("b"))
+    val denom = Similarity.l2Norm($"a") * Similarity.l2Norm($"b")
     val got = df.select(
-      Similarity.cosine($"a", $"b").as("fused"),
-      Similarity.cosineFromNorms($"a", $"b",
-        Similarity.l2NormNative($"a"), Similarity.l2NormNative($"b"))
-        .as("split"))
+      Similarity.cosine($"a", $"b").as("kernel"),
+      when(denom === 0d, lit(null).cast("double"))
+        .otherwise(Similarity.dot($"a", $"b") / denom).as("reference"))
       .collect()
     got.zipWithIndex.foreach { case (r, i) =>
-      val f = if (r.isNullAt(0)) None else Some(r.getDouble(0))
-      val s = if (r.isNullAt(1)) None else Some(r.getDouble(1))
+      val k = if (r.isNullAt(0)) None else Some(r.getDouble(0))
+      val d = if (r.isNullAt(1)) None else Some(r.getDouble(1))
       // bit-level comparison: NaN != NaN under ==, and -0.0 == 0.0 —
       // doubleToRawLongBits pins both
-      assert(f.map(java.lang.Double.doubleToRawLongBits) ==
-        s.map(java.lang.Double.doubleToRawLongBits),
-        s"$tag row $i: fused=$f split=$s (a=${rows(i)._1} b=${rows(i)._2})")
+      assert(k.map(java.lang.Double.doubleToRawLongBits) ==
+        d.map(java.lang.Double.doubleToRawLongBits),
+        s"$tag row $i: kernel=$k reference=$d (a=${rows(i)._1} b=${rows(i)._2})")
     }
   }
 
-  test("bit-identical to the fused kernel on random vectors") {
+  test("bit-identical to the declarative reference on random vectors") {
     val rnd = new scala.util.Random(7)
     def vec(n: Int): Seq[java.lang.Double] =
       Seq.fill(n)(Double.box(rnd.nextDouble() * 2 - 1))

@@ -4,7 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Bucketed-IVF contract: the bucketed managed-table pair must be
-  * result-identical to the plain parquet index on every consumer, the
+  * result-identical to the in-memory index on every consumer, the
   * bucket layout must actually ELIDE the corpus-side exchange on the
   * centroid-key joins (the one thing the layout exists to buy — pinned
   * by exchange count, not by faith), and rebuild-over-existing must
@@ -23,12 +23,8 @@ class IvfBucketedIndexSpec extends SparkSpec {
 
   test("bucketed save → load → knn graph: result-identical to the " +
       "plain index, with the corpus-side exchange ELIDED") {
-    val idx = Similarity.ivfIndex(emb, "vec_id", "embedding", nCentroids = 8)
-    val p = s"/tmp/graft-ivf-bucketed-${java.util.UUID.randomUUID()}"
-    Similarity.saveIvfIndex(idx, p)
-    val plain = Similarity.loadIvfIndex(
-      spark.read.parquet(p + "/centroids"), spark.read.parquet(p + "/vectors"))
-    Similarity.saveIvfIndexBucketed(idx, "graft_ivfb_spec", nBuckets = 4)
+    val plain = Similarity.ivfIndex(emb, "vec_id", "embedding", nCentroids = 8)
+    Similarity.saveIvfIndexBucketed(plain, "graft_ivfb_spec", nBuckets = 4)
     val bucketed = Similarity.loadIvfIndexFromTables(spark, "graft_ivfb_spec")
 
     // plan shape FIRST, on unexecuted frames: an executed
@@ -43,8 +39,9 @@ class IvfBucketedIndexSpec extends SparkSpec {
         Similarity.knnGraphApprox(plain, k = 3, nProbe = 2))
       val eBucketed = hashExchanges(
         Similarity.knnGraphApprox(bucketed, k = 3, nProbe = 2))
-      // plain: corpus side + probe side + partial→final window + final
-      // per-qid window = 4; bucketed: the corpus-side exchange is gone
+      // in-memory: corpus side + probe side + partial→final window +
+      // final per-qid window = 4; bucketed: the corpus-side exchange is
+      // gone
       assert(eBucketed < ePlain,
         s"bucketed build must elide the corpus-side exchange: " +
           s"plain $ePlain vs bucketed $eBucketed exchanges")
@@ -80,36 +77,33 @@ class IvfBucketedIndexSpec extends SparkSpec {
   }
 
   test("bucketed semantic index: per-increment pairs identical to the " +
-      "path-persisted index, with the members-side exchange elided") {
-    val p = s"/tmp/graft-sem-bucketed-${java.util.UUID.randomUUID()}"
-    SemanticDedup.saveSemanticIndex(emb, "vec_id", "embedding",
-      nClusters = 8, assignProbes = 2, path = p)
+      "in-memory index, with the members-side exchange elided") {
     SemanticDedup.saveSemanticIndexBucketed(emb, "vec_id", "embedding",
       nClusters = 8, assignProbes = 2, tablePrefix = "graft_semb_spec",
       nBuckets = 4)
     val batch = emb.filter($"vec_id" % 10 === 0)
+    // the in-memory form trains the same seeded index in-query
+    def inMemory = SemanticDedup.incrementalPairs(emb, batch, "vec_id",
+      "embedding", nClusters = 8, threshold = 0.8, assignProbes = 2)
     def pairs(c: org.apache.spark.sql.DataFrame,
               m: org.apache.spark.sql.DataFrame) =
       SemanticDedup.incrementalPairsFromIndex(c, m, batch, "vec_id",
         "embedding", threshold = 0.8, assignProbes = 2)
-    val viaPath = pairs(spark.read.parquet(p + "/centroids"),
-      spark.read.parquet(p + "/members"))
     val viaTables = pairs(spark.table("graft_semb_spec_centroids"),
       spark.table("graft_semb_spec_members"))
-    assert(viaPath.collect().map(_.toSeq).toSet ==
+    assert(inMemory.collect().map(_.toSeq).toSet ==
       viaTables.collect().map(_.toSeq).toSet)
     // the ingest-loop economics: the members side must not re-shuffle
     // per increment (unexecuted frames, estimator broadcast off — the
     // AQE final-plan double-count lesson from the first test applies)
     withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val ePath = hashExchanges(pairs(spark.read.parquet(p + "/centroids"),
-        spark.read.parquet(p + "/members")))
+      val eMemory = hashExchanges(inMemory)
       val eTables = hashExchanges(pairs(
         spark.table("graft_semb_spec_centroids"),
         spark.table("graft_semb_spec_members")))
-      assert(eTables < ePath,
-        s"bucketed members must elide their exchange: path $ePath vs " +
-          s"tables $eTables")
+      assert(eTables < eMemory,
+        s"bucketed members must elide their exchange: in-memory " +
+          s"$eMemory vs tables $eTables")
     }
   }
 

@@ -3,11 +3,12 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Persisted-IVF contract: the save → load → query path must be
-  * frame-identical to querying the in-memory index (same centroids, same
-  * assignments, same ranking), the load path must not train, and malformed
-  * index tables must fail loudly (the crossLshPairsFromIndex rule), not
-  * return silently-wrong neighbors.
+/** Persisted-IVF contract over the stored tables
+  * ([[Similarity.saveIvfIndexBucketed]]): the save → load → query path
+  * must be frame-identical to querying the in-memory index (same
+  * centroids, same assignments, same ranking), the load path must not
+  * train, and malformed index tables must fail loudly (the
+  * crossLshPairsFromIndex rule), not return silently-wrong neighbors.
   */
 class IvfPersistSpec extends SparkSpec {
   import spark.implicits._
@@ -16,16 +17,17 @@ class IvfPersistSpec extends SparkSpec {
     .parquet("/root/testdata/sf0.001/embeddings.parquet")
   private lazy val qs = emb.filter($"vec_id" < 8)
 
-  private def base = s"/tmp/graft-ivf-spec-${java.util.UUID.randomUUID()}"
+  private def prefix =
+    s"graft_ivf_spec_${java.util.UUID.randomUUID().toString.replace("-", "")}"
 
   test("save → load → topk is frame-identical to the in-memory index") {
     val idx = Similarity.ivfIndex(emb, "vec_id", "embedding", nCentroids = 8)
     val mem = Similarity.ivfTopK(idx, qs, "vec_id", "embedding",
       k = 5, nProbe = 4).collect().map(_.toSeq).toSet
-    val p = base
-    Similarity.saveIvfIndex(idx, p)
+    val p = prefix
+    Similarity.saveIvfIndexBucketed(idx, p, nBuckets = 4)
     val disk = Similarity.ivfTopKFromIndex(
-      spark.read.parquet(p + "/centroids"), spark.read.parquet(p + "/vectors"),
+      spark.table(p + "_centroids"), spark.table(p + "_vectors"),
       qs, "vec_id", "embedding", k = 5, nProbe = 4)
       .collect().map(_.toSeq).toSet
     assert(mem == disk)
@@ -34,10 +36,9 @@ class IvfPersistSpec extends SparkSpec {
 
   test("loaded centroids reproduce the trained matrix exactly") {
     val idx = Similarity.ivfIndex(emb, "vec_id", "embedding", nCentroids = 8)
-    val p = base
-    Similarity.saveIvfIndex(idx, p)
-    val loaded = Similarity.loadIvfIndex(
-      spark.read.parquet(p + "/centroids"), spark.read.parquet(p + "/vectors"))
+    val p = prefix
+    Similarity.saveIvfIndexBucketed(idx, p, nBuckets = 4)
+    val loaded = Similarity.loadIvfIndexFromTables(spark, p)
     assert(loaded.centroids.length == idx.centroids.length)
     idx.centroids.zip(loaded.centroids).foreach { case (a, b) =>
       assert(a.toSeq == b.toSeq) // parquet DOUBLE roundtrip is bit-exact
@@ -46,10 +47,10 @@ class IvfPersistSpec extends SparkSpec {
 
   test("malformed index tables fail loudly") {
     val idx = Similarity.ivfIndex(emb, "vec_id", "embedding", nCentroids = 8)
-    val p = base
-    Similarity.saveIvfIndex(idx, p)
-    val goodC = spark.read.parquet(p + "/centroids")
-    val goodV = spark.read.parquet(p + "/vectors")
+    val p = prefix
+    Similarity.saveIvfIndexBucketed(idx, p, nBuckets = 4)
+    val goodC = spark.table(p + "_centroids")
+    val goodV = spark.table(p + "_vectors")
     // wrong vectors table (missing the assignment column)
     val e1 = intercept[IllegalArgumentException] {
       Similarity.loadIvfIndex(goodC, goodV.drop("centroid"))
@@ -72,5 +73,17 @@ class IvfPersistSpec extends SparkSpec {
       Similarity.loadIvfIndex(goodC.filter(lit(false)), goodV)
     }
     assert(e4.getMessage.contains("empty"), e4.getMessage)
+    // the table loader refuses a missing table and a wrong column set
+    val e5 = intercept[IllegalArgumentException] {
+      Similarity.loadIvfIndexFromTables(spark, p + "_absent")
+    }
+    assert(e5.getMessage.contains("does not exist"), e5.getMessage)
+    goodV.withColumn("extra", lit(1)).createOrReplaceTempView(p + "x_vectors")
+    goodC.createOrReplaceTempView(p + "x_centroids")
+    val e6 = intercept[IllegalArgumentException] {
+      Similarity.loadIvfIndexFromTables(spark, p + "x")
+    }
+    assert(e6.getMessage.contains("vectors table"), e6.getMessage)
+    Seq("x_vectors", "x_centroids").foreach(t => spark.catalog.dropTempView(p + t))
   }
 }

@@ -112,33 +112,30 @@ class IvfPreflightSpec extends SparkSpec {
   test("incrementalPairsFromIndex: a degenerate STORED index trips the " +
     "guard at pruned-scan cost; a healthy stored index passes unchanged") {
     spark.catalog.clearCache()
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ivf-guard")
-      .toString
-    try {
-      SemanticDedup.saveSemanticIndex(degenerate(400), "vec_id",
-        "embedding", nClusters = 20, assignProbes = 1, path = s"$tmp/bad")
-      val badC = spark.read.parquet(s"$tmp/bad/centroids")
-      val badM = spark.read.parquet(s"$tmp/bad/members")
-      assertTrips(
-        SemanticDedup.incrementalPairsFromIndex(badC, badM,
-          degenerate(50), "vec_id", "embedding", threshold = 0.9,
-          assignProbes = 1, maxPairFactor = Some(40.0)),
-        "incrementalPairsFromIndex")
-      assertCacheEmpty("failed stored-index preflight leaves no cache")
-      SemanticDedup.saveSemanticIndex(healthy(400), "vec_id", "embedding",
-        nClusters = 20, assignProbes = 1, path = s"$tmp/good")
-      val goodC = spark.read.parquet(s"$tmp/good/centroids")
-      val goodM = spark.read.parquet(s"$tmp/good/members")
-      val ok = SemanticDedup.incrementalPairsFromIndex(goodC, goodM,
-        healthy(50), "vec_id", "embedding", threshold = 0.95,
-        assignProbes = 1, maxPairFactor = Some(40.0))
-      val plain = SemanticDedup.incrementalPairsFromIndex(goodC, goodM,
-        healthy(50), "vec_id", "embedding", threshold = 0.95,
-        assignProbes = 1)
-      assert(ok.collect().toSet == plain.collect().toSet)
-      assertCacheEmpty("passing stored-index guard persists nothing")
-    } finally
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+    SemanticDedup.saveSemanticIndexBucketed(degenerate(400), "vec_id",
+      "embedding", nClusters = 20, assignProbes = 1,
+      tablePrefix = "graft_guard_sem_bad", nBuckets = 4)
+    val badC = spark.table("graft_guard_sem_bad_centroids")
+    val badM = spark.table("graft_guard_sem_bad_members")
+    assertTrips(
+      SemanticDedup.incrementalPairsFromIndex(badC, badM,
+        degenerate(50), "vec_id", "embedding", threshold = 0.9,
+        assignProbes = 1, maxPairFactor = Some(40.0)),
+      "incrementalPairsFromIndex")
+    assertCacheEmpty("failed stored-index preflight leaves no cache")
+    SemanticDedup.saveSemanticIndexBucketed(healthy(400), "vec_id",
+      "embedding", nClusters = 20, assignProbes = 1,
+      tablePrefix = "graft_guard_sem_good", nBuckets = 4)
+    val goodC = spark.table("graft_guard_sem_good_centroids")
+    val goodM = spark.table("graft_guard_sem_good_members")
+    val ok = SemanticDedup.incrementalPairsFromIndex(goodC, goodM,
+      healthy(50), "vec_id", "embedding", threshold = 0.95,
+      assignProbes = 1, maxPairFactor = Some(40.0))
+    val plain = SemanticDedup.incrementalPairsFromIndex(goodC, goodM,
+      healthy(50), "vec_id", "embedding", threshold = 0.95,
+      assignProbes = 1)
+    assert(ok.collect().toSet == plain.collect().toSet)
+    assertCacheEmpty("passing stored-index guard persists nothing")
   }
 
   test("ivfTopK / ivfTopKFromIndex: a degenerate corpus fails the probe " +
@@ -162,19 +159,15 @@ class IvfPreflightSpec extends SparkSpec {
     assert(ok.collect().toSet == plain.collect().toSet)
     assertCacheEmpty("passing ivfTopK guard persists nothing")
     // the FromIndex form threads the same guard (stored-column scan)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ivf-topk")
-      .toString
-    try {
-      Similarity.saveIvfIndex(badIdx, tmp)
-      assertTrips(
-        Similarity.ivfTopKFromIndex(
-          spark.read.parquet(s"$tmp/centroids"),
-          spark.read.parquet(s"$tmp/vectors"),
-          q, "vec_id", "embedding", k = 3, nProbe = 2,
-          maxPairFactor = Some(40.0)),
-        "ivfTopK")
-    } finally
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+    Similarity.saveIvfIndexBucketed(badIdx, "graft_guard_ivf_bad",
+      nBuckets = 4)
+    assertTrips(
+      Similarity.ivfTopKFromIndex(
+        spark.table("graft_guard_ivf_bad_centroids"),
+        spark.table("graft_guard_ivf_bad_vectors"),
+        q, "vec_id", "embedding", k = 3, nProbe = 2,
+        maxPairFactor = Some(40.0)),
+      "ivfTopK")
   }
 
   test("knnGraphApprox: a degenerate corpus fails the build's preflight; " +

@@ -97,7 +97,7 @@ class OperatorPropertySpec extends SparkSpec {
         v <- Gen.listOfN(4, Gen.choose(-5, 5).map(_.toFloat))
         if v.exists(_ != 0f) // zero vectors have undefined cosine (null)
       } yield (id, v.toArray)).map(_.distinctBy(_._1))
-    // the same strict left-fold the native CosineSimilarity evaluates —
+    // the same strict left-fold the native kernel evaluates —
     // needed because -1 (the lowest CONTRACTUAL threshold; out-of-range
     // sentinels are require-rejected) can exclude antiparallel pairs
     // whose cosine rounds a ulp below -1

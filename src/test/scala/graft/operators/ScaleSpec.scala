@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.core.{PipelineConfig, TableStore}
-import graft.functions.CosineSimilarity
 import org.apache.spark.sql.functions._
 
 /** The 100TB levers, regression-checked: salting preserves results,
@@ -130,13 +129,13 @@ class ScaleSpec extends SparkSpec {
     val a = emb.filter($"vec_id" === 0).select($"v".as("va"))
     val pairs = emb.crossJoin(a)
       .select(
-        CosineSimilarity.cosineSim($"v", $"va").as("native"),
+        Similarity.cosine($"v", $"va").as("native"),
         (Similarity.dot($"v", $"va")
           / (Similarity.l2Norm($"v") * Similarity.l2Norm($"va"))).as("hof"))
       .as[(Double, Double)].collect()
     pairs.foreach { case (n, h) => assert(n == h, s"$n != $h") } // bit-equal
-    // SQL surface
-    CosineSimilarity.register(spark)
+    // SQL surface, through the builder GraftExtensions injects
+    SparkSpec.injectExtensions(spark)
     emb.createOrReplaceTempView("emb_cs")
     val viaSql = spark.sql(
       "SELECT cosine_sim(a.v, b.v) FROM emb_cs a JOIN emb_cs b ON b.vec_id = 1 WHERE a.vec_id = 2")

@@ -29,7 +29,7 @@ class SemanticDedupPropertySpec extends SparkSpec {
       .suchThat(_.exists(_ != 0f)))
       .map(_.zipWithIndex.map { case (v, i) => (firstId + i, v.toArray) })
 
-  // the native CosineSimilarity's strict left-fold, in memory
+  // the native kernel's strict left-fold, in memory
   private def cosRef(a: Array[Float], b: Array[Float]): Double = {
     var dot = 0.0; var na = 0.0; var nb = 0.0
     a.indices.foreach { i =>

@@ -86,18 +86,16 @@ class SemanticDedupSpec extends SparkSpec {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
       .select($"vec_id", $"embedding")
     val batch = graft.queries.QueryUtil.nearDupCopies(emb)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-semd-index").toString
-    SemanticDedup.saveSemanticIndex(emb, "vec_id", "embedding",
-      nClusters = 16, assignProbes = 2, dir)
+    val prefix = "graft_semd_spec_index"
+    SemanticDedup.saveSemanticIndexBucketed(emb, "vec_id", "embedding",
+      nClusters = 16, assignProbes = 2, prefix, nBuckets = 4)
     // REBUILD over an existing index must converge too (the marker is
-    // invalidated before centroids are overwritten — a crash between the
+    // dropped before centroids are rewritten — a crash between the
     // writes can no longer leave a marker-valid mixed-build index)
-    SemanticDedup.saveSemanticIndex(emb, "vec_id", "embedding",
-      nClusters = 16, assignProbes = 2, dir)
+    SemanticDedup.saveSemanticIndexBucketed(emb, "vec_id", "embedding",
+      nClusters = 16, assignProbes = 2, prefix, nBuckets = 4)
     val fromIndex = SemanticDedup.incrementalPairsFromIndex(
-      spark.read.parquet(dir + "/centroids"),
-      spark.read.parquet(dir + "/members"),
+      spark.table(prefix + "_centroids"), spark.table(prefix + "_members"),
       batch, "vec_id", "embedding", threshold = 0.9, assignProbes = 2)
     val inQuery = SemanticDedup.incrementalPairs(emb, batch, "vec_id",
       "embedding", nClusters = 16, threshold = 0.9, assignProbes = 2)
@@ -108,20 +106,18 @@ class SemanticDedupSpec extends SparkSpec {
 
   test("NegativesFromIndex mines the same negatives as in-query NegativesIvf") {
     val anchors = universe.filter($"vec_id" < 10)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-ctr-index").toString
+    val prefix = "graft_ctr_spec_index"
     // same corpus, same seed → the persisted index IS the in-query one
-    Similarity.saveIvfIndex(
+    Similarity.saveIvfIndexBucketed(
       Similarity.ivfIndex(universe, "vec_id", "embedding", nCentroids = 16),
-      dir)
+      prefix, nBuckets = 4)
     def neg(via: NegativeMining) =
       Similarity.contrastivePairs(universe, "vec_id", "embedding", anchors,
         k = 5, threshold = 0.9, dim = 64, negativesVia = via)
         .filter($"pair_type" === "negative")
     val a = neg(NegativesIvf(nCentroids = 16, nProbe = 12))
-    val b = neg(NegativesFromIndex(
-      spark.read.parquet(dir + "/centroids"),
-      spark.read.parquet(dir + "/vectors"), nProbe = 12))
+    val b = neg(NegativesFromIndex(spark.table(prefix + "_centroids"),
+      spark.table(prefix + "_vectors"), nProbe = 12))
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
       "persisted-index mining must equal train-in-query mining")
   }
