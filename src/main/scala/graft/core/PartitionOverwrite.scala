@@ -19,8 +19,15 @@ private[core] object PartitionOverwrite {
 
   /** Dynamic-partition-overwrite insert into `fqn`: partitions present in
     * `df` are replaced, all others untouched. Columns are aligned to the
-    * table's order by name. The conf is set on `df.sparkSession`:
-    * foreachBatch hands a cloned session.
+    * table's order by name. The conf is set on `df.sparkSession`, the
+    * session that runs the insert.
+    *
+    * Callers, the only dynamic-overwrite writes in the library:
+    *  - `TableStore.upsertPartitioned`: the touched partitions of an
+    *    upsert;
+    *  - `Compaction.compactPartitionsImpl`: the verified publish of the
+    *    staged compacted slice, and its self-heal, which re-publishes
+    *    the stage after a crash inside that publish.
     *
     * `rebalanceBy` (r20, guide §6 "coalesce on write" / Iceberg's
     * `write.distribution-mode=hash`): without it, every upstream task

@@ -7,7 +7,6 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
   */
 object GameConstants {
   val GameTypes: Seq[String] = Seq("game", "demo", "dlc")
-  val GameId = "appid"
   val ReviewId = "recommendationid"
   val DimId = "id"
 }
@@ -153,8 +152,7 @@ final class TableStore(spark: SparkSession, config: PipelineConfig) {
     * either way (a lost in-memory catalog over a surviving directory is
     * the same case: the caller is replacing whatever was there), so it
     * is removed and the retry lands. Append mode never does this — it
-    * must not delete data it would have composed with; its recovery is
-    * [[saveBatchPartition]]'s re-register-over-location path.
+    * must not delete data it would have composed with.
     */
   private def clearStrandedLocation(layer: String, table: String,
                                     mode: SaveMode): Unit =
@@ -206,47 +204,6 @@ final class TableStore(spark: SparkSession, config: PipelineConfig) {
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .saveAsTable(name)
     clearPendingPublish(name, mode)
-  }
-
-  /** Replay-idempotent batch landing: the frame (carrying `batchCol`, one
-    * value per micro-batch) lands in its own partition with DYNAMIC
-    * partition overwrite — a replayed batch rewrites exactly its partition
-    * instead of appending duplicates. This is what makes `foreachBatch`
-    * ingest exactly-once on a plain-file sink: the write is idempotent per
-    * batchId, and the streaming checkpoint guarantees batchIds replay with
-    * identical content.
-    */
-  def saveBatchPartition(df: DataFrame, layer: String, table: String,
-                         batchCol: String): Unit = {
-    val name = fqn(layer, table)
-    // incremental landing composes with live data — refuse while a
-    // crashed compaction publish leaves it possibly partial
-    Compaction.requireNoPendingPublish(spark, name)
-    if (!spark.catalog.tableExists(name)) {
-      // restart path: the catalog may have been lost (in-memory metastore,
-      // new JVM) while the table directory persists in the warehouse — a
-      // plain saveAsTable would fail with LOCATION_ALREADY_EXISTS and a
-      // delete would lose committed batches. Re-register the table over
-      // the existing location and recover its partitions, then land the
-      // batch idempotently like any other.
-      val loc = tablePath(layer, table)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) {
-        // same interpolation rules as every other DDL here: validate the
-        // column name, escape quotes in the path
-        val escapedLoc = loc.toString.replace("'", "''")
-        spark.sql(s"CREATE TABLE $name (${df.schema.toDDL}) USING parquet " +
-          s"PARTITIONED BY (${ident(batchCol)}) LOCATION '$escapedLoc'")
-        spark.sql(s"MSCK REPAIR TABLE $name")
-        PartitionOverwrite.insertDynamic(df, name,
-          rebalanceBy = rebalanceCols(name, Seq(batchCol)))
-      } else {
-        df.write.format("parquet").partitionBy(batchCol).saveAsTable(name)
-      }
-    } else {
-      PartitionOverwrite.insertDynamic(df, name,
-        rebalanceBy = rebalanceCols(name, Seq(batchCol)))
-    }
   }
 
   /** Physical warehouse path of a managed table. The metastore lowercases
@@ -312,8 +269,7 @@ final class TableStore(spark: SparkSession, config: PipelineConfig) {
     * upserts a daily batch by rewriting a handful of partitions, not the
     * table. Atomicity is per partition (no multi-partition transaction on
     * plain parquet); the operation is idempotent, so the crash-recovery
-    * story is replay-the-batch, matching the landing contract of
-    * [[saveBatchPartition]].
+    * story is replay-the-batch.
     *
     * BUCKETED tables are refused loudly (a staged plain rewrite would
     * silently lose the bucketing layout and its shuffle-free joins).
@@ -727,27 +683,4 @@ final class TableStore(spark: SparkSession, config: PipelineConfig) {
     */
   def exists(layer: String, table: String): Boolean =
     spark.catalog.tableExists(fqn(layer, table))
-
-  /** The raw layer as queryable `raw_*` views alongside dim/fact tables —
-    * the catalog face of `steam.raw.inbound_*` (see
-    * [[graft.ingest.RawCatalog]]).
-    */
-  def registerRaw(dir: String,
-                  schemas: Map[String, org.apache.spark.sql.types.StructType] =
-                    Map.empty): Seq[String] =
-    graft.ingest.RawCatalog.register(spark, dir, schemas)
-
-  /** DROP DATABASE CASCADE removes managed tables' files, but a table
-    * re-registered over its surviving location by the restart-recovery
-    * path is EXTERNAL — CASCADE leaves its directory, and a later ingest
-    * would resurrect the dropped data. Remove the database directory
-    * physically as well.
-    */
-  def dropAll(): Unit = {
-    spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
-    val dbDir = new org.apache.hadoop.fs.Path(
-      s"${spark.conf.get("spark.sql.warehouse.dir")}/${db.toLowerCase}.db")
-    val fs = dbDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dbDir)) fs.delete(dbDir, true)
-  }
 }

@@ -93,9 +93,4 @@ object BigramStats {
       s"bigram_stats expects 1 argument (text), got ${exprs.length}")
     BigramStats(exprs.head)
   }
-
-  /** SQL surface registration (`SELECT bigram_stats(text)`). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bigram_stats", build, "built-in")
 }

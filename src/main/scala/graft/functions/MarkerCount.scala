@@ -140,9 +140,4 @@ object MarkerCount {
     // shared with the Scala Column API
     MarkerCount(Lower(exprs.head), markers)
   }
-
-  /** SQL surface registration (`SELECT marker_count(text, array('the'))`). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "marker_count", build, "built-in")
 }

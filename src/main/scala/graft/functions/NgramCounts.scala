@@ -124,9 +124,4 @@ object NgramCounts {
     }
     NgramCounts(exprs.head, n)
   }
-
-  /** SQL surface registration (`SELECT ngram_counts(text, 2)`). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngram_counts", build, "built-in")
 }

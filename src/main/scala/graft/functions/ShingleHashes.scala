@@ -156,9 +156,4 @@ object ShingleHashes {
     }
     ShingleHashes(exprs.head, n)
   }
-
-  /** SQL surface registration (`SELECT shingle_hashes(text, 5)`). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_hashes", build, "built-in")
 }

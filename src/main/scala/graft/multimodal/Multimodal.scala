@@ -25,9 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
-  /** Typed metadata carried next to the blob. */
-  final case class MediaMeta(mediaType: String, format: String, nBytes: Long)
-
   final case class MediaRow(media_id: Long, media_type: String,
                             content: Array[Byte])
 

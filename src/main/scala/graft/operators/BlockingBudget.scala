@@ -29,9 +29,12 @@ import org.apache.spark.sql.functions._
   */
 object BlockingBudget {
 
-  /** Per-block candidate counts, heaviest first: `(block, left_n,
-    * right_n, pairs)` — the attribution surface when [[candidatePairVolume]]
-    * trips a budget (WHICH prefix went hot). Accounts for a standard
+  /** Per-block candidate counts `(block, left_n, right_n, pairs)`,
+    * unsorted — the form [[preflight]] persists, so the one
+    * materialization serves both the volume sum (order-free) and the
+    * failure path's top-5 (a cheap top-k over the cache); sorting ALL
+    * blocks up front would add a full-profile shuffle that only the
+    * failure path's first 5 rows ever need. Accounts for a standard
     * `=` equi-join: null block keys produce NO candidate pairs (SQL
     * equality never matches null to null), so null-keyed rows are
     * excluded — every production join audited here uses `=`. A caller
@@ -39,19 +42,7 @@ object BlockingBudget {
     * to a sentinel before joining AND before auditing, which also
     * surfaces that bucket for attribution.
     */
-  def blockProfile(left: DataFrame, leftKey: Column,
-                   right: DataFrame, rightKey: Column): DataFrame =
-    blockProfileUnsorted(left, leftKey, right, rightKey)
-      .orderBy(col("pairs").desc)
-
-  /** [[blockProfile]] without the heaviest-first sort — the form
-    * [[preflight]] persists, so the one materialization serves both the
-    * volume sum (order-free) and the failure path's top-5 (a cheap
-    * top-k over the cache); sorting ALL blocks up front would add a
-    * full-profile shuffle that only the failure path's first 5 rows
-    * ever need.
-    */
-  private def blockProfileUnsorted(left: DataFrame, leftKey: Column,
+  private[graft] def blockProfileUnsorted(left: DataFrame, leftKey: Column,
                                    right: DataFrame, rightKey: Column): DataFrame = {
     val lc = left.groupBy(leftKey.as("block"))
       .agg(count(lit(1)).as("left_n")).filter(col("block").isNotNull)
@@ -70,7 +61,7 @@ object BlockingBudget {
     // products can round to the same double, so ties are possible but an
     // order inversion is not — which is all a budget threshold and a
     // heaviest-first attribution need.
-    // MIGRATION NOTE (round 14): this made blockProfile's `pairs` column
+    // MIGRATION NOTE (round 14): this made the profile's `pairs` column
     // DoubleType (was LongType); an external consumer pattern-matching
     // Long rows must read getDouble — called out beside the round-14
     // cache-contract change in ARCHITECTURE.md §Round-14.
@@ -78,36 +69,6 @@ object BlockingBudget {
       .select(lc("block"), col("left_n"), col("right_n"),
         (col("left_n").cast("double") * col("right_n")).as("pairs"))
   }
-
-  /** Total candidate-pair volume Σ_k |L_k|·|R_k| of the equi-blocked
-    * join of `left` and `right` on their block keys — the number the
-    * join's per-pair work multiplies. 0 when no block key co-occurs.
-    *
-    * Counting convention (the costlyExprRefs cache-walk caveat's
-    * sibling): the volume counts ORDERED pairs INCLUDING self-pairs —
-    * for a self-join audit that passes the same frame as both sides,
-    * a bucket of size m contributes m² though the production join's
-    * `doc_a < doc_b` condition evaluates only m·(m−1)/2 of them, so
-    * the audited number overstates real per-pair work by ~2×+n there.
-    * Deliberate: m² and m(m−1)/2 have the SAME growth shape (the
-    * budget polices growth, and the specs' factors are calibrated
-    * against this measure), the measure stays symmetric in its
-    * arguments, and a cross-join audit (distinct sides) needs no
-    * diagonal correction to reason about.
-    *
-    * Exact for volumes ≤ 2^53 (every audit and any budget a caller
-    * would hold); beyond that the double-summed profile (see
-    * [[blockProfile]]'s overflow note) loses ULPs and the result
-    * saturates at `Long.MaxValue` — still monotone (non-strictly:
-    * distinct true volumes can round equal, never invert), still over
-    * any sane budget.
-    */
-  def candidatePairVolume(left: DataFrame, leftKey: Column,
-                          right: DataFrame, rightKey: Column): Long =
-    blockProfile(left, leftKey, right, rightKey)
-      .agg(coalesce(sum(col("pairs")), lit(0d))).head() match {
-        case Row(v: Double) => math.min(v, Long.MaxValue.toDouble).toLong
-      }
 
   /** PRODUCTION preflight: fail fast — with the hot blocks named —
     * when a blocked join's candidate-pair volume exceeds
@@ -138,7 +99,7 @@ object BlockingBudget {
     * for the LSH families, corpus rows for prefix linkage).
     *
     * @throws IllegalStateException naming the measured factor and the
-    *         heaviest blocks (the [[blockProfile]] attribution) when
+    *         heaviest blocks (the [[blockProfileUnsorted]] attribution) when
     *         the budget is exceeded
     */
   def preflight(left: DataFrame, leftKey: Column,
@@ -164,18 +125,19 @@ object BlockingBudget {
     * never-null banding keys), and on failure the hottest blocks — so
     * the guard costs one aggregation over the cache instead of the
     * general form's two groupBys + count-table join + separate row
-    * count, and every reported number comes from one execution. Result
-    * is exactly [[candidatePairVolume]]`(frame, key, frame, key)`
-    * (equivalence frozen in `BlockingPreflightSpec`): when both sides
-    * are the same frame, the count-table self-join pairs each block
-    * with itself, n·n.
+    * count, and every reported number comes from one execution. The
+    * volume is exactly the general form's Σ |L_k|·|R_k| with
+    * `frame` on both sides (equivalence frozen in
+    * `BlockingPreflightSpec` against the spec-side reference): when both
+    * sides are the same frame, the count-table self-join pairs each
+    * block with itself, n·n.
     */
   def preflightSelf(frame: DataFrame, key: Column,
                     maxPairFactor: Double, op: String): Unit = {
     require(maxPairFactor > 0, s"maxPairFactor must be > 0: $maxPairFactor")
     val profile = frame.groupBy(key.as("block"))
       .agg(count(lit(1)).as("n")).filter(col("block").isNotNull)
-      // double product: same overflow rationale as blockProfile
+      // double product: same overflow rationale as blockProfileUnsorted
       .select(col("block"), col("n").as("left_n"), col("n").as("right_n"),
         (col("n").cast("double") * col("n")).as("pairs"))
       .persist()

@@ -140,8 +140,6 @@ object HeavyHitters {
       */
     def minCount: Long =
       if (items.size < capacity) 0L else byCount.head._1
-
-    def toSketch: Sketch = Sketch(n, items.toMap)
   }
 
   /** Stream-summary SpaceSaving: result-identical to [[SpaceSavingAgg]]

@@ -132,19 +132,13 @@ object Prefix {
   }
 
   /** Distributed `row_number()` over (`score` ASC, tie-break…) within
-    * `groupCol` — the [[runningSum]] decomposition with COUNTS for
-    * values: rank = band-local row_number + the band's exclusive count
-    * offset. Rows are ranked ascending with nulls first — matching
-    * `Window.orderBy(score, ties…)`.
-    */
-  def rankByScore(df: DataFrame, groupCol: String, score: Column,
-                  tieBreak: Seq[Column], outCol: String,
-                  bands: Int = 64): DataFrame =
-    rankWithTotals(df, groupCol, score, tieBreak, outCol, bands)
-      .drop("_ps_n")
-
-  /** [[rankByScore]] plus `_ps_n` = the group's total row count, carried
-    * as a SECOND window function over the same G×B band-count frame the
+    * `groupCol` into `outCol` — the [[runningSum]] decomposition with
+    * COUNTS for values: rank = band-local row_number + the band's
+    * exclusive count offset. Rows are ranked ascending with nulls first,
+    * matching `Window.orderBy(score, ties…)`.
+    *
+    * Also carries `_ps_n` = the group's total row count, as a SECOND
+    * window function over the same G×B band-count frame the
     * offsets ride (same partitioning → same exchange, one broadcast
     * join) — never a second pass over the input. (An earlier shape
     * re-aggregated the band counts in a sibling branch and trusted
@@ -153,10 +147,10 @@ object Prefix {
     * banding lineage silently doubled. Windows over one frame can't
     * un-share.)
     */
-  private def rankWithTotals(df: DataFrame, groupCol: String, score: Column,
-                             tieBreak: Seq[Column], outCol: String,
-                             bands: Int): DataFrame = {
-    requireFresh(df, "rankByScore", Seq(
+  private[graft] def rankWithTotals(df: DataFrame, groupCol: String,
+                                    score: Column, tieBreak: Seq[Column],
+                                    outCol: String, bands: Int): DataFrame = {
+    requireFresh(df, "rankWithTotals", Seq(
       "_ps_score", "_ps_band", "_ps_b2", "_ps_cuts", "_ps_g", "_ps_bc",
       "_ps_off", "_ps_n", outCol))
     val banded = bandByScore(df, groupCol, score, bands, "_ps_")
@@ -181,7 +175,7 @@ object Prefix {
   }
 
   /** Distributed `ntile(k)` over (`score` ASC, tie-break…) within
-    * `groupCol`: [[rankByScore]] plus the SQL NTILE assignment computed
+    * `groupCol`: [[rankWithTotals]] plus the SQL NTILE assignment computed
     * from (rank, n, k) — the first `n mod k` buckets get `n div k + 1`
     * rows, the rest `n div k` (bit-equal to the window `ntile`,
     * spec-asserted; the group count n comes from the rank's own band

@@ -19,8 +19,7 @@ object RangeJoin {
     */
   /** Shared gap validation + µs conversion: 0 would divide by zero in the
     * bucket expressions (ANSI runtime error); the upper bound keeps
-    * gapUs = maxGapSeconds·10⁶ inside Long. `EventStreams.attributionJoin`
-    * mirrors the same domain for stream==batch equivalence.
+    * gapUs = maxGapSeconds·10⁶ inside Long.
     */
   private[graft] def gapMicros(maxGapSeconds: Long): Long = {
     require(maxGapSeconds > 0 && maxGapSeconds <= 9_000_000_000_000L,

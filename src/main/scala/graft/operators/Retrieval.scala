@@ -40,21 +40,8 @@ import graft.functions.TextAnalysis
   * row per document it touches — cap the query side (or pre-filter
   * df/N > maxDf terms, the maxShingleDocFreq argument) when queries may
   * contain stopwords; idf already scores such terms near 0.
-  *
-  * Repeated-query consumers (an evaluation loop, a mining service over
-  * a stable corpus snapshot) should build the index ONCE with
-  * [[savePostingsIndexBucketed]] and score with [[bm25TopKFromIndex]]:
-  * the per-call tokenize pass over the corpus and the postings-side
-  * term exchange both disappear into the one-time build write.
   */
 object Retrieval {
-
-  /** The tokenizer identity a stored postings index pins (see
-    * [[savePostingsIndexBucketed]]): [[TextAnalysis.tokens]], unigram
-    * grain. An index built under a different scheme must refuse to
-    * score, not return silently incomparable tf/df values.
-    */
-  private val TokenizerTag = "whitespace-lower-unigram"
 
   /** Top-`k` documents per query under BM25.
     * Output: (qid, doc_id, rank INT, score DOUBLE). Documents sharing no
@@ -110,10 +97,8 @@ object Retrieval {
       .select(col(qId).as("qid"),
         explode(TextAnalysis.tokens(col(qTextCol))).as("term"))
 
-  /** The BM25 scoring core shared by [[bm25TopK]] (operands built
-    * in-plan from raw text) and [[bm25TopKFromIndex]] (operands read
-    * from the bucketed index tables) — one implementation, so the two
-    * entry points cannot drift.
+  /** The BM25 scoring core of [[bm25TopK]], over operands built
+    * in-plan from raw text.
     *
     * JOIN ROUTING (round 17 — the last ungated caller-proportional
     * broadcast hint in the API): the query-terms side used to carry an
@@ -194,170 +179,6 @@ object Retrieval {
       .filter(col("rank") <= k)
       .select(col("qid"), col("doc_id"), col("rank"),
         col("_bm_d").cast("double").as("score"))
-  }
-
-  /** Persist the BM25 operands as MANAGED tables with the postings side
-    * BUCKETED BY `term` — the round-16 bucketed-index pattern
-    * ([[Similarity.saveIvfIndexBucketed]], the stored LSH index) applied
-    * to retrieval. [[bm25TopK]] rebuilds postings, document lengths and
-    * corpus totals from raw text on EVERY call; a repeated-query
-    * consumer (an eval loop, a mining service against a stable corpus
-    * snapshot) pays the corpus tokenize pass plus the postings-side
-    * `term` exchange per run, for operands that only change when the
-    * corpus does. Stored layout:
-    *
-    *  - `<prefix>_meta` — one row (n_docs, sum_dl, tokenizer): the
-    *    corpus totals, precomputed so a scoring run never re-aggregates
-    *    the corpus, and the tokenizer identity so an index built under a
-    *    different scheme refuses loudly instead of scoring incomparable
-    *    tf values (read BY NAME, the stored-LSH meta rule).
-    *  - `<prefix>_postings` — (doc_id, term, tf) BUCKETED BY `term`:
-    *    the query join and the df aggregation both key on `term`, so the
-    *    bucketed scan satisfies both and the corpus-side exchange of
-    *    every scoring run disappears ([[bm25TopKFromIndex]] derives df
-    *    from the stored postings exchange-free rather than storing a
-    *    third table that could drift from them).
-    *  - `<prefix>_doclen` — (doc_id, dl) BUCKETED BY `doc_id`: the
-    *    contribution join's doc-side operand, clustered on its key.
-    *    DERIVED from `_postings`: under the pinned unigram tokenizer
-    *    `dl = Σ tf` per document — every token is a unigram occurrence
-    *    (empty tokens included, the tokenBounds contract), so the sum
-    *    of per-term counts IS the token count. The only documents
-    *    absent are NULL-text ones (the tokenizer yields null, so they
-    *    have no postings row; non-null text always splits to ≥ 1
-    *    token) — and scoring never misses them: a null-text document
-    *    shares no term with any query, so it never reaches the
-    *    contribution join, exactly as in [[bm25TopK]] where its dl is
-    *    null. The corpus totals still count it (see below), keeping
-    *    avgdl and idf's N — and therefore every score —
-    *    frame-identical to [[bm25TopK]].
-    *
-    * `k1`/`b` are deliberately NOT stored: they are scoring-time
-    * parameters (two literals in the contribution arithmetic), not index
-    * state — freezing them at build time would force a rebuild to tune a
-    * ranking constant the stored tf/df/dl values do not depend on.
-    *
-    * The corpus text is tokenized exactly ONCE (the `_postings` write;
-    * round 17 paid a second pass for `_doclen`'s `size(tokens)`), and
-    * since round 20 the corpus is READ exactly once too: `n_docs` and
-    * `sum_dl` are accumulated by `observe()` nodes riding the postings
-    * write itself — a pre-explode count (ALL documents, including
-    * null-text ones the derived `_doclen` omits) and a post-explode
-    * `sum(tf)` (= Σ dl, every token is a unigram occurrence). This
-    * CLOSES the r18 two-read window outright: the meta derives from
-    * the exact snapshot the postings were written from, so a source
-    * mutating between "the write" and "the count" is no longer
-    * representable — there is no second read to drift (previously a
-    * growth by null-text rows was an accepted residual; the shrink
-    * direction was a loud refusal). Cost: zero — observe is an
-    * accumulator on rows already flowing through the write, replacing
-    * a `docs.count()` action and a `_doclen` aggregation action.
-    * Exactness: observed metrics ride accumulators, and both observe
-    * nodes sit inside the write's own RESULT stage (a bucketed write
-    * sorts per task but does not exchange), where Spark discards
-    * duplicate task completions before applying updates — so each
-    * partition contributes exactly once, speculation included. A
-    * consistency check below (`n_docs` ≥ the written `_doclen` row
-    * count, both sides footer-metadata-only) stays as a cheap
-    * belt-and-braces invariant: a lost-update undercount trips it
-    * loudly instead of publishing a meta that skews every idf.
-    *
-    * Crash-window discipline: `_doclen` derives from the written
-    * `_postings`, so postings are written first and `_meta` — the table
-    * every load reads FIRST — is the completeness marker, last in
-    * [[graft.core.IndexTables.publish]]'s order: a partial build fails
-    * the load loudly as a missing meta, never as a mixed build.
-    */
-  def savePostingsIndexBucketed(docs: DataFrame, docId: String,
-                                textCol: String, tablePrefix: String,
-                                nBuckets: Int): Unit = {
-    val sp = docs.sparkSession
-    import sp.implicits._
-    // the ONE corpus tokenize pass — and the ONE corpus read: the two
-    // observe nodes accumulate the corpus totals on the rows flowing
-    // through the postings write (see scaladoc: single-action meta)
-    val corpusObs = org.apache.spark.sql.Observation()
-    val tokenObs = org.apache.spark.sql.Observation()
-    val postings = docs
-      .observe(corpusObs, count(lit(1)).as("n_docs"))
-      .select(col(docId).as("doc_id"),
-        explode(graft.functions.NgramCounts.ngramCounts(col(textCol), 1))
-          .as("_tc"))
-      .select(col("doc_id"), col("_tc.gram").as("term"),
-        col("_tc.cnt").cast("long").as("tf"))
-      .observe(tokenObs, coalesce(sum(col("tf")), lit(0L)).as("sum_dl"))
-    // .get blocks until the postings write has committed its metrics
-    def nDocs = corpusObs.get.apply("n_docs").asInstanceOf[Long]
-    graft.core.IndexTables.publish(sp, tablePrefix, "bm25")(
-      "postings" -> graft.core.IndexTables.bucketed(postings, nBuckets,
-        "term"),
-      // dl = Σ tf per doc, derived from the WRITTEN postings — a narrow
-      // (doc_id, tf) aggregation (the one exchange this build pays
-      // beyond the bucketed writes), no second pass over the corpus text
-      "doclen" -> { name =>
-        graft.core.IndexTables.bucketed(
-          sp.table(s"${tablePrefix}_postings")
-            .groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")),
-          nBuckets, "doc_id")(name)
-        // belt-and-braces invariant over the accumulator path (footer-
-        // metadata-only on both sides): every tokenized doc is a doc, so
-        // an n_docs below the written doclen count means the observed
-        // metric lost updates — refuse to publish a meta that would
-        // skew every idf. (An empty corpus writes (0, 0) and the LOAD
-        // refuses it with the corrupt-meta message.)
-        val nTokenized = sp.table(name).count()
-        require(nDocs >= nTokenized,
-          s"bm25 index build: observed corpus count is inconsistent " +
-            s"with the written snapshot (n_docs=$nDocs < $nTokenized " +
-            "tokenized docs) — the observed metric lost updates; rebuild")
-      },
-      "meta" -> { name =>
-        graft.core.IndexTables.single(Seq((nDocs,
-          tokenObs.get.apply("sum_dl").asInstanceOf[Long], TokenizerTag))
-          .toDF("n_docs", "sum_dl", "tokenizer"))(name)
-      })
-  }
-
-  /** [[bm25TopK]] against a [[savePostingsIndexBucketed]] index — the
-    * repeated-query production entry point. Frame-identical to
-    * [[bm25TopK]] on the same corpus and queries (same scoring core,
-    * spec-pinned): tf/dl come from the stored tables, df re-derives from
-    * the bucketed postings WITHOUT an exchange (the aggregation keys on
-    * the bucket column), and the corpus totals come from the one-row
-    * meta — so a scoring run touches the corpus text zero times and
-    * shuffles only the query side. The query-terms join routes through
-    * the same sized broadcast as [[bm25TopK]].
-    */
-  def bm25TopKFromIndex(spark: org.apache.spark.sql.SparkSession,
-                        tablePrefix: String, queries: DataFrame,
-                        qId: String, qTextCol: String, k: Int,
-                        k1: Double = 1.2, b: Double = 0.75,
-                        broadcastQueryTerms: Option[Boolean] = None)
-      : DataFrame = {
-    def read(t: String, cols: String*) =
-      graft.core.IndexTables.read(spark, tablePrefix, "bm25", t, cols: _*)
-    val meta = read("meta", "n_docs", "sum_dl", "tokenizer")
-    val m = meta.collect()
-    require(m.length == 1,
-      s"bm25 meta table must hold one row, got ${m.length}")
-    // by NAME, not position (the stored-LSH meta rule): the column
-    // require above checks a SET, so a hand-built meta with reordered
-    // columns would otherwise swap n_docs into sum_dl silently
-    val nDocs = m(0).getAs[Long]("n_docs")
-    val sumDl = m(0).getAs[Long]("sum_dl")
-    val tok = m(0).getAs[String]("tokenizer")
-    require(nDocs >= 1 && sumDl >= 0,
-      s"corrupt bm25 meta: n_docs=$nDocs, sum_dl=$sumDl")
-    require(tok == TokenizerTag,
-      s"bm25 index tokenizer '$tok' does not match this build's " +
-        s"'$TokenizerTag' — rebuild the index rather than mix schemes")
-    val postings = read("postings", "doc_id", "term", "tf")
-    val docLen = read("doclen", "doc_id", "dl")
-    val dfreq = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    import spark.implicits._
-    val totals = Seq((nDocs, sumDl)).toDF("n_docs", "sum_dl")
-    bm25Rank(postings, dfreq, docLen, totals,
-      qTermsRaw(queries, qId, qTextCol), k, k1, b, broadcastQueryTerms)
   }
 
   /** Retrieval EVALUATION over a ranked result list — the metric half of

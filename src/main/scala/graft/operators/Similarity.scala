@@ -927,20 +927,6 @@ object Similarity {
         "centroid"))
   }
 
-  /** Rebuild an [[IvfIndex]] from the [[saveIvfIndexBucketed]] tables.
-    * Identical validation to [[loadIvfIndex]] after the shared table
-    * checks; the vectors scan carries the bucket spec, so downstream
-    * centroid-key joins skip the corpus-side exchange (pinned in
-    * `IvfBucketedIndexSpec`).
-    */
-  def loadIvfIndexFromTables(spark: org.apache.spark.sql.SparkSession,
-                             tablePrefix: String): IvfIndex =
-    loadIvfIndex(
-      graft.core.IndexTables.read(spark, tablePrefix, "ivf", "centroids",
-        "centroid_id", "centroid"),
-      graft.core.IndexTables.read(spark, tablePrefix, "ivf", "vectors",
-        "vid", "v", "nrm", "centroid"))
-
   /** Rebuild an [[IvfIndex]] from its persisted tables. The only driver
     * materialization is the centroid table (nCentroids rows — the same
     * bounded state the build holds); the corpus side stays a lazy scan.

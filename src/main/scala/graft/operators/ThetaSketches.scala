@@ -31,7 +31,6 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, IntegerType
   * ([[ThetaSetEstimate]]) evaluate over stored sketch columns, so an
   * overlap matrix is a broadcast self-join of the G-row sketch table —
   * distributed, zero further scans, matching the aggregate's posture.
-  * The driver-side helpers remain for already-collected blobs.
   *
   * Determinism: the retained set is the k smallest murmur hashes under
   * the fixed default seed — independent of row order, partitioning, and
@@ -68,77 +67,15 @@ object ThetaSketches {
       .agg(thetaSketch(col("k"), lgK).as("theta"))
   }
 
-  /** One compact theta sketch of `keyCol` (LONG) per `groupCol` value.
-    * Collects exactly G final blobs (one row per group) from the in-plan
-    * aggregate — never partition partials.
-    */
-  def groupSketches(df: DataFrame, groupCol: String, keyCol: String,
-                    lgK: Int = 12): Map[String, CompactSketch] =
-    groupSketchFrame(df, groupCol, keyCol, lgK).collect().map { r =>
-      r.getString(0) -> Sketches.wrapCompactSketch(
-        Memory.wrap(r.getAs[Array[Byte]](1)))
-    }.toMap
-
-  /** |A ∩ B| estimate from two compact sketches (driver arithmetic over
-    * already-collected sketches; for sketch COLUMNS use the in-plan
-    * [[thetaIntersectEstimate]]).
-    */
-  def intersectionEstimate(a: CompactSketch, b: CompactSketch): Double = {
-    val i = SetOperation.builder().buildIntersection()
-    i.intersect(a)
-    i.intersect(b)
-    i.getResult.getEstimate
-  }
-
-  /** |A ∪ B| estimate from two compact sketches. Delegates to
-    * [[ThetaSetEstimates.union]]'s floor semantics (`lgK` auto-raises
-    * to cover the inputs' retained entries, so the default can no
-    * longer downsample a union of higher-resolution sketches) — ONE
-    * body for the driver-side and in-plan surfaces, and the same
-    * range validation as the Column form ([[thetaUnionEstimate]]
-    * rejects lgK outside [4, 26]; the floor must not quietly clamp a
-    * typo'd request).
-    */
-  def unionEstimate(a: CompactSketch, b: CompactSketch,
-                    lgK: Int = 12): Double = {
-    require(lgK >= 4 && lgK <= 26, s"lgK out of range: $lgK")
-    ThetaSetEstimates.union(a, b, lgK)
-  }
-
   /** In-plan |A ∩ B| estimate over two compact-sketch BINARY columns —
     * overlap matrices over many stored sketch pairs compute distributed
     * (join a sketch table against itself, estimate per pair), matching
     * [[thetaSketch]]'s in-plan posture instead of collecting blobs for
-    * driver arithmetic.
+    * driver arithmetic. Union and difference are the SQL functions
+    * `theta_union_estimate` / `theta_difference_estimate`.
     */
   def thetaIntersectEstimate(a: Column, b: Column): Column =
     Bridge.column(ThetaIntersectEstimate(
-      Bridge.expression(a), Bridge.expression(b)))
-
-  /** In-plan |A ∪ B| estimate over two compact-sketch BINARY columns.
-    * `lgK` is a FLOOR on the union's log-nominal-entries, not a cap:
-    * the eval core ([[ThetaSetEstimates.union]]) auto-raises the
-    * effective value to cover the inputs' combined retained entries,
-    * so the default can no longer silently downsample a union of
-    * higher-resolution sketches (the old foot-gun: the builders
-    * default to 12 but th1 builds at 16, and a 12-capped union of
-    * lgK-16 sketches quietly degraded past 4096 entries — a mismatch
-    * undetectable at plan time because lgK must be a literal while
-    * the blobs are runtime values, hence the eval-time fix). Exact
-    * inputs union exactly; estimation-mode inputs keep at least
-    * their own resolution; the lgK argument survives as the floor
-    * for callers that want extra headroom.
-    */
-  def thetaUnionEstimate(a: Column, b: Column, lgK: Int = 12): Column =
-    Bridge.column(ThetaUnionEstimate(
-      Bridge.expression(a), Bridge.expression(b), lgK))
-
-  /** In-plan |A \ B| estimate over two compact-sketch BINARY columns —
-    * the "what is in the crawl but not yet ingested" form of the set
-    * algebra (theta's AnotB; HLL cannot answer this at all).
-    */
-  def thetaDifferenceEstimate(a: Column, b: Column): Column =
-    Bridge.column(ThetaDifferenceEstimate(
       Bridge.expression(a), Bridge.expression(b)))
 }
 
@@ -181,8 +118,7 @@ object ThetaSetEstimates {
     * Exact-mode inputs therefore always union exactly; estimation-mode
     * inputs keep at least their own resolution. Transient memory is
     * 8·2^eff bytes per PAIR row — bounded by the inputs' own build size,
-    * not by the cap. [[graft.operators.ThetaSketches.unionEstimate]]
-    * delegates here so driver-side and in-plan unions share one floor.
+    * not by the cap.
     */
   def union(a: CompactSketch, b: CompactSketch, lgK: Int): Double = {
     val eff = effectiveLgK(a.getRetainedEntries(true).toLong +
@@ -298,19 +234,6 @@ object ThetaSetEstimate {
     } else 12
     ThetaUnionEstimate(exprs(0), exprs(1), lgK)
   }
-
-  /** SQL surface registration for ad-hoc sessions ([[ThetaSketchAgg.register]]'s
-    * sibling; `GraftExtensions` injects the same builders session-wide).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val r = spark.sessionState.functionRegistry
-    r.createOrReplaceTempFunction(
-      "theta_intersect_estimate", buildIntersect, "built-in")
-    r.createOrReplaceTempFunction(
-      "theta_union_estimate", buildUnion, "built-in")
-    r.createOrReplaceTempFunction(
-      "theta_difference_estimate", buildDifference, "built-in")
-  }
 }
 
 /** Native theta-sketch aggregate: buffer is a datasketches theta `Union`,
@@ -400,9 +323,4 @@ object ThetaSketchAgg {
     } else 12
     ThetaSketchAgg(exprs.head, lgK)
   }
-
-  /** SQL surface registration (`SELECT grp, theta_sketch_agg(k) ...`). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_sketch_agg", build, "built-in")
 }

@@ -47,23 +47,14 @@ object ZOrder {
       .sortWithinPartitions(col("zkey"))
   }
 
-  /** Write `df` z-clustered at `path` and return the per-file min/max
-    * stats of the two clustered dimensions — the file-skipping index that
-    * Delta/Iceberg keep in their metadata layer, here as a one-row-per-
-    * file DataFrame. The stats pass is one extra parallel scan of the
-    * written files (at production scale it folds into the write commit);
-    * vanilla Spark prunes parquet ROW GROUPS from these same min/max
+  /** Per-file min/max of `xCol`/`yCol` for every parquet file at `path`:
+    * the file-skipping index that Delta/Iceberg keep in their metadata
+    * layer, here as a one-row-per-file DataFrame. Over a [[cluster]]ed
+    * write it costs one extra parallel scan of the written files.
+    * Vanilla Spark prunes parquet ROW GROUPS from these same min/max
     * stats but never whole files on data columns, so this index is what
     * turns z-clustering into an actual files-read drop.
     */
-  def writeClustered(df: DataFrame, xCol: String, yCol: String,
-                     path: String, numFiles: Int, bits: Int = 16): DataFrame = {
-    cluster(df, xCol, yCol, numFiles, bits)
-      .write.mode("overwrite").parquet(path)
-    fileStats(df.sparkSession, path, xCol, yCol)
-  }
-
-  /** Per-file min/max of `xCol`/`yCol` for every parquet file at `path`. */
   def fileStats(spark: org.apache.spark.sql.SparkSession, path: String,
                 xCol: String, yCol: String): DataFrame =
     spark.read.parquet(path)

@@ -96,15 +96,19 @@ object QueryUtil {
     * TIMESTAMP. The session timezone is pinned to UTC in Sessions/Verify/
     * Bench, so NTZ→TIMESTAMP is value-exact and preserves DuckDB parity.
     */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    val raw = table(spark, dir, "events")
+  def events(spark: SparkSession, dir: String): DataFrame =
+    normalizeTs(table(spark, dir, "events"))
+
+  /** [[events]]' `ts` normalization over any events frame, batch or
+    * stream.
+    */
+  private[graft] def normalizeTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
       case _ =>
         raw.withColumn("ts", org.apache.spark.sql.functions.col("ts").cast("timestamp"))
     }
-  }
 
   /** Exact-decimal view of a double column (see parity rules above). */
   def dec(c: Column, scale: Int = 2): Column = c.cast(DecimalType(18, scale))

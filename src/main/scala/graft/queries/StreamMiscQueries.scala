@@ -19,8 +19,7 @@ object StreamMiscQueries {
     "st1_window_agg" -> ((s, d) =>
       EventStreams.windowedCounts(events(s, d))),
 
-    // gap-based sessionization, batch window-function form (streaming
-    // stateful form is spec-checked equal)
+    // gap-based sessionization, window-function form
     "st2_sessionization" -> ((s, d) => {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
@@ -114,9 +113,8 @@ object StreamMiscQueries {
         rightTsCol = "click_ts", rightCols = Seq("click_id", "click_ts"))
     }),
 
-    // two-relation interval join, bucketized (the batch form of the
-    // stream-stream attribution join; EventStreamsSpec asserts the
-    // watermarked streaming plan produces the identical pair set)
+    // two-relation interval join, bucketized (a bare interval predicate
+    // plans as a nested loop)
     "st4_interval_join" -> ((s, d) => {
       val e = events(s, d)
       val purchases = e.filter(col("event_type") === "purchase")
@@ -272,8 +270,7 @@ object StreamMiscQueries {
         table(s, d, "customer"), table(s, d, "nation"))),
 
     // NATIVE session windows (the built-in operator; st2 is the
-    // window-function form, EventStreams.sessionize the stateful
-    // streaming form): per-user gap-separated sessions as first-class
+    // window-function form): per-user gap-separated sessions as first-class
     // groups. Boundary semantics MATCH st2: Spark merges sessions when
     // sessionStart <= currentSessionEnd (verified against 4.1.2's
     // UpdatingSessionsIterator and a live run), so an event landing

@@ -1,87 +1,18 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import org.apache.spark.sql.types._
-import graft.core.TableStore
 
-/** Structured-Streaming surface.
+/** Event-time window operators whose expressions run unchanged on a
+  * batch frame or a stream.
   *
-  * The reference is pure batch — its "streaming-ness" is the daily
-  * anti-join + append increment (SURVEY.md §2.7/§2.8). This module provides
-  * the Spark-native streaming expression of the same semantics plus the
-  * event-stream operators a production deployment adds on top:
-  *
-  *  - `StreamingFactIngest`: file-source stream → exactly-once keyed dedup
-  *    (`dropDuplicatesWithinWatermark`) → `foreachBatch` append — the
-  *    streaming form of the reference's incremental fact load
-  *  - `windowedCounts`: watermarked event-time tumbling-window aggregation
-  *  - `Sessionize`: gap-based session windows via
-  *    `flatMapGroupsWithState` (custom per-key state)
-  *
-  * All three run identically at cluster scale: state is partitioned by key
-  * in the state store, watermarks bound state size, and the batch-equivalent
-  * plans (used by the oracle checks) share the same expressions.
+  * The reference is pure batch: its "streaming-ness" is the daily
+  * anti-join + append increment (SURVEY.md §2.8). The catalog runs these
+  * operators on batch frames (st1, st5); with a watermark they also run
+  * as a stream, and `EventStreamsSpec` checks that the streamed result
+  * equals the batch one.
   */
 object EventStreams {
-
-  /** Harness `events` schema as stored by the CURRENT generation: `ts` as
-    * native µs timestamps (`timestamp[us]`, no UTC adjustment →
-    * TIMESTAMP_NTZ). Legacy datasets annotated `ts` as TIMESTAMP(NANOS),
-    * which Spark surfaces as LONG under
-    * `spark.sql.legacy.parquet.nanosAsLong=true` — and which
-    * `readStream.schema` with TimestampNTZType CANNOT read (the
-    * vectorized reader refuses TIMESTAMP(NANOS)→TIMESTAMP_NTZ). The
-    * streaming entry points therefore probe the actual files first
-    * ([[probeEventsSchema]]) instead of assuming this constant.
-    */
-  val eventsRawSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", TimestampNTZType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
-  /** [[eventsRawSchema]] with the `ts` type the files ACTUALLY carry —
-    * one driver-side batch inference (a single parquet footer read)
-    * before the stream starts, so both dataset generations stream:
-    * legacy ns files probe to LONG (under the session's `nanosAsLong`),
-    * current files to TIMESTAMP_NTZ, and [[normalize]] converges both to
-    * µs TIMESTAMP. When the source dir has no files yet (nothing to
-    * probe — a brand-new landing zone) the fallback is `emptyDirSchema`,
-    * default [[eventsRawSchema]]: a LEGACY-generation pipeline whose
-    * zone may be empty at stream start must pass its ns-shaped schema
-    * here explicitly (the probe cannot know the generation of files
-    * that don't exist). Files of BOTH generations in one dir is not a
-    * supported layout, matching the batch path.
-    */
-  def probeEventsSchema(spark: SparkSession, sourceDir: String,
-                        emptyDirSchema: StructType = eventsRawSchema)
-      : StructType = {
-    val probed =
-      try Some(spark.read.parquet(sourceDir).schema("ts").dataType)
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-    probed match {
-      case Some(t) => StructType(eventsRawSchema.map(f =>
-        if (f.name == "ts") f.copy(dataType = t) else f))
-      case None => emptyDirSchema
-    }
-  }
-
-  /** Timestamp normalization shared by batch and streaming paths: LONG
-    * (legacy ns) → µs timestamp; anything else is cast to TIMESTAMP —
-    * native NTZ columns must not pass through, because downstream
-    * consumers ([[attributionJoin]]'s `unix_micros`) accept only
-    * TIMESTAMP. Session timezone is pinned to UTC, so the cast is
-    * value-exact.
-    */
-  def normalize(raw: DataFrame): DataFrame =
-    raw.schema("ts").dataType match {
-      case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case _        => raw.withColumn("ts", col("ts").cast("timestamp"))
-    }
 
   /** Tumbling event-time window counts with watermark (streaming) —
     * identical expressions work on a batch frame, which is how the oracle
@@ -100,41 +31,6 @@ object EventStreams {
         sum(col("_dv")).cast("decimal(18,6)").as("sum_value"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("sum_value"))
-  }
-
-  /** Stream-stream interval join (§2.7): purchases matched to every click
-    * that preceded them within `maxGapSeconds` on the same user. Both
-    * sides carry watermarks and the interval predicate bounds the state
-    * store: a buffered click is evicted once the watermark passes
-    * `click_ts + gap`, so state stays proportional to the lookback window,
-    * not the stream. The identical expressions run on a batch frame (how
-    * the spec cross-checks it); the scale-safe BATCH form of the same
-    * semantics is `RangeJoin.joinWithinGap` (bucketized equi-join — batch
-    * planners turn a bare interval predicate into a nested loop).
-    */
-  def attributionJoin(events: DataFrame, maxGapSeconds: Long = 21600L,
-                      watermark: String = "2 hours"): DataFrame = {
-    // same domain as the batch twin RangeJoin.joinWithinGap — the two must
-    // accept/reject identical inputs for the stream==batch equivalence
-    require(maxGapSeconds > 0 && maxGapSeconds <= 9_000_000_000_000L,
-      s"maxGapSeconds must be in (0, 9e12], got $maxGapSeconds")
-    val streaming = events.isStreaming
-    def wm(df: DataFrame, tsCol: String): DataFrame =
-      if (streaming) df.withWatermark(tsCol, watermark) else df
-    val purchases = wm(events.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts")), "purchase_ts")
-    val clicks = wm(events.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user_id"),
-        col("event_id").as("click_id"), col("ts").as("click_ts")), "click_ts")
-    purchases.join(clicks,
-      col("user_id") === col("c_user_id")
-        && col("click_ts") <= col("purchase_ts")
-        && col("click_ts") >= col("purchase_ts")
-             - expr(s"INTERVAL $maxGapSeconds SECONDS"))
-      .select(col("user_id"), col("purchase_id"), col("click_id"),
-        ((unix_micros(col("purchase_ts")) - unix_micros(col("click_ts")))
-          / 1000000L).cast("decimal(18,6)").as("gap_seconds"))
   }
 
   /** Stream-static enrichment (§2.7 extension): the event stream joined
@@ -179,119 +75,5 @@ object EventStreams {
         sum(col("_dv")).cast("decimal(18,6)").as("sum_value"))
       .select(col("window.start").as("window_start"), col("n_name"),
         col("n_events"), col("sum_value"))
-  }
-
-  final case class Event(event_id: Long, ts: java.sql.Timestamp,
-                         user_id: Long, event_type: String, value: Double)
-
-  final case class SessionSummary(user_id: Long, n_sessions: Int,
-                                  n_events: Long)
-
-  /** Keyed session state. PUBLIC by necessity, not by API intent: the
-    * state-store encoder's generated code (Janino, compiled OUTSIDE this
-    * package) must name this class to read its fields back between
-    * micro-batches — as `private`/`private[streaming]` it compiles to a
-    * package-private class the generated code cannot reference, and a
-    * STREAMING run fails at runtime with a codegen CompileException the
-    * moment state written by batch N is deserialized by batch N+1
-    * (batch-mode passes hold state as live objects in one group pass and
-    * never hit the encoder, which is how the oracle test missed it;
-    * caught by `StreamingPropertySpec`'s multi-batch delivery).
-    */
-  final case class SessionState(lastTs: Long, nSessions: Int,
-                                nEvents: Long)
-
-  /** Gap-based sessionization with custom keyed state
-    * (`flatMapGroupsWithState`): a new session starts when the gap to the
-    * previous event of the same user exceeds `gapSeconds`. Emits the
-    * running summary per user on every update, a final one on idle
-    * timeout — and removes the timed-out state, so the store holds only
-    * active users (bounded state).
-    *
-    * The batch oracle for the same semantics is a window-function plan:
-    * sessions = 1 + Σ [ts − lag(ts) > gap] per user. Gap comparison is in
-    * microseconds to match the batch `unix_micros` arithmetic exactly.
-    *
-    * OPERATIONAL: run the streaming form with a real trigger interval.
-    * ProcessingTimeTimeout makes the stateful operator report pending
-    * work on EVERY trigger (a timeout could always have expired), so
-    * under the default 0-interval trigger the engine busy-loops empty
-    * micro-batches, and `processAllAvailable()` never returns (the
-    * no-new-data signal it waits on is never raised). Delivery contract
-    * for exact batch-oracle parity: per-user event-time order across
-    * micro-batches (within a batch the update function sorts); a late
-    * event older than the user's state is counted into the CURRENT
-    * session, the standard state-store semantics.
-    */
-  def sessionize(events: Dataset[Event], gapSeconds: Long,
-                 idleTimeout: String = "2 hours")
-                (implicit spark: SparkSession): Dataset[SessionSummary] = {
-    import spark.implicits._
-    val gapMicros = gapSeconds * 1000000L
-    val streaming = events.isStreaming // driver-side; Datasets don't serialize
-    def micros(ts: java.sql.Timestamp): Long =
-      (ts.getTime / 1000L) * 1000000L + (ts.getNanos / 1000L)
-    def update(userId: Long, rows: Iterator[Event],
-               state: GroupState[SessionState]): Iterator[SessionSummary] = {
-      if (state.hasTimedOut) {
-        // final emission for an idle user, then drop the state entry
-        val s = state.get
-        state.remove()
-        return Iterator(SessionSummary(userId, s.nSessions, s.nEvents))
-      }
-      val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-      var s = state.getOption.getOrElse(SessionState(Long.MinValue, 0, 0L))
-      sorted.foreach { e =>
-        val t = micros(e.ts)
-        val newSession = s.lastTs == Long.MinValue || t - s.lastTs > gapMicros
-        s = SessionState(t, s.nSessions + (if (newSession) 1 else 0),
-          s.nEvents + 1)
-      }
-      state.update(s)
-      if (streaming) state.setTimeoutDuration(idleTimeout)
-      Iterator(SessionSummary(userId, s.nSessions, s.nEvents))
-    }
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update,
-        if (streaming) GroupStateTimeout.ProcessingTimeTimeout
-        else GroupStateTimeout.NoTimeout)(update)
-  }
-
-  /** Streaming incremental fact ingest ≙ the reference's anti-join+append
-    * (J2+K1) re-expressed as a stream: file source → keyed dedup bounded by
-    * watermark → exactly-once landing via `foreachBatch` + per-batchId
-    * partition overwrite (a blind append would be at-least-once: a crash
-    * between the write and the checkpoint commit would duplicate the
-    * replayed micro-batch; overwriting the batch's own partition is
-    * replay-idempotent).
-    */
-  /** `checkpointDir` must be a STABLE location per logical ingest (it holds
-    * the source offsets and dedup state): restarts resume from it, which is
-    * what makes the append idempotent across runs. A fresh/random dir would
-    * silently re-ingest everything on every start.
-    */
-  final class StreamingFactIngest(spark: SparkSession, store: TableStore,
-                                  sourceDir: String, keyCol: String,
-                                  tsCol: String, checkpointDir: String,
-                                  watermark: String = "1 hour") {
-
-    def start(): org.apache.spark.sql.streaming.StreamingQuery = {
-      val src = normalize(
-        spark.readStream.schema(probeEventsSchema(spark, sourceDir))
-          .parquet(sourceDir))
-      val deduped = src
-        .withWatermark(tsCol, watermark)
-        .dropDuplicatesWithinWatermark(keyCol)
-      deduped.writeStream
-        .outputMode(OutputMode.Append)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          store.saveBatchPartition(
-            batch.withColumn("ingest_batch", lit(batchId)),
-            "fact", "events", "ingest_batch")
-        }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", checkpointDir)
-        .start()
-    }
   }
 }

@@ -23,7 +23,7 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("marker_count resolves in SQL with a literal marker array") {
-    graft.functions.MarkerCount.register(spark)
+    SparkSpec.injectExtensions(spark)
     val r = spark.sql(
       "SELECT marker_count('The cat AND the hat', array('the', 'and')) AS c")
       .collect().head.getInt(0)
@@ -31,7 +31,7 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("marker_count rejects a non-literal marker list with a clear error") {
-    graft.functions.MarkerCount.register(spark)
+    SparkSpec.injectExtensions(spark)
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .createOrReplaceTempView("docs_mc")
     val e = intercept[Exception](spark.sql(
@@ -40,7 +40,7 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("marker_count rejects wrong element types and uppercase markers clearly") {
-    graft.functions.MarkerCount.register(spark)
+    SparkSpec.injectExtensions(spark)
     val e1 = intercept[Exception](spark.sql(
       "SELECT marker_count('x', array(1, 2))"))
     assert(e1.getMessage.contains("array<string>"), e1.getMessage)
@@ -51,7 +51,7 @@ class GraftExtensionsSpec extends SparkSpec {
 
   test("theta_sketch_agg resolves in SQL, composes with GROUP BY, " +
     "and its blobs round-trip through the sketch algebra") {
-    graft.operators.ThetaSketchAgg.register(spark)
+    SparkSpec.injectExtensions(spark)
     import spark.implicits._
     ((0L until 1000L).map(("a", _)) ++ (600L until 1600L).map(("b", _)))
       .toDF("grp", "k").createOrReplaceTempView("theta_sql_in")
@@ -62,7 +62,7 @@ class GraftExtensionsSpec extends SparkSpec {
       org.apache.datasketches.theta.Sketches.wrapCompactSketch(
         org.apache.datasketches.memory.Memory.wrap(b))
     assert(sk(rows("a")).getEstimate == 1000.0)
-    assert(graft.operators.ThetaSketches.intersectionEstimate(
+    assert(graft.operators.ThetaReference.intersectionEstimate(
       sk(rows("a")), sk(rows("b"))) == 400.0)
     // lgK must be a literal — a column reference is rejected loudly
     val e = intercept[Exception](spark.sql(

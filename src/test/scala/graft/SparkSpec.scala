@@ -35,7 +35,7 @@ object SparkSpec {
   def injectExtensions(spark: SparkSession): Unit = {
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions()(ext)
-    org.apache.spark.sql.graftbridge.Bridge.registerFunctions(ext, spark)
+    org.apache.spark.sql.graftbridge.SpecBridge.registerFunctions(ext, spark)
   }
 
   // one session for the whole test JVM; suites share it

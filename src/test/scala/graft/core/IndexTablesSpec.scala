@@ -46,7 +46,7 @@ class IndexTablesSpec extends SparkSpec {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val idx = Similarity.ivfIndex(emb, "vec_id", "embedding", nCentroids = 4)
     Similarity.saveIvfIndexBucketed(idx, prefix, nBuckets = 2)
-    val loaded = Similarity.loadIvfIndexFromTables(spark, prefix)
+    val loaded = graft.operators.IvfTables.load(spark, prefix)
     assert(loaded.centroids.map(_.toSeq).toSeq == idx.centroids.map(_.toSeq).toSeq)
     assert(loaded.vectors.count() == emb.count())
   }

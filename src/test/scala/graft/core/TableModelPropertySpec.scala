@@ -1,6 +1,7 @@
 package graft.core
 
 import graft.SparkSpec
+import TableStoreFixtures._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import java.util.concurrent.atomic.AtomicReference
 

@@ -57,7 +57,7 @@ class BigramStatsSpec extends SparkSpec {
   }
 
   test("SQL surface: bigram_stats registered") {
-    BigramStats.register(spark)
+    SparkSpec.injectExtensions(spark)
     val row = spark.sql(
       "SELECT s.* FROM (SELECT bigram_stats('x y x y x') AS s)")
       .as[(Long, Long, Long)].collect().head

@@ -30,7 +30,7 @@ class BpeSpec extends SparkSpec {
       .as[(Long, String, Int)].collect()
     assert(rows.nonEmpty)
     rows.foreach { case (id, text, n) =>
-      assert(n == Bpe.referenceReplaceChainCount(text), s"doc $id")
+      assert(n == BpeReference.referenceReplaceChainCount(text), s"doc $id")
     }
   }
 
@@ -40,7 +40,7 @@ class BpeSpec extends SparkSpec {
       "the and ing tion tiontion", "ThE AnD", "a1b2c3", "111 222 th3",
       "word-with-dashes under_scores", "日本語 mixed the 日本語",
       "x".repeat(500), "th".repeat(100), "the ".repeat(50).trim)
-    val expected = cases.map(t => Bpe.referenceReplaceChainCount(t))
+    val expected = cases.map(t => BpeReference.referenceReplaceChainCount(t))
     assert(nativeCounts(cases, Bpe.defaultMerges) == expected)
   }
 
@@ -74,7 +74,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("SQL surface: bpe_stats registered, literal-checked") {
-    BpeStats.register(spark)
+    SparkSpec.injectExtensions(spark)
     // 'the' → single symbol under rules (t,h) then (th,e); 'xz' stays 2
     val r = spark.sql(
       "SELECT b.* FROM (SELECT bpe_stats('the xz') AS b)").collect().head
@@ -82,8 +82,8 @@ class BpeSpec extends SparkSpec {
   }
 
   test("learned merges: deterministic, compressing, contract-aligned") {
-    val m1 = Bpe.learn(docs, "text", numMerges = 32)
-    val m2 = Bpe.learn(docs, "text", numMerges = 32)
+    val m1 = BpeReference.learn(docs, "text", numMerges = 32)
+    val m2 = BpeReference.learn(docs, "text", numMerges = 32)
     assert(m1 == m2, "learning must be a pure function of the corpus")
     assert(m1.nonEmpty && m1.size <= 32)
     // applying learned merges must compress vs characters, and the native
@@ -91,7 +91,7 @@ class BpeSpec extends SparkSpec {
     val sample = docs.limit(20).as[(Long, String)].collect().map(_._2).toSeq
     val native = nativeCounts(sample, m1)
     sample.zip(native).foreach { case (t, n) =>
-      assert(n == Bpe.referenceReplaceChainCount(t, m1))
+      assert(n == BpeReference.referenceReplaceChainCount(t, m1))
       val chars = "[a-z0-9]+".r.findAllIn(t.toLowerCase).map(_.length).sum
       assert(n <= chars)
     }

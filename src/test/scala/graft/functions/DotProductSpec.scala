@@ -101,6 +101,49 @@ class DotProductSpec extends SparkSpec {
     }
   }
 
+  test("generic arm over a vectorized parquet scan (ColumnarArray) is " +
+      "the strict ascending left fold") {
+    // the arm-equality case above never reaches the generic loop: its
+    // in-stage cast already yields UnsafeArrayData. Columns read by the
+    // vectorized parquet reader arrive as ColumnarArray, and with no
+    // cast in between (array<double> in, the upcast simplified away)
+    // the kernel runs its generic per-element loop on them
+    val rnd = new scala.util.Random(23)
+    val rows = (1 to 300).map { i =>
+      val n = 2 + rnd.nextInt(94)
+      def v: Seq[java.lang.Double] =
+        Seq.fill(n)(Double.box(rnd.nextDouble() * 2 - 1)) ++
+          (if (i % 19 == 0) Seq(null.asInstanceOf[java.lang.Double]) else Nil)
+      (i, v, v)
+    }
+    def fold(a: Seq[java.lang.Double], b: Seq[java.lang.Double]): Option[Long] =
+      if (a.exists(_ == null) || b.exists(_ == null)) None
+      else Some(java.lang.Double.doubleToRawLongBits(
+        a.indices.foldLeft(0.0)((acc, k) => acc + a(k) * b(k))))
+    val dir = java.nio.file.Files.createTempDirectory("graft-dot-scan").toString
+    try {
+      rows.toDF("id", "a", "b").coalesce(1)
+        .write.mode("overwrite").parquet(dir)
+      withConf("spark.sql.parquet.enableVectorizedReader" -> "true",
+        "spark.sql.parquet.enableNestedColumnVectorizedReader" -> "true") {
+        val scored = spark.read.parquet(dir)
+          .select($"id", Similarity.dotNative($"a", $"b").as("d"))
+        val plan = scored.queryExecution.executedPlan.toString
+        assert(plan.contains("ColumnarToRow"),
+          s"expected a vectorized scan feeding the kernel:\n$plan")
+        val got = scored.collect().map(r => r.getInt(0) ->
+          (if (r.isNullAt(1)) None
+           else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(1)))))
+          .toMap
+        rows.foreach { case (i, a, b) =>
+          assert(got(i) == fold(a, b), s"row $i: kernel=${got(i)} " +
+            s"fold=${fold(a, b)}")
+        }
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(dir))
+  }
+
   test("dot_product null semantics: mismatch and null elements yield null") {
     val df = Seq(
       (Seq(1.0, 2.0), Seq(3.0, 4.0))

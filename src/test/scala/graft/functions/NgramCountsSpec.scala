@@ -63,7 +63,7 @@ class NgramCountsSpec extends SparkSpec {
   }
 
   test("SQL surface: ngram_counts registered and literal-checked") {
-    NgramCounts.register(spark)
+    SparkSpec.injectExtensions(spark)
     val rows = spark.sql(
       "SELECT inline(ngram_counts('b a b', 1))").as[(String, Int)]
       .collect().toSeq

@@ -66,7 +66,7 @@ class ShingleHashesSpec extends SparkSpec {
   }
 
   test("SQL surface via extension builder") {
-    ShingleHashes.register(spark)
+    SparkSpec.injectExtensions(spark)
     Seq((1L, "x y z w v")).toDF("doc_id", "text")
       .createOrReplaceTempView("sh_docs")
     val n = spark.sql(

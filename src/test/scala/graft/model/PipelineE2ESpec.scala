@@ -3,6 +3,7 @@ package graft.model
 import graft.SparkSpec
 import graft.ai.{DeterministicRubricScorer, DictionaryTranslator}
 import graft.core.{PipelineConfig, TableStore}
+import graft.core.TableStoreFixtures._
 import graft.pipeline.{Pipeline, Stage}
 import graft.quality._
 import graft.semantic.{Dimension, Measure, MetricJoin, MetricView}
@@ -272,45 +273,13 @@ class PipelineE2ESpec extends SparkSpec {
     assert(runner.failedRuns.size == 1)
   }
 
-  test("batch landing recovers a table whose catalog entry was lost") {
-    val config = freshConfig()
-    val store = new TableStore(spark, config)
-    try {
-      val df0 = Seq((1L, "a"), (2L, "b")).toDF("id", "s")
-        .withColumn("ingest_batch", lit(0L))
-      store.saveBatchPartition(df0, "fact", "recov", "ingest_batch")
-      assert(store.load("fact", "recov").count() == 2)
-
-      // simulate a JVM restart with an in-memory metastore: catalog entry
-      // gone, warehouse directory intact (stash files, drop, restore)
-      val wh = spark.conf.get("spark.sql.warehouse.dir")
-        .stripPrefix("file:")
-      val dbDir = s"${config.catalog}_${config.schema}".toLowerCase + ".db"
-      val loc = java.nio.file.Paths.get(wh, dbDir, "fact_recov")
-      val stash = java.nio.file.Files.createTempDirectory("graft-stash")
-        .resolve("fact_recov")
-      org.apache.commons.io.FileUtils.copyDirectory(loc.toFile, stash.toFile)
-      spark.sql(s"DROP TABLE ${store.fqn("fact", "recov")}")
-      org.apache.commons.io.FileUtils.copyDirectory(stash.toFile, loc.toFile)
-
-      val df1 = Seq((3L, "c")).toDF("id", "s")
-        .withColumn("ingest_batch", lit(1L))
-      store.saveBatchPartition(df1, "fact", "recov", "ingest_batch")
-      val got = store.load("fact", "recov")
-      assert(got.count() == 3, "batch 0 preserved + batch 1 landed")
-      // replaying batch 1 stays idempotent through the recovered table
-      store.saveBatchPartition(df1, "fact", "recov", "ingest_batch")
-      assert(store.load("fact", "recov").count() == 3)
-    } finally store.dropAll()
-  }
-
   test("raw layer registers as queryable raw_* views (S7 catalog face)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-raw").toString
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/things.csv"), "id,name\n1,alpha\n2,beta\n")
     val store = new TableStore(spark, freshConfig())
     try {
-      val views = store.registerRaw(dir)
+      val views = graft.ingest.RawCatalog.register(spark, dir)
       assert(views == Seq("raw_things"))
       assert(spark.sql("SELECT count(*) FROM raw_things").head().getLong(0) == 2)
     } finally store.dropAll()

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * (1) a PLANTED crowding corpus (boilerplate-identical text — every
   * signature lands in the same buckets, volume ~n² against an O(n)
   * budget) FAILS the preflight, and the error names the hot block
-  * (the [[BlockingBudget.blockProfile]] attribution — the operator
+  * (the [[BlockingReference.blockProfile]] attribution — the operator
   * tells you WHICH key went hot, not just that one did);
   * (2) a benign corpus PASSES with the spec-calibrated factor and
   * returns the identical result as the unguarded call;
@@ -39,10 +39,10 @@ import org.apache.spark.sql.functions._
 class BlockingPreflightSpec extends SparkSpec {
 
   import spark.implicits._
-  import org.apache.spark.sql.graftbridge.Bridge
+  import org.apache.spark.sql.graftbridge.SpecBridge
 
   private def assertCacheEmpty(clue: String): Unit =
-    assert(Bridge.cacheIsEmpty(spark), clue)
+    assert(SpecBridge.cacheIsEmpty(spark), clue)
 
   /** ~n² crowding: every doc is the same boilerplate text, so every
     * signature/fingerprint/prefix collides. The drift mode the
@@ -93,7 +93,7 @@ class BlockingPreflightSpec extends SparkSpec {
       maxPairFactor = Some(4.0))
     // contract point (4): the passing guard left the banding cache the
     // returned join reads — documented, caller-released
-    assert(!Bridge.cacheIsEmpty(spark),
+    assert(!SpecBridge.cacheIsEmpty(spark),
       "a passing guarded call must leave the shared banding cache for " +
         "the returned join to read")
     val plain = TextDedup.minHashLshPairs(benign(200), "doc_id", "text")
@@ -397,7 +397,7 @@ class BlockingPreflightSpec extends SparkSpec {
       when(col("id") < 60, lit("hot"))
         .when(col("id") < 80, concat(lit("b"), (col("id") % 5).cast("string")))
         .otherwise(lit(null)).as("k"))
-    val general = BlockingBudget.candidatePairVolume(
+    val general = BlockingReference.candidatePairVolume(
       frame, col("k"), frame, col("k"))
     assert(general == 60L * 60 + 5L * (4L * 4)) // 3620
     // preflightSelf reports the same volume in its failure message

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * dominates at these sizes; see `factor`'s history note — the pair
   * volume was growing ~118× per 10×). This spec freezes the real cost
   * model: the blocked join's candidate-pair volume
-  * ([[BlockingBudget.candidatePairVolume]]) must stay within
+  * ([[BlockingReference.candidatePairVolume]]) must stay within
   * `factor`·|documents| on the harness tiers, and a planted degenerate
   * prefix must TRIP the same check — proving the invariant detects the
   * failure mode it exists for, not just that today's data is friendly.
@@ -44,7 +44,7 @@ class FuzzyBlockingBudgetSpec extends SparkSpec {
     val batch = titles.filter(col("doc_id") % 10 === 0)
       .select(concat(substring(col("title"), 1, 14),
         substring(col("title"), 16, 30)).as("q_title"))
-    val vol = BlockingBudget.candidatePairVolume(
+    val vol = BlockingReference.candidatePairVolume(
       batch, substring(col("q_title"), 1, 14),
       titles, substring(col("title"), 1, 14))
     (vol, titles.count())
@@ -55,7 +55,7 @@ class FuzzyBlockingBudgetSpec extends SparkSpec {
     info(f"sf0.1: volume $vol over n=$n -> measured factor ${vol.toDouble / n}%.2f")
     assert(vol <= factor * n,
       s"fz1 candidate-pair volume $vol exceeds budget ${factor}·$n — " +
-        "the blocking prefix has degraded (see BlockingBudget.blockProfile " +
+        "the blocking prefix has degraded (see BlockingReference.blockProfile " +
         "for the hot blocks)")
   }
 
@@ -81,7 +81,7 @@ class FuzzyBlockingBudgetSpec extends SparkSpec {
         .as("title"))
     val batch = titles.filter(col("doc_id") % 10 === 0)
       .select(col("title").as("q_title"))
-    val vol = BlockingBudget.candidatePairVolume(
+    val vol = BlockingReference.candidatePairVolume(
       batch, substring(col("q_title"), 1, 14),
       titles, substring(col("title"), 1, 14))
     assert(vol == (n / 10L) * n, s"planted degenerate volume: $vol")
@@ -94,7 +94,7 @@ class FuzzyBlockingBudgetSpec extends SparkSpec {
     import spark.implicits._
     val left = Seq("aa", "aa", "ab", null).toDF("k")
     val right = Seq("aa", "ab", "ab", "zz", null).toDF("k")
-    val profDf = BlockingBudget.blockProfile(
+    val profDf = BlockingReference.blockProfile(
       left, col("k"), right, col("k"))
     // pairs is DOUBLE by design: a >3e9-row degenerate block would make
     // a long n·n throw under ANSI (Spark 4 default) or wrap — fail the
@@ -108,7 +108,7 @@ class FuzzyBlockingBudgetSpec extends SparkSpec {
     // join audited by this tool)
     assert(prof.toSet == Set(("aa", 2L, 1L, 2.0), ("ab", 1L, 2L, 2.0)))
     assert(prof.head._4 == 2.0)
-    assert(BlockingBudget.candidatePairVolume(
+    assert(BlockingReference.candidatePairVolume(
       left, col("k"), right, col("k")) == 4L)
   }
 }

@@ -4,8 +4,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Crash-injection property over the FOUR bucketed index savers (LSH,
-  * IVF, semantic, BM25 postings), via the [[graft.core.BuildSteps]]
+/** Crash-injection property over the THREE bucketed index savers (LSH,
+  * IVF, semantic), via the [[graft.core.BuildSteps]]
   * seam: a crash injected before EVERY mutating step of a rebuild over
   * an existing complete index must leave the on-disk state in exactly
   * one of two readable conditions —
@@ -133,21 +133,6 @@ class IndexCrashPropertySpec extends SparkSpec {
       corpusA, corpusB)
   }
 
-  test("bm25 saver: every crash window loads loudly or serves the old " +
-      "index; marker dropped first, written last") {
-    val corpusA = docs.limit(30)
-    val corpusB = docs.limit(35)
-    val queries = docs.limit(3)
-      .select(col("doc_id").as("qid"), col("text").as("qtext"))
-    checkFamily(Family(
-      "bm25", "bm25:drop_meta", "bm25:write_meta",
-      c => Retrieval.savePostingsIndexBucketed(c, "doc_id", "text",
-        "graft_crash_bm25", nBuckets = 2),
-      () => canon(Retrieval.bm25TopKFromIndex(spark, "graft_crash_bm25",
-        queries, "qid", "qtext", k = 3))),
-      corpusA, corpusB)
-  }
-
   test("ivf saver: every crash window loads loudly or serves the old " +
       "index; marker dropped first, written last") {
     val corpusA = emb.limit(60)
@@ -159,7 +144,7 @@ class IndexCrashPropertySpec extends SparkSpec {
         Similarity.ivfIndex(c, "vec_id", "embedding", nCentroids = 4),
         "graft_crash_ivf", nBuckets = 2),
       () => canon(Similarity.ivfTopK(
-        Similarity.loadIvfIndexFromTables(spark, "graft_crash_ivf"),
+        IvfTables.load(spark, "graft_crash_ivf"),
         queries, "vec_id", "embedding", k = 3, nProbe = 2))),
       corpusA, corpusB)
   }

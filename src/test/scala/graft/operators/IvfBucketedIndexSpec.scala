@@ -25,7 +25,7 @@ class IvfBucketedIndexSpec extends SparkSpec {
       "plain index, with the corpus-side exchange ELIDED") {
     val plain = Similarity.ivfIndex(emb, "vec_id", "embedding", nCentroids = 8)
     Similarity.saveIvfIndexBucketed(plain, "graft_ivfb_spec", nBuckets = 4)
-    val bucketed = Similarity.loadIvfIndexFromTables(spark, "graft_ivfb_spec")
+    val bucketed = IvfTables.load(spark, "graft_ivfb_spec")
 
     // plan shape FIRST, on unexecuted frames: an executed
     // AdaptiveSparkPlanExec prints BOTH its Final and Initial plans, so
@@ -58,7 +58,7 @@ class IvfBucketedIndexSpec extends SparkSpec {
       "routes, and the equi-join route also rides the buckets") {
     val idx = Similarity.ivfIndex(emb, "vec_id", "embedding", nCentroids = 8)
     Similarity.saveIvfIndexBucketed(idx, "graft_ivfb_spec2", nBuckets = 4)
-    val loaded = Similarity.loadIvfIndexFromTables(spark, "graft_ivfb_spec2")
+    val loaded = IvfTables.load(spark, "graft_ivfb_spec2")
     val qs = emb.filter($"vec_id" < 8)
     def run(b: Boolean) = Similarity.ivfTopK(loaded, qs, "vec_id",
       "embedding", k = 5, nProbe = 4, broadcastQueries = Some(b))
@@ -112,7 +112,7 @@ class IvfBucketedIndexSpec extends SparkSpec {
     Similarity.saveIvfIndexBucketed(idx8, "graft_ivfb_spec3", nBuckets = 4)
     val idx4 = Similarity.ivfIndex(emb, "vec_id", "embedding", nCentroids = 4)
     Similarity.saveIvfIndexBucketed(idx4, "graft_ivfb_spec3", nBuckets = 2)
-    val reloaded = Similarity.loadIvfIndexFromTables(spark, "graft_ivfb_spec3")
+    val reloaded = IvfTables.load(spark, "graft_ivfb_spec3")
     assert(reloaded.centroids.length == 4)
     idx4.centroids.zip(reloaded.centroids).foreach { case (a, b) =>
       assert(a.toSeq == b.toSeq)

@@ -38,7 +38,7 @@ class IvfPersistSpec extends SparkSpec {
     val idx = Similarity.ivfIndex(emb, "vec_id", "embedding", nCentroids = 8)
     val p = prefix
     Similarity.saveIvfIndexBucketed(idx, p, nBuckets = 4)
-    val loaded = Similarity.loadIvfIndexFromTables(spark, p)
+    val loaded = IvfTables.load(spark, p)
     assert(loaded.centroids.length == idx.centroids.length)
     idx.centroids.zip(loaded.centroids).foreach { case (a, b) =>
       assert(a.toSeq == b.toSeq) // parquet DOUBLE roundtrip is bit-exact
@@ -73,15 +73,16 @@ class IvfPersistSpec extends SparkSpec {
       Similarity.loadIvfIndex(goodC.filter(lit(false)), goodV)
     }
     assert(e4.getMessage.contains("empty"), e4.getMessage)
-    // the table loader refuses a missing table and a wrong column set
+    // the table read refuses a missing table and a wrong column set
     val e5 = intercept[IllegalArgumentException] {
-      Similarity.loadIvfIndexFromTables(spark, p + "_absent")
+      graft.core.IndexTables.read(spark, p + "_absent", "ivf", "centroids",
+        "centroid_id", "centroid")
     }
     assert(e5.getMessage.contains("does not exist"), e5.getMessage)
     goodV.withColumn("extra", lit(1)).createOrReplaceTempView(p + "x_vectors")
     goodC.createOrReplaceTempView(p + "x_centroids")
     val e6 = intercept[IllegalArgumentException] {
-      Similarity.loadIvfIndexFromTables(spark, p + "x")
+      IvfTables.load(spark, p + "x")
     }
     assert(e6.getMessage.contains("vectors table"), e6.getMessage)
     Seq("x_vectors", "x_centroids").foreach(t => spark.catalog.dropTempView(p + t))

@@ -29,10 +29,10 @@ import org.apache.spark.sql.functions._
   */
 class IvfPreflightSpec extends SparkSpec {
 
-  import org.apache.spark.sql.graftbridge.Bridge
+  import org.apache.spark.sql.graftbridge.SpecBridge
 
   private def assertCacheEmpty(clue: String): Unit =
-    assert(Bridge.cacheIsEmpty(spark), clue)
+    assert(SpecBridge.cacheIsEmpty(spark), clue)
 
   /** The broken-encoder corpus: every embedding is the same vector, so
     * k-means trains C identical centroids and the (distance, index)

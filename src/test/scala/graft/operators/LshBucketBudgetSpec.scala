@@ -41,7 +41,7 @@ class LshBucketBudgetSpec extends SparkSpec {
       docs, "doc_id", "text", n = 5, numHashes = 32)
     val banded = TextDedup.bandedKeys(sigs, bands = 16, r = 2)
       .select(struct(col("band"), col("bh")).as("k"))
-    (BlockingBudget.candidatePairVolume(
+    (BlockingReference.candidatePairVolume(
       banded, col("k"), banded, col("k")),
       banded.count())
   }
@@ -52,7 +52,7 @@ class LshBucketBudgetSpec extends SparkSpec {
       f"factor ${vol.toDouble / rows}%.2f")
     assert(vol <= factor * rows,
       s"LSH bucket volume $vol exceeds budget ${factor}·$rows — buckets " +
-        "are crowding (BlockingBudget.blockProfile names the hot ones)")
+        "are crowding (BlockingReference.blockProfile names the hot ones)")
   }
 
   test("d2's LSH buckets stay inside the crowding budget at sf1") {
@@ -83,7 +83,7 @@ class LshBucketBudgetSpec extends SparkSpec {
     val banded = TextDedup.simHash128BandKeys(
       TextDedup.simHashes128(docs, "doc_id", "text"))
       .select(struct(col("band"), col("bv")).as("k"))
-    (BlockingBudget.candidatePairVolume(banded, col("k"), banded, col("k")),
+    (BlockingReference.candidatePairVolume(banded, col("k"), banded, col("k")),
       banded.count())
   }
 
@@ -118,7 +118,7 @@ class LshBucketBudgetSpec extends SparkSpec {
   private def shingleVolume(dir: String): (Long, Long) = {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val idx = TextDedup.shingleIndex(docs, "doc_id", "text", n = 5)
-    (BlockingBudget.candidatePairVolume(idx, col("sh"), idx, col("sh")),
+    (BlockingReference.candidatePairVolume(idx, col("sh"), idx, col("sh")),
       idx.count())
   }
 
@@ -158,7 +158,7 @@ class LshBucketBudgetSpec extends SparkSpec {
       docs, "doc_id", "text", n = 5, numHashes = 32)
     val banded = TextDedup.bandedKeys(sigs, bands = 16, r = 2)
       .select(struct(col("band"), col("bh")).as("k"))
-    val vol = BlockingBudget.candidatePairVolume(
+    val vol = BlockingReference.candidatePairVolume(
       banded, col("k"), banded, col("k"))
     val rows = banded.count()
     assert(vol > factor * rows,

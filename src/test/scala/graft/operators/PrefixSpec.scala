@@ -81,8 +81,8 @@ class PrefixSpec extends SparkSpec {
     val expect = df.withColumn("r", row_number().over(w).cast("bigint"))
       .select("grp", "id", "r").as[(String, Long, Long)].collect().toSet
     for (bands <- Seq(2, 16)) {
-      val got = Prefix.rankByScore(df, "grp", col("score"), Seq(col("id")),
-        "r", bands)
+      val got = Prefix.rankWithTotals(df, "grp", col("score"),
+        Seq(col("id")), "r", bands)
         .select("grp", "id", "r").as[(String, Long, Long)].collect().toSet
       assert(got == expect, s"bands=$bands: diff=${(got -- expect).take(5)}")
     }

@@ -12,8 +12,7 @@ class RangeJoinSpec extends SparkSpec {
 
   test("bucketized pairs == naive inequality join on the corpus") {
     val gapS = 21600L // 6h — the harness events are sparse per user
-    val events = graft.streaming.EventStreams.normalize(
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet"))
+    val events = graft.queries.QueryUtil.events(spark, "/root/testdata/sf0.001")
       .filter($"event_type" === "error")
     val bucketized = RangeJoin.pairsWithinGap(events, "user_id", "event_id",
       "ts", maxGapSeconds = gapS)

@@ -92,38 +92,6 @@ class RetrievalPropertySpec extends SparkSpec {
     })
   }
 
-  test("bm25TopKFromIndex == bm25TopK on arbitrary corpora (index fidelity)") {
-    // unicode + empty tokens: the stored postings/meta roundtrip must not
-    // depend on the corpus being well-behaved ASCII prose
-    val ivocab = Vector("alpha", "beta", "Σίγμα", "делта", "")
-    val idocsGen = Gen.listOfN(6, Gen.listOfN(4, Gen.oneOf(ivocab))
-      .map(_.mkString(" ")))
-      .map(_.zipWithIndex.map { case (t, i) => (i.toLong, t) })
-    val iqueriesGen = Gen.listOfN(2, Gen.listOfN(2, Gen.oneOf(ivocab))
-      .map(_.mkString(" ")))
-      .map(_.zipWithIndex.map { case (t, i) => (100L + i, t) })
-    val run = new java.util.concurrent.atomic.AtomicInteger(0)
-    val p = SCTest.Parameters.default.withMinSuccessfulTests(3)
-    val prop = Prop.forAll(idocsGen, iqueriesGen) { (docs, qs) =>
-      val prefix = s"graft_bm25_prop_${run.incrementAndGet()}"
-      val docsDf = docs.toDF("doc_id", "text")
-      val qsDf = qs.toDF("qid", "qtext")
-      Retrieval.savePostingsIndexBucketed(docsDf, "doc_id", "text",
-        prefix, nBuckets = 2)
-      try {
-        val fromText = Retrieval.bm25TopK(docsDf, qsDf,
-          "doc_id", "text", "qid", "qtext", k = 3)
-          .as[(Long, Long, Int, Double)].collect().toSet
-        val fromIndex = Retrieval.bm25TopKFromIndex(spark, prefix, qsDf,
-          "qid", "qtext", k = 3)
-          .as[(Long, Long, Int, Double)].collect().toSet
-        fromIndex == fromText
-      } finally Seq("meta", "postings", "doclen").foreach(t =>
-        spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
-    }
-    assert(SCTest.check(p, prop).passed)
-  }
-
   test("evalTopK = first-relevant-rank / MRR-convention reference") {
     val resultsGen = Gen.listOfN(12, for {
       q <- Gen.choose(0L, 3L); d <- Gen.choose(0L, 9L); r <- Gen.choose(1, 5)

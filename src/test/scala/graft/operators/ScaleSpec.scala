@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.core.{PipelineConfig, TableStore}
+import graft.core.TableStoreFixtures._
 import org.apache.spark.sql.functions._
 
 /** The 100TB levers, regression-checked: salting preserves results,

@@ -45,16 +45,16 @@ class SketchPropertySpec extends SparkSpec {
       Gen.zip(Gen.oneOf("a", "b"), Gen.choose(0L, 30L)))
       .suchThat(rs => rs.exists(_._1 == "a") && rs.exists(_._1 == "b"))
     check(Prop.forAll(rowsGen) { rows =>
-      val sk = ThetaSketches
+      val sk = ThetaReference
         .groupSketches(rows.toDF("g", "k"), "g", "k")
       val setA = rows.collect { case ("a", k) => k }.toSet
       val setB = rows.collect { case ("b", k) => k }.toSet
       def exact(d: Double) = math.round(d)
       exact(sk("a").getEstimate) == setA.size.toLong &&
         exact(sk("b").getEstimate) == setB.size.toLong &&
-        exact(ThetaSketches.unionEstimate(sk("a"), sk("b"))) ==
+        exact(ThetaReference.unionEstimate(sk("a"), sk("b"))) ==
           (setA | setB).size.toLong &&
-        exact(ThetaSketches.intersectionEstimate(sk("a"), sk("b"))) ==
+        exact(ThetaReference.intersectionEstimate(sk("a"), sk("b"))) ==
           (setA & setB).size.toLong
     })
   }

@@ -29,12 +29,12 @@ class ThetaSpec extends SparkSpec {
   test("edge shapes: empty input -> no groups; null keys don't count; " +
     "null group sketches like any other") {
     val empty = spark.range(0).selectExpr("'g' AS grp", "id AS k")
-    assert(ThetaSketches.groupSketches(empty, "grp", "k").isEmpty)
+    assert(ThetaReference.groupSketches(empty, "grp", "k").isEmpty)
     // 3 real keys + nulls in both positions
     val df = Seq(("a", Some(1L)), ("a", Some(2L)), ("a", None),
       (null.asInstanceOf[String], Some(7L)), (null, Some(8L)))
       .toDF("grp", "k")
-    val sk = ThetaSketches.groupSketches(df, "grp", "k")
+    val sk = ThetaReference.groupSketches(df, "grp", "k")
     assert(sk("a").getEstimate == 2.0, "null key must not count")
     assert(sk(null).getEstimate == 2.0, "null group must sketch normally")
   }
@@ -43,11 +43,11 @@ class ThetaSpec extends SparkSpec {
     // A = [0, 1000), B = [600, 1600) → |A∩B| = 400, |A∪B| = 1600
     val df = ((0L until 1000L).map(("a", _)) ++
       (600L until 1600L).map(("b", _))).toDF("grp", "k")
-    val sk = ThetaSketches.groupSketches(df, "grp", "k")
+    val sk = ThetaReference.groupSketches(df, "grp", "k")
     assert(sk("a").getEstimate == 1000.0)
     assert(sk("b").getEstimate == 1000.0)
-    assert(ThetaSketches.intersectionEstimate(sk("a"), sk("b")) == 400.0)
-    assert(ThetaSketches.unionEstimate(sk("a"), sk("b")) == 1600.0)
+    assert(ThetaReference.intersectionEstimate(sk("a"), sk("b")) == 400.0)
+    assert(ThetaReference.unionEstimate(sk("a"), sk("b")) == 1600.0)
   }
 
   test("union lgK is a floor: a default-12 union of lgK-16 sketches past " +
@@ -60,12 +60,12 @@ class ThetaSpec extends SparkSpec {
     // and the in-plan scalar expression
     val df = ((0L until 6000L).map(("a", _)) ++
       (4000L until 10000L).map(("b", _))).toDF("grp", "k")
-    val sk16 = ThetaSketches.groupSketches(df, "grp", "k", lgK = 16)
-    assert(ThetaSketches.unionEstimate(sk16("a"), sk16("b")) == 10000.0)
+    val sk16 = ThetaReference.groupSketches(df, "grp", "k", lgK = 16)
+    assert(ThetaReference.unionEstimate(sk16("a"), sk16("b")) == 10000.0)
     val skF = ThetaSketches.groupSketchFrame(df, "grp", "k", lgK = 16)
+    SparkSpec.injectExtensions(spark)
     val inPlan = skF.as("x").join(skF.as("y"), col("x.grp") < col("y.grp"))
-      .select(ThetaSketches.thetaUnionEstimate(
-        col("x.theta"), col("y.theta")).as("uni"))
+      .select(expr("theta_union_estimate(x.theta, y.theta)").as("uni"))
       .as[Double].collect()
     assert(inPlan.toSeq == Seq(10000.0))
     // the floor itself: a caller's larger lgK is respected, the cap holds
@@ -77,17 +77,17 @@ class ThetaSpec extends SparkSpec {
     assert(graft.operators.ThetaSetEstimates.effectiveLgK(Long.MaxValue, 12)
       == 26)
     // the floor must not quietly clamp a typo'd request: the driver
-    // helper validates the range like the Column form does
+    // helper validates the range like the SQL form does
     val bad = intercept[IllegalArgumentException](
-      ThetaSketches.unionEstimate(sk16("a"), sk16("b"), lgK = 30))
+      ThetaReference.unionEstimate(sk16("a"), sk16("b"), lgK = 30))
     assert(bad.getMessage.contains("lgK out of range"), bad.getMessage)
   }
 
   test("estimates are partitioning-invariant (merge order can't matter)") {
     val df = (0L until 3000L).map(("g", _)).toDF("grp", "k")
-    val e1 = ThetaSketches.groupSketches(df.repartition(1), "grp", "k")("g")
+    val e1 = ThetaReference.groupSketches(df.repartition(1), "grp", "k")("g")
       .getEstimate
-    val e32 = ThetaSketches.groupSketches(df.repartition(32), "grp", "k")("g")
+    val e32 = ThetaReference.groupSketches(df.repartition(32), "grp", "k")("g")
       .getEstimate
     assert(e1 == e32)
     assert(e1 == 3000.0) // still in exact mode at lgK=12
@@ -104,15 +104,15 @@ class ThetaSpec extends SparkSpec {
     val df = spark.range(1000000L).selectExpr("'a' AS grp", "id AS k")
       .union(spark.range(700000L, 1700000L)
         .selectExpr("'b' AS grp", "id AS k"))
-    val sk = ThetaSketches.groupSketches(df, "grp", "k", lgK = 16)
+    val sk = ThetaReference.groupSketches(df, "grp", "k", lgK = 16)
     assert(sk("a").isEstimationMode && sk("b").isEstimationMode,
       "1M distinct at lgK=16 must be past exact mode")
     assert(math.abs(sk("a").getEstimate - 1e6) <= 0.02 * 1e6)
     assert(math.abs(sk("b").getEstimate - 1e6) <= 0.02 * 1e6)
-    val inter = ThetaSketches.intersectionEstimate(sk("a"), sk("b"))
+    val inter = ThetaReference.intersectionEstimate(sk("a"), sk("b"))
     assert(math.abs(inter - 300000.0) <= 0.05 * 300000.0,
       s"intersection estimate $inter vs 300000")
-    val uni = ThetaSketches.unionEstimate(sk("a"), sk("b"), lgK = 16)
+    val uni = ThetaReference.unionEstimate(sk("a"), sk("b"), lgK = 16)
     assert(math.abs(uni - 1700000.0) <= 0.02 * 1700000.0,
       s"union estimate $uni vs 1700000")
   }
@@ -130,10 +130,10 @@ class ThetaSpec extends SparkSpec {
         .wrapCompactSketch(org.apache.datasketches.memory.Memory.wrap(
           r.getAs[Array[Byte]](1)))
     }.toMap
-    assert(ThetaSketches.intersectionEstimate(loaded("a"), loaded("b")) == 400.0)
-    assert(ThetaSketches.unionEstimate(loaded("a"), loaded("b")) == 1600.0)
+    assert(ThetaReference.intersectionEstimate(loaded("a"), loaded("b")) == 400.0)
+    assert(ThetaReference.unionEstimate(loaded("a"), loaded("b")) == 1600.0)
     // blobs are canonical (ordered compact form): reload == fresh build
-    val fresh = ThetaSketches.groupSketches(df, "grp", "k")
+    val fresh = ThetaReference.groupSketches(df, "grp", "k")
     assert(loaded("a").toByteArray.toSeq == fresh("a").toByteArray.toSeq)
   }
 
@@ -144,22 +144,20 @@ class ThetaSpec extends SparkSpec {
     val df = ((0L until 1000L).map(("a", _)) ++
       (600L until 1600L).map(("b", _))).toDF("grp", "k")
     val sk = ThetaSketches.groupSketchFrame(df, "grp", "k")
+    SparkSpec.injectExtensions(spark)
     val out = sk.as("x").join(sk.as("y"), col("x.grp") < col("y.grp"))
       .select(
         ThetaSketches.thetaIntersectEstimate(
           col("x.theta"), col("y.theta")).as("inter"),
-        ThetaSketches.thetaUnionEstimate(
-          col("x.theta"), col("y.theta")).as("uni"),
-        ThetaSketches.thetaDifferenceEstimate(
-          col("x.theta"), col("y.theta")).as("diff"))
+        expr("theta_union_estimate(x.theta, y.theta)").as("uni"),
+        expr("theta_difference_estimate(x.theta, y.theta)").as("diff"))
       .as[(Double, Double, Double)].collect()
     assert(out.toSeq == Seq((400.0, 1600.0, 600.0)))
   }
 
   test("SQL-only path: theta_sketch_agg through the scalar set ops in " +
     "one statement") {
-    ThetaSketchAgg.register(spark)
-    ThetaSetEstimate.register(spark)
+    SparkSpec.injectExtensions(spark)
     ((0L until 1000L).map(("a", _)) ++ (600L until 1600L).map(("b", _)))
       .toDF("grp", "k").createOrReplaceTempView("theta_sql_in")
     val rows = spark.sql(
@@ -181,16 +179,16 @@ class ThetaSpec extends SparkSpec {
     val r = sk.select(ThetaSketches.thetaIntersectEstimate(
       col("theta"), col("missing"))).collect()
     assert(r.forall(_.isNullAt(0)), "null sketch must estimate null")
+    SparkSpec.injectExtensions(spark)
     val ex = intercept[Exception] {
-      sk.select(ThetaSketches.thetaUnionEstimate(
-        col("theta"), col("grp"))).collect()
+      sk.select(expr("theta_union_estimate(theta, grp)")).collect()
     }
     assert(ex.getMessage.contains("theta_union_estimate"), ex.getMessage)
   }
 
   test("harness events: sketch overlap == exact overlap in exact mode") {
     val e = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    val sk = ThetaSketches.groupSketches(e, "event_type", "user_id")
+    val sk = ThetaReference.groupSketches(e, "event_type", "user_id")
     val du = e.select($"event_type", $"user_id").distinct()
     val exact = du.as("a")
       .join(du.as("b"), col("a.user_id") === col("b.user_id")
@@ -200,7 +198,7 @@ class ThetaSpec extends SparkSpec {
       .as[(String, String, Long)].collect()
     assert(exact.nonEmpty)
     exact.foreach { case (ta, tb, n) =>
-      assert(ThetaSketches.intersectionEstimate(sk(ta), sk(tb)) == n.toDouble,
+      assert(ThetaReference.intersectionEstimate(sk(ta), sk(tb)) == n.toDouble,
         s"$ta ∩ $tb")
     }
   }

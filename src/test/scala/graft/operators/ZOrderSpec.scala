@@ -6,6 +6,16 @@ import org.apache.spark.sql.functions._
 class ZOrderSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The zo2 write: `df` clustered on (x, y) at `path`, then its per-file
+    * stats.
+    */
+  private def writeClustered(df: org.apache.spark.sql.DataFrame,
+                             path: String, numFiles: Int, bits: Int) = {
+    ZOrder.cluster(df, "x", "y", numFiles, bits)
+      .write.mode("overwrite").parquet(path)
+    ZOrder.fileStats(spark, path, "x", "y")
+  }
+
   test("column zkey matches the reference interleave on random inputs") {
     val rnd = new scala.util.Random(42)
     val cases = Seq.fill(200)((rnd.nextLong().abs % 65536,
@@ -58,8 +68,7 @@ class ZOrderSpec extends SparkSpec {
         .groupBy().agg(count(lit(1)), sum($"x"), sum($"y"))
         .as[(Long, Long, Long)].head()
 
-      val zStats = ZOrder.writeClustered(df, "x", "y", s"$dir/z",
-        numFiles = 16, bits = 10)
+      val zStats = writeClustered(df, s"$dir/z", numFiles = 16, bits = 10)
       df.repartition(16).write.parquet(s"$dir/flat")
       val flatStats = ZOrder.fileStats(spark, s"$dir/flat", "x", "y")
 
@@ -97,8 +106,7 @@ class ZOrderSpec extends SparkSpec {
       val dir = java.nio.file.Files.createTempDirectory("graft-zprop").toString
       try {
         val df = rows.toDF("id", "x", "y")
-        val stats = ZOrder.writeClustered(df, "x", "y", s"$dir/z",
-          numFiles = 4, bits = 6)
+        val stats = writeClustered(df, s"$dir/z", numFiles = 4, bits = 6)
         val nFiles = stats.count()
         boxes.forall { case (xLo, xHi, yLo, yHi) =>
           val (got, files) = ZOrder.readPruned(stats, "x", "y",

@@ -80,17 +80,17 @@ class CacheLeakSpec extends SparkSpec {
 
   test("the signal trips: persist registers eagerly, unpersist clears " +
     "(the planted-leak proof, and the proof the check is plan-time)") {
-    import org.apache.spark.sql.graftbridge.Bridge
+    import org.apache.spark.sql.graftbridge.SpecBridge
     spark.catalog.clearCache()
-    assert(Bridge.cacheIsEmpty(spark))
+    assert(SpecBridge.cacheIsEmpty(spark))
     val df = spark.range(16).toDF("x")
     df.persist()
     try
       // no action ran: eager REGISTRATION is what makes the sweep able
       // to ride the construction pass without executing 175 queries
-      assert(!Bridge.cacheIsEmpty(spark),
+      assert(!SpecBridge.cacheIsEmpty(spark),
         "persist must register in the CacheManager before any action")
     finally df.unpersist()
-    assert(Bridge.cacheIsEmpty(spark))
+    assert(SpecBridge.cacheIsEmpty(spark))
   }
 }

@@ -180,7 +180,7 @@ object CatalogPlans {
         spark.catalog.clearCache()
         val plan = q(spark, dir).queryExecution.executedPlan
         (n, plan,
-          !org.apache.spark.sql.graftbridge.Bridge.cacheIsEmpty(spark))
+          !org.apache.spark.sql.graftbridge.SpecBridge.cacheIsEmpty(spark))
       }
 
   def compute(spark: SparkSession, dir: String,

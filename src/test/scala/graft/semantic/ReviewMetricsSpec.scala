@@ -3,6 +3,7 @@ package graft.semantic
 import graft.SparkSpec
 import graft.ai.{DeterministicRubricScorer, DictionaryTranslator}
 import graft.core.{PipelineConfig, TableStore}
+import graft.core.TableStoreFixtures._
 import graft.model._
 
 /** The canonical reference semantic model over the fixture pipeline:

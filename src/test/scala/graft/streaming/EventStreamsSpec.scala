@@ -1,35 +1,39 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.core.{PipelineConfig, TableStore}
+import graft.queries.QueryUtil
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-/** Streaming semantics: streaming plans equal their batch-equivalent
-  * results; stateful sessionization matches the window-function oracle;
-  * the streaming fact ingest dedups keys exactly-once.
+/** Streaming semantics: the window operators' streaming plans equal their
+  * batch-equivalent results, and the watermark drops late data.
   */
 class EventStreamsSpec extends SparkSpec {
   import spark.implicits._
 
   private val sf = "/root/testdata/sf0.001"
 
-  private lazy val batchEvents = EventStreams.normalize(
-    spark.read.schema(EventStreams.eventsRawSchema)
-      .parquet(s"$sf/events.parquet"))
+  private lazy val batchEvents = QueryUtil.events(spark, sf)
+
+  /** The harness events file as a file-source stream, `ts` normalized
+    * like the batch frame.
+    */
+  private def eventStream(prefix: String): DataFrame = {
+    val dir = Files.createTempDirectory(prefix)
+    Files.copy(Paths.get(s"$sf/events.parquet"), dir.resolve("e.parquet"),
+      StandardCopyOption.REPLACE_EXISTING)
+    QueryUtil.normalizeTs(spark.readStream
+      .schema(spark.read.parquet(s"$sf/events.parquet").schema)
+      .parquet(dir.toString))
+  }
 
   test("streaming windowed counts == batch windowed counts") {
     val batch = EventStreams.windowedCounts(batchEvents)
       .collect().map(_.toSeq).toSet
 
     // file streams need a directory source
-    val dir = Files.createTempDirectory("graft-win-src")
-    Files.copy(Paths.get(s"$sf/events.parquet"), dir.resolve("e.parquet"),
-      StandardCopyOption.REPLACE_EXISTING)
-    val stream = EventStreams.normalize(
-      spark.readStream.schema(EventStreams.eventsRawSchema)
-        .parquet(dir.toString))
-    val q = EventStreams.windowedCounts(stream)
+    val q = EventStreams.windowedCounts(eventStream("graft-win-src"))
       .writeStream.outputMode("complete")
       .format("memory").queryName("win_out").start()
     try {
@@ -37,65 +41,6 @@ class EventStreamsSpec extends SparkSpec {
       val streamed = spark.table("win_out").collect().map(_.toSeq).toSet
       assert(streamed == batch)
       assert(batch.nonEmpty)
-    } finally q.stop()
-  }
-
-  test("stateful sessionization == batch window-function sessionization") {
-    implicit val s = spark
-    val evts = batchEvents
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-      .as[EventStreams.Event]
-    val stateful = EventStreams.sessionize(evts, gapSeconds = 1800)
-      .collect().map(x => x.user_id -> ((x.n_sessions, x.n_events))).toMap
-
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"user_id").orderBy($"ts", $"event_id")
-    val batch = batchEvents
-      .withColumn("prev_us", lag(unix_micros($"ts"), 1).over(w))
-      .withColumn("ns", when($"prev_us".isNull
-        || unix_micros($"ts") - $"prev_us" > 1800L * 1000000L, 1).otherwise(0))
-      .groupBy($"user_id")
-      .agg(sum($"ns").cast("int").as("n_sessions"),
-        count(lit(1)).as("n_events"))
-      .as[(Long, Int, Long)].collect()
-      .map(t => t._1 -> ((t._2, t._3))).toMap
-    assert(stateful == batch)
-    assert(batch.values.exists(_._1 > 1)) // multi-session users exist
-  }
-
-  test("stream-stream interval join == bucketized batch interval join") {
-    // batch scale-safe form
-    val purchases = batchEvents.filter($"event_type" === "purchase")
-      .select($"user_id", $"event_id".as("purchase_id"),
-        $"ts".as("purchase_ts"))
-    val clicks = batchEvents.filter($"event_type" === "click")
-      .select($"user_id", $"event_id".as("click_id"), $"ts".as("click_ts"))
-    val bucketized = graft.operators.RangeJoin.joinWithinGap(
-      purchases, clicks, "user_id", "purchase_id", "purchase_ts",
-      "click_id", "click_ts", maxGapSeconds = 21600L)
-      .select("purchase_id", "click_id").as[(Long, Long)].collect().toSet
-
-    // same semantics on the batch frame via the streaming expressions
-    val joined = EventStreams.attributionJoin(batchEvents)
-      .select("purchase_id", "click_id").as[(Long, Long)].collect().toSet
-    assert(joined == bucketized)
-    assert(bucketized.nonEmpty)
-
-    // and genuinely streaming: both sides from a stream source
-    val dir = Files.createTempDirectory("graft-ssj-src")
-    Files.copy(Paths.get(s"$sf/events.parquet"), dir.resolve("e.parquet"),
-      StandardCopyOption.REPLACE_EXISTING)
-    val stream = EventStreams.normalize(
-      spark.readStream.schema(EventStreams.eventsRawSchema)
-        .parquet(dir.toString))
-    val q = EventStreams.attributionJoin(stream)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("ssj_out").start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("ssj_out")
-        .select("purchase_id", "click_id").as[(Long, Long)].collect().toSet
-      assert(streamed == bucketized)
     } finally q.stop()
   }
 
@@ -152,13 +97,8 @@ class EventStreamsSpec extends SparkSpec {
     val batch = EventStreams.nationWindowedActivity(batchEvents,
       customer, nation).collect().map(_.toSeq).toSet
 
-    val dir = Files.createTempDirectory("graft-enrich-src")
-    Files.copy(Paths.get(s"$sf/events.parquet"), dir.resolve("e.parquet"),
-      StandardCopyOption.REPLACE_EXISTING)
-    val stream = EventStreams.normalize(
-      spark.readStream.schema(EventStreams.eventsRawSchema)
-        .parquet(dir.toString))
-    val q = EventStreams.nationWindowedActivity(stream, customer, nation)
+    val q = EventStreams.nationWindowedActivity(
+      eventStream("graft-enrich-src"), customer, nation)
       .writeStream.outputMode("complete")
       .format("memory").queryName("enrich_out").start()
     try {
@@ -167,81 +107,5 @@ class EventStreamsSpec extends SparkSpec {
       assert(streamed == batch)
       assert(batch.nonEmpty)
     } finally q.stop()
-  }
-
-  test("both ts generations stream through the probed schema + normalize") {
-    // Current generation: native µs NTZ — probe must return NTZ.
-    val cur = EventStreams.probeEventsSchema(spark, s"$sf/events.parquet")
-    assert(cur("ts").dataType ==
-      org.apache.spark.sql.types.TimestampNTZType)
-
-    // Legacy generation: TIMESTAMP(NANOS) files surface as LONG under the
-    // session's nanosAsLong flag — Spark cannot WRITE ns timestamps, so
-    // the fixture stores the ns count as a plain LONG column, which reads
-    // through the exact same probed-LONG + normalize path.
-    val legacyDir = Files.createTempDirectory("graft-legacy-src")
-    batchEvents
-      .withColumn("ts", expr("unix_micros(ts) * 1000L"))
-      .coalesce(1).write.mode("overwrite").parquet(legacyDir.toString)
-    val legacy = EventStreams.probeEventsSchema(spark, legacyDir.toString)
-    assert(legacy("ts").dataType == org.apache.spark.sql.types.LongType)
-
-    val config = PipelineConfig(catalog =
-      "lg" + java.util.UUID.randomUUID().toString.replace("-", "").take(8))
-    val store = new TableStore(spark, config)
-    try {
-      val ckpt = Files.createTempDirectory("graft-legacy-ckpt").toString
-      new EventStreams.StreamingFactIngest(spark, store, legacyDir.toString,
-        keyCol = "event_id", tsCol = "ts", checkpointDir = ckpt,
-        watermark = "100 days").start().awaitTermination()
-      val got = store.load("fact", "events")
-      // normalized to µs TIMESTAMP, value-equal to the current generation
-      assert(got.schema("ts").dataType ==
-        org.apache.spark.sql.types.TimestampType)
-      val want = batchEvents.select($"event_id", $"ts").collect()
-        .map(r => r.getLong(0) -> r.getTimestamp(1)).toMap
-      val streamed = got.select($"event_id", $"ts").collect()
-        .map(r => r.getLong(0) -> r.getTimestamp(1)).toMap
-      assert(streamed == want)
-    } finally store.dropAll()
-
-    // empty landing zone: probe falls back to the current-generation schema
-    val empty = Files.createTempDirectory("graft-empty-src")
-    assert(EventStreams.probeEventsSchema(spark, empty.toString) ==
-      EventStreams.eventsRawSchema)
-  }
-
-  test("streaming fact ingest dedups duplicate keys exactly-once") {
-    val dir = Files.createTempDirectory("graft-stream-src")
-    // the same file twice → every key duplicated across micro-batch input
-    Files.copy(Paths.get(s"$sf/events.parquet"), dir.resolve("a.parquet"),
-      StandardCopyOption.REPLACE_EXISTING)
-    Files.copy(Paths.get(s"$sf/events.parquet"), dir.resolve("b.parquet"),
-      StandardCopyOption.REPLACE_EXISTING)
-
-    val config = PipelineConfig(catalog =
-      "st" + java.util.UUID.randomUUID().toString.replace("-", "").take(8))
-    val store = new TableStore(spark, config)
-    try {
-      val ckpt = Files.createTempDirectory("graft-ckpt").toString
-      val ingest = new EventStreams.StreamingFactIngest(spark, store, dir.toString,
-        keyCol = "event_id", tsCol = "ts", checkpointDir = ckpt,
-        watermark = "100 days")
-      val q = ingest.start()
-      q.awaitTermination()
-      val n = spark.read.schema(EventStreams.eventsRawSchema)
-        .parquet(s"$sf/events.parquet").count()
-      val got = store.load("fact", "events")
-      assert(got.count() == n) // 2n input rows → n after keyed dedup
-      assert(got.select("event_id").distinct().count() == n)
-
-      // restart with the SAME checkpoint: nothing re-ingests (idempotence
-      // across restarts hinges on the stable checkpoint location)
-      val q2 = new EventStreams.StreamingFactIngest(spark, store, dir.toString,
-        keyCol = "event_id", tsCol = "ts", checkpointDir = ckpt,
-        watermark = "100 days").start()
-      q2.awaitTermination()
-      assert(store.load("fact", "events").count() == n)
-    } finally store.dropAll()
   }
 }

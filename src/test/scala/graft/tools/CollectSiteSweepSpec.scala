@@ -19,7 +19,6 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - `index-state` — stored-index driver state (the centroid matrix):
   *    C rows by construction, validated on load.
   *  - `group-grain` — exactly one sketch blob per group key.
-  *  - `vocab-bounded` — bounded by a vocabulary-size argument.
   *  - `meta-row` — a one-row meta table, row count `require`d.
   *  - `metadata` — catalog/file/partition metadata, proportional to
   *    table layout, never to data rows.
@@ -60,12 +59,6 @@ class CollectSiteSweepSpec extends AnyFunSuite {
       "metadata", "touched-partition values of an upsert batch — " +
         "partition-grain (r20: collected once pre-write; the emptied " +
         "probe now rides the write via observe)"),
-    Entry("functions/Bpe.scala", ".limit(maxWords) .collect()",
-      "vocab-bounded", "word-frequency table capped by the maxWords " +
-        "argument (the documented vocab-bounded driver collect)"),
-    Entry("operators/BlockingBudget.scala",
-      "blockProfile(left, leftKey, right, rightKey) .agg(",
-      "scalar-aggregate", "1-row pair-volume sum"),
     Entry("operators/BlockingBudget.scala",
       "val vol = profile.agg(coalesce(sum(col(\"pairs\")), lit(0d)))",
       "scalar-aggregate", "1-row pair-volume sum (guarded form)"),
@@ -85,15 +78,10 @@ class CollectSiteSweepSpec extends AnyFunSuite {
     Entry("operators/Pca.scala", ".select(agg.toColumn).head()",
       "scalar-aggregate", "the 1-row Gram-matrix aggregate (dim² " +
         "doubles, dimension-grain)"),
-    // (r20: the bm25 build's sum_dl .head() entry retired — the corpus
-    // totals now ride observe() accumulators on the postings write, so
-    // the build has NO scalar-aggregate collect left)
     Entry("operators/Retrieval.scala",
       "coalesce(sum(octet_length(col(\"term\"))), lit(0L)).as(\"b\")).head()",
       "scalar-aggregate", "1-row (rows, bytes) payload measurement for " +
         "the query-terms route"),
-    Entry("operators/Retrieval.scala", "val m = meta.collect()",
-      "meta-row", "bm25 index meta — row count require'd == 1"),
     Entry("operators/Similarity.scala",
       ".limit(effectiveSample).select(\"v\").as[Array[Double]].collect()",
       "bounded-sample", "k-means training draw, limit'd to the " +
@@ -112,9 +100,6 @@ class CollectSiteSweepSpec extends AnyFunSuite {
     Entry("operators/TextDedup.scala",
       "count(when(col(\"_bd_cand\"), lit(1))).as(\"nCand\")).head()",
       "scalar-aggregate", "1-row candidate-fraction gate"),
-    Entry("operators/ThetaSketches.scala",
-      "groupSketchFrame(df, groupCol, keyCol, lgK).collect()",
-      "group-grain", "one theta blob per group key"),
     Entry("operators/ZOrder.scala",
       ".select(col(\"file\")).collect().map(_.getString(0))",
       "metadata", "surviving file names from per-file stats pruning — " +
@@ -136,7 +121,7 @@ class CollectSiteSweepSpec extends AnyFunSuite {
     s"UNLISTED driver materialization at ${s.file}:${s.line} — " +
       s"`${s.text}`. Classify it in CollectSiteSweepSpec.allow: " +
       "scalar-aggregate / limited / bounded-sample / index-state / " +
-      "group-grain / vocab-bounded / meta-row / metadata — and what " +
+      "group-grain / meta-row / metadata — and what " +
       "bounds its row count at 100 TB? If the answer is 'the data', " +
       "the operator is not distributed; redesign it."
 

@@ -23,8 +23,6 @@ import org.scalatest.funsuite.AnyFunSuite
   *    `Expression` only if a profile says it is hot.
   *  - `driver-value-probe` — probing a broadcast driver value (the
   *    Bloom filter) that has no column representation.
-  *  - `custom-state` — Structured Streaming state machines
-  *    (sessionization) built on the engine's own state API.
   *  - `custom-aggregator` — typed `Aggregator`s for sketch state
   *    (SpaceSaving, moment matrices) that Catalyst's built-in
   *    aggregates cannot hold; registered via `functions.udaf` so they
@@ -101,10 +99,6 @@ class NonCatalystSweepSpec extends AnyFunSuite {
     Entry("operators/TextDedup.scala", "private val combo128Udf = udf {",
       "numeric-kernel", "16-bit band extraction over the 128-bit " +
         "signature pair"),
-    Entry("streaming/EventStreams.scala", ".flatMapGroupsWithState(",
-      "custom-state", "sessionization: per-key timeout state on the " +
-        "engine's own state API — the documented Structured Streaming " +
-        "form for custom state"),
     Entry("operators/HeavyHitters.scala", "extends Aggregator[String, Sketch",
       "custom-aggregator", "SpaceSaving sketch state — no built-in " +
         "aggregate holds a capacity-bounded counter table"),
@@ -127,7 +121,7 @@ class NonCatalystSweepSpec extends AnyFunSuite {
     s"UNLISTED Catalyst escape hatch at ${s.file}:${s.line} — " +
       s"`${s.text}`. Classify it in NonCatalystSweepSpec.allow: " +
       "stateful-blackbox / binary-codec / numeric-kernel / " +
-      "driver-value-probe / custom-state / reference-parity — and why " +
+      "driver-value-probe / custom-aggregator / reference-parity — and why " +
       "can't org.apache.spark.sql.functions or a native Expression " +
       "express it? If a built-in fits, use the built-in."
 

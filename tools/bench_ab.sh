@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# Worktree-pair bench A/B — the round-18 house method for "did my code
+# Clone-pair bench A/B — the round-18 house method for "did my code
 # move the bench".
 #
 # WHY THIS EXISTS: the single-thread calibration probe attributes
@@ -9,7 +9,7 @@
 # window where the round-17 tree ITSELF re-ran 1.32x slower than its
 # own stamp. The only instrument that settles code-vs-host for real is
 # re-running the OLD CODE in the SAME window: build the baseline ref in
-# a worktree, interleave full (or filtered) bench runs ref-vs-HEAD, and
+# a fresh clone, interleave full (or filtered) bench runs ref-vs-HEAD, and
 # compare per-query MINS within the shared window. Round 17's
 # "route count invisible" misreading happened precisely because its
 # quiet-window re-measure compared against a DIFFERENT window's number;
@@ -29,10 +29,14 @@
 # are printed so a drifting window is visible, but the verdict column
 # is the same-window ratio, which does not need them.
 #
-# Worktrees live under /tmp/graft_bench_ab/<sanitized-ref> and are
-# REUSED across invocations (first call pays the sbt build); remove
-# them with `git worktree remove --force /tmp/graft_bench_ab/<ref>`
-# when done.
+# Each baseline ref gets a run directory, /tmp/graft_bench_ab/<sanitized-ref>
+# (or $GRAFT_BENCH_AB_DIR/<sanitized-ref>): the ref is built in a plain
+# `git clone` at <run>/base, and each invocation's full maps land in
+# <run>/out_<pid>. The clone is REUSED while it sits at the ref's commit
+# (first call pays the sbt build); delete the run directory when done.
+# A clone, not a worktree: it shares no git metadata with this checkout
+# and starts with no build outputs, so its sbt build cannot touch this
+# checkout's classes.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -42,16 +46,23 @@ reps="${3:-3}"
 sf="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}"
 
 safe=$(echo "$ref" | tr -c 'A-Za-z0-9_.' '_')
-wt="/tmp/graft_bench_ab/$safe"
-out="/tmp/graft_bench_ab/out_${safe}_$$"
+sha=$(git rev-parse --verify "$ref^{commit}")
+run="${GRAFT_BENCH_AB_DIR:-/tmp/graft_bench_ab}/$safe"
+wt="$run/base"
+out="$run/out_$$"
 mkdir -p "$out"
 
-if [ ! -d "$wt" ]; then
-  echo "== bench_ab: creating worktree for $ref at $wt"
-  git worktree add "$wt" "$ref"
-  (cd "$wt" && sbt -batch compile > /dev/null)
+if [ -d "$wt/.git" ] && [ "$(git -C "$wt" rev-parse HEAD)" = "$sha" ]; then
+  echo "== bench_ab: reusing clone $wt ($(git -C "$wt" rev-parse --short HEAD))"
 else
-  echo "== bench_ab: reusing worktree $wt ($(cd "$wt" && git rev-parse --short HEAD))"
+  echo "== bench_ab: cloning $ref ($sha) into $wt"
+  rm -rf "$wt"
+  git clone -q --no-checkout "$PWD" "$wt"
+  # a commit no branch or tag reaches is not in the clone yet
+  git -C "$wt" cat-file -e "$sha^{commit}" 2>/dev/null ||
+    git -C "$wt" fetch -q "$PWD" "$sha"
+  git -C "$wt" checkout -q --detach "$sha"
+  (cd "$wt" && sbt -batch compile > /dev/null)
 fi
 
 filter_env=()
