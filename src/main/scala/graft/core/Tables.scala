@@ -93,7 +93,8 @@ object TableStore {
   }
 }
 
-final class TableStore(spark: SparkSession, config: PipelineConfig) {
+final class TableStore(private[graft] val spark: SparkSession,
+    config: PipelineConfig) {
 
   /** Name parts are interpolated into DDL (CREATE/DROP DATABASE), so a
     * malformed or hostile config value must fail here, not inject SQL.
@@ -103,7 +104,7 @@ final class TableStore(spark: SparkSession, config: PipelineConfig) {
     s
   }
 
-  private val db: String = ident(s"${config.catalog}_${config.schema}")
+  private[graft] val db: String = ident(s"${config.catalog}_${config.schema}")
   spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
 
   /** `{catalog}_{schema}.{layer}_{table}` — e.g. `steam_analytics.dim_games`. */

@@ -26,7 +26,7 @@ object SketchStatQueries {
     // and width 2000 = ⌈2/ε⌉ ≫ distinct users, so collisions are rare).
     "cms1_count_min" -> ((s, d) => {
       import s.implicits._
-      // Null policy mirrors ThetaSketches.groupSketches: a null user_id
+      // Null policy mirrors ThetaReference.groupSketches: a null user_id
       // carries no identity to count, and would NPE the getLong unbox
       // below — exclude it from both the sketch and the exact top-5
       // (the oracle filters identically).

@@ -245,7 +245,7 @@ object TrainPrepQueries {
     // its canonical at distance ≤ 1. This is the prefix-blocking shape
     // of record linkage at scale: candidate volume Σ blocksize², not n²
     // — and that volume is a FROZEN budget (`FuzzyBlockingBudgetSpec` /
-    // `BlockingBudget.candidatePairVolume` ≤ 8·n at sf0.1 and sf1).
+    // `BlockingReference.candidatePairVolume` ≤ 8·n at sf0.1 and sf1).
     // Round 12: the block key moved 8 → 14 chars after the new budget
     // spec caught the 8-char space SATURATING on the ~31-word synthetic
     // vocabulary (block sizes grew with n: measured pair factor 1.4·n

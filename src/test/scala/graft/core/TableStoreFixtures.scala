@@ -1,7 +1,5 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
-
 /** Spec cleanup for a [[TableStore]]: `import TableStoreFixtures._`, then
   * `store.dropAll()`.
   */
@@ -15,10 +13,11 @@ object TableStoreFixtures {
       * outlive the spec that made it.
       */
     def dropAll(): Unit = {
-      val spark = SparkSession.active
-      val db = store.fqn("x", "y").takeWhile(_ != '.')
+      val spark = store.spark
+      val db = store.db
       spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
-      val dbDir = store.tablePath("x", "y").getParent
+      val dbDir = new org.apache.hadoop.fs.Path(
+        s"${spark.conf.get("spark.sql.warehouse.dir")}/${db.toLowerCase}.db")
       val fs = dbDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(dbDir)) fs.delete(dbDir, true)
     }

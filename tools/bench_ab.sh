@@ -29,11 +29,11 @@
 # are printed so a drifting window is visible, but the verdict column
 # is the same-window ratio, which does not need them.
 #
-# Each baseline ref gets a run directory, /tmp/graft_bench_ab/<sanitized-ref>
-# (or $GRAFT_BENCH_AB_DIR/<sanitized-ref>): the ref is built in a plain
-# `git clone` at <run>/base, and each invocation's full maps land in
-# <run>/out_<pid>. The clone is REUSED while it sits at the ref's commit
-# (first call pays the sbt build); delete the run directory when done.
+# Each baseline ref gets a run directory, /tmp/graft_bench_ab/<sanitized-ref>:
+# the ref is built in a plain `git clone` at <run>/base, and each
+# invocation's full maps land in <run>/out_<pid>. The clone is REUSED
+# while it sits at the ref's commit (first call pays the sbt build);
+# delete the run directory when done.
 # A clone, not a worktree: it shares no git metadata with this checkout
 # and starts with no build outputs, so its sbt build cannot touch this
 # checkout's classes.
@@ -47,7 +47,7 @@ sf="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}"
 
 safe=$(echo "$ref" | tr -c 'A-Za-z0-9_.' '_')
 sha=$(git rev-parse --verify "$ref^{commit}")
-run="${GRAFT_BENCH_AB_DIR:-/tmp/graft_bench_ab}/$safe"
+run="/tmp/graft_bench_ab/$safe"
 wt="$run/base"
 out="$run/out_$$"
 mkdir -p "$out"
