@@ -360,7 +360,7 @@ object Compaction {
     val marker = s"${fqn}__publish"
     val qMarker = quoted(marker)
     if (spark.catalog.tableExists(tmp) && spark.catalog.tableExists(marker)) {
-      PartitionOverwrite.insertDynamic(spark.table(tmp), fqn)
+      TableStore.insertDynamic(spark.table(tmp), fqn)
       spark.sql(s"DROP TABLE $qMarker")
       spark.sql(s"DROP TABLE $qTmp")
     } else if (spark.catalog.tableExists(tmp)) {
@@ -416,7 +416,7 @@ object Compaction {
     // refuses, so the in-doubt window (live slice possibly partial) is
     // visible instead of silently writable.
     spark.sql(s"CREATE TABLE $qMarker (pending INT) USING parquet")
-    PartitionOverwrite.insertDynamic(spark.table(tmp), fqn)
+    TableStore.insertDynamic(spark.table(tmp), fqn)
     spark.sql(s"DROP TABLE $qMarker")
     spark.sql(s"DROP TABLE $qTmp")
     spark.catalog.refreshTable(fqn)

@@ -91,6 +91,60 @@ object TableStore {
         s"'$prefix'")
     prefix
   }
+
+  /** The table storage property that makes an overwrite of a partitioned
+    * table replace only the partitions it writes. Stored on the table, it
+    * overrides the session's `spark.sql.sources.partitionOverwriteMode`
+    * in both directions, so the library never reads or writes that conf.
+    * The writer option is ignored on `insertInto`; it is honored only
+    * where a write creates the table.
+    */
+  private val OverwriteModeKey = "partitionOverwriteMode"
+
+  /** Dynamic-partition-overwrite insert into `fqn`: partitions present in
+    * `df` are replaced, all others untouched. Columns are aligned to the
+    * table's order by name.
+    *
+    * Callers, the only dynamic-overwrite writes in the library:
+    *  - `TableStore.upsertPartitioned`: the touched partitions of an
+    *    upsert;
+    *  - `Compaction.compactPartitionsImpl`: the verified publish of the
+    *    staged compacted slice, and its self-heal, which re-publishes
+    *    the stage after a crash inside that publish.
+    *
+    * [[TableStore.savePartitioned]] stamps [[OverwriteModeKey]] on every
+    * table it creates, so the check below is one catalog lookup and no
+    * job. A table created any other way (a raw `saveAsTable`, then
+    * passed to the public `Compaction.compactPartitions`) is upgraded
+    * in place first, once.
+    *
+    * `rebalanceBy` (r20, guide §6 "coalesce on write" / Iceberg's
+    * `write.distribution-mode=hash`): without it, every upstream task
+    * holding rows of a partition opens its own file there — an N-task
+    * merge writing P touched partitions emits up to N·P small files per
+    * upsert, compounding into exactly the fragmentation `compactTable`
+    * exists to undo. An AQE REBALANCE on the partition columns clusters
+    * rows per partition at the advisory size — one file per partition
+    * when small, SPLIT when a partition exceeds the advisory bytes (so
+    * a skewed partition does not serialize into one writer task, the
+    * failure mode plain `repartition(partCols)` would have). Rows are
+    * unchanged; only the file layout moves.
+    */
+  private[core] def insertDynamic(df: DataFrame, fqn: String,
+                                  rebalanceBy: Seq[String] = Nil): Unit = {
+    import org.apache.spark.sql.functions.col
+    val spark = df.sparkSession
+    val tid = spark.sessionState.sqlParser.parseTableIdentifier(fqn)
+    if (!spark.sessionState.catalog.getTableMetadata(tid).storage.properties
+          .get(OverwriteModeKey).exists(_.equalsIgnoreCase("dynamic")))
+      spark.sql(s"ALTER TABLE ${tid.quotedString} SET SERDEPROPERTIES " +
+        s"('$OverwriteModeKey' = 'dynamic')")
+    val aligned = df.select(spark.table(fqn).columns.map(col).toIndexedSeq: _*)
+    val shaped =
+      if (rebalanceBy.isEmpty) aligned
+      else aligned.hint("rebalance", rebalanceBy.map(col): _*)
+    shaped.write.mode(SaveMode.Overwrite).insertInto(fqn)
+  }
 }
 
 final class TableStore(private[graft] val spark: SparkSession,
@@ -176,7 +230,9 @@ final class TableStore(private[graft] val spark: SparkSession,
 
   /** Partitioned managed table — the 100TB fact layout (SURVEY.md §4):
     * partition by ingest date/derived key so time-bounded queries prune
-    * whole partitions at the scan.
+    * whole partitions at the scan. The table carries
+    * `partitionOverwriteMode=dynamic` (see [[TableStore.insertDynamic]]);
+    * an Overwrite re-creates the table, so every write stamps it again.
     */
   def savePartitioned(df: DataFrame, layer: String, table: String,
                       partitionCols: Seq[String],
@@ -184,10 +240,9 @@ final class TableStore(private[graft] val spark: SparkSession,
     val name = fqn(layer, table)
     resolvePendingPublish(name, mode)
     clearStrandedLocation(layer, table, mode)
-    // a CTAS into a partitioned table overwrites dynamically while the
-    // session conf says so — keep a concurrent dynamic insert's conf out
-    PartitionOverwrite.locked(df.write.format("parquet").mode(mode)
-      .partitionBy(partitionCols: _*).saveAsTable(name))
+    df.write.format("parquet").mode(mode)
+      .option(TableStore.OverwriteModeKey, "dynamic")
+      .partitionBy(partitionCols: _*).saveAsTable(name)
     clearPendingPublish(name, mode)
   }
 
@@ -587,7 +642,7 @@ final class TableStore(private[graft] val spark: SparkSession,
       .unionByName(incoming)
       .observe(presentObs,
         collect_set(struct(partCols.map(col): _*)).as("present"))
-    PartitionOverwrite.insertDynamic(merged, name,
+    TableStore.insertDynamic(merged, name,
       rebalanceBy = rebalanceCols(name, partCols))
     // Driver-side set difference over EXTERNAL row values: both sides
     // come off the same partition columns of the same session (collect

@@ -17,10 +17,10 @@ import org.apache.spark.sql.graftbridge.Bridge
   * round 20, guide §1.2 "per-task work").
   *
   * Bit-exactness contract: the accumulation is the SAME strict left
-  * fold as the declarative `Similarity.dot`, so `dot(a,b)`, the norms
-  * and the recomposed cosine are bit-identical to
-  * `Similarity.dot(a,b) / (l2Norm(a) · l2Norm(b))` (DotProductSpec pins
-  * this on random and adversarial vectors). Null semantics: length
+  * fold as the declarative `CosineReference.dot` in the specs, so
+  * `dot(a,b)`, the norms and the recomposed cosine are bit-identical to
+  * `CosineReference.dot(a,b) / (l2Norm(a) · l2Norm(b))` (DotProductSpec
+  * pins this on random and adversarial vectors). Null semantics: length
   * mismatch or any touched null element → null here, which nulls the
   * recomposed cosine, and a zero norm is the caller's
   * null-on-zero-denominator.

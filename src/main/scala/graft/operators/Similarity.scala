@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions._
   * partition and queries probe only the `nProbe` nearest centroids, cutting
   * scanned vectors by ~k/nProbe while keeping recall high.
   *
-  * All vector math is `transform`/`zip_with`/`aggregate` higher-order
-  * functions over the array column — evaluated row-local inside codegen'd
-  * stages, no UDF serialization boundary.
+  * All vector math is the native `DotProduct` expression over the array
+  * column — evaluated row-local inside codegen'd stages, no UDF
+  * serialization boundary.
   */
 object Similarity {
 
@@ -28,17 +28,6 @@ object Similarity {
     * whole-stage codegen.
     */
   def toDouble(v: Column): Column = v.cast("array<double>")
-
-  /** Σ aᵢ·bᵢ as a strict left fold (deterministic order). Declarative
-    * reference form, which `DotProductSpec` pins the native kernel
-    * against bit for bit; hot paths use [[dotNative]] (Spark's
-    * higher-order array functions evaluate interpreted per element — an
-    * order of magnitude slower over millions of pairs).
-    */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
-  def l2Norm(v: Column): Column = sqrt(dot(v, v))
 
   /** Cosine of two numeric-array columns: [[cosineFromNorms]] over the
     * native kernel, with both norms computed in place. The `cosine_sim`
@@ -56,9 +45,9 @@ object Similarity {
     graft.functions.DotProduct.dotProduct(a, b)
 
   /** ‖v‖ via the native kernel, `sqrt(dot(v,v))` — computed once per
-    * vector and fed to [[cosineFromNorms]]. (The declarative [[l2Norm]]
-    * computes the same fold interpreted per element — kept as the
-    * reference form.)
+    * vector and fed to [[cosineFromNorms]]. (The declarative
+    * `CosineReference.l2Norm` in the specs computes the same fold
+    * interpreted per element.)
     */
   def l2NormNative(v: Column): Column = sqrt(dotNative(v, v))
 
@@ -68,8 +57,9 @@ object Similarity {
     * two thirds of the kernel FLOPs. With `na`/`nb` = [[l2NormNative]]
     * computed once per vector, only the dot is paid per pair, and the
     * value is bit-identical to the declarative
-    * `dot(a,b) / (l2Norm(a) · l2Norm(b))` (same left-fold dot;
-    * DotProductSpec pins equality on random + adversarial vectors).
+    * `CosineReference.dot(a,b) / (l2Norm(a) · l2Norm(b))` (same
+    * left-fold dot; DotProductSpec pins equality on random +
+    * adversarial vectors).
     * Null semantics: a length mismatch or a null element nulls the dot
     * (and the norms), and the zero-denominator guard below returns null
     * on a zero norm without ever dividing by zero (so ANSI cannot raise).

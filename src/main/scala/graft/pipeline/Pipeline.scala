@@ -9,7 +9,9 @@ import java.util.concurrent.{Callable, ExecutionException, Executors, ThreadFact
   * reference runs `dimensions` beside `reviews_fact` — fail-fast
   * (`run_if: ALL_SUCCESS`).
   *
-  * Stages of one wave share the caller's SparkSession. A stage that
+  * Stages of one wave share the caller's SparkSession. The library itself
+  * writes no session conf (a partition-scoped overwrite reads its mode
+  * from the table, see `TableStore.savePartitioned`). A stage that
   * changes session state another stage reads — a conf, a temp-view name,
   * the current database — must be ordered against that stage by a dep;
   * stages with no dependency path between them are, by declaration,
@@ -25,17 +27,16 @@ object Pipeline {
     * is QUEUED, never dropped and never run concurrently. Cron firing
     * itself belongs to the scheduler; the semantics the engine must honor
     * is this serialization + FIFO-queueing guarantee, which `Runner`
-    * models: `submit` executes immediately when a slot is free and queues
-    * otherwise, draining after each completion.
+    * models: `submit` executes immediately when no run is active and
+    * queues otherwise, draining after each completion.
     */
-  final class Runner(maxConcurrent: Int = 1) {
-    require(maxConcurrent >= 1, s"maxConcurrent must be >= 1")
-    private var active = 0
+  final class Runner {
+    private var running = false
     private val queue = scala.collection.mutable.Queue.empty[Seq[Stage]]
     private var executed = Vector.empty[Seq[String]]
     private var failures = Vector.empty[Throwable]
 
-    /** Enqueue a run. Caller-runs semantics: if a slot is free, the
+    /** Enqueue a run. Caller-runs semantics: if no run is active, the
       * submitting thread drains the queue (so the common idle-submit case
       * executes synchronously); otherwise submit returns immediately with
       * the run queued — a trigger never blocks behind an active run. A
@@ -47,7 +48,7 @@ object Pipeline {
     def submit(stages: Seq[Stage]): Unit = {
       val acquired = synchronized {
         queue.enqueue(stages)
-        if (active < maxConcurrent) { active += 1; true } else false
+        if (running) false else { running = true; true }
       }
       if (acquired) drainLoop()
     }
@@ -57,7 +58,7 @@ object Pipeline {
       try {
         while (continue) {
           val next = synchronized {
-            if (queue.isEmpty) { active -= 1; None } else Some(queue.dequeue())
+            if (queue.isEmpty) { running = false; None } else Some(queue.dequeue())
           }
           next match {
             case None => continue = false
@@ -78,9 +79,9 @@ object Pipeline {
         }
       } catch {
         case t: Throwable =>
-          // Fatal escape mid-drain: release the slot so a later submit on a
+          // Fatal escape mid-drain: clear the flag so a later submit on a
           // healthy thread can still drain the queue, then rethrow.
-          synchronized { active -= 1 }
+          synchronized { running = false }
           throw t
       }
     }

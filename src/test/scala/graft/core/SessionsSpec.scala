@@ -4,8 +4,9 @@ import graft.SparkSpec
 import graft.tools.SourceSites
 
 /** Pins the one session profile: its confs are the ones `graft.Bench` has
-  * always timed under, the spec session really runs them, and no second
-  * `SparkSession.builder` can appear beside [[Sessions]].
+  * always timed under, the spec session really runs them, no second
+  * `SparkSession.builder` can appear beside [[Sessions]], and no library
+  * code changes a conf of the session it is handed.
   */
 class SessionsSpec extends SparkSpec {
 
@@ -36,6 +37,16 @@ class SessionsSpec extends SparkSpec {
     val pattern = "SparkSession\\s*\\.\\s*builder\\b|^\\s*\\.builder\\s*\\(".r
     val files = SourceSites.scanTree(root, pattern).map(_.file).distinct
     assert(files == Seq("main/scala/graft/core/Sessions.scala"))
+  }
+
+  test("no file under src/main but Sessions.scala writes a session conf") {
+    val root = new java.io.File("src/main")
+    assert(root.isDirectory, s"expected source root at ${root.getAbsolutePath}")
+    val pattern = ("\\bconf\\s*\\.\\s*(?:set|unset)\\w*\\s*\\(|" +
+      "(?i)\\bsql\\s*\\(\\s*s?\"+\\s*(?:SET|RESET)\\b").r
+    val sites = SourceSites.scanTree(root, pattern)
+      .filterNot(_.file == "scala/graft/core/Sessions.scala")
+    assert(sites.isEmpty, sites.mkString("\n"))
   }
 
   test("withConf unsets a key that was not set and restores one that was") {

@@ -1,12 +1,12 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.operators.Similarity
+import graft.operators.{CosineReference, Similarity}
 import org.apache.spark.sql.functions._
 
 /** The one cosine kernel (`Similarity.cosine`: the native dot over norms
   * from [[Similarity.l2NormNative]]) must be BIT-identical to the
-  * declarative reference `Similarity.dot(a,b) / (l2Norm(a) · l2Norm(b))`
+  * declarative reference `CosineReference.dot(a,b) / (l2Norm(a) · l2Norm(b))`
   * — the r20 optimization moved the norm work out of the pair loop on
   * the strength of exactly this equality (the dot is the same strict
   * left fold either way), and every similarity operator's oracle hash
@@ -21,11 +21,11 @@ class DotProductSpec extends SparkSpec {
     val df = rows.toDF("a", "b")
       .select(Similarity.toDouble($"a").as("a"),
         Similarity.toDouble($"b").as("b"))
-    val denom = Similarity.l2Norm($"a") * Similarity.l2Norm($"b")
+    val denom = CosineReference.l2Norm($"a") * CosineReference.l2Norm($"b")
     val got = df.select(
       Similarity.cosine($"a", $"b").as("kernel"),
       when(denom === 0d, lit(null).cast("double"))
-        .otherwise(Similarity.dot($"a", $"b") / denom).as("reference"))
+        .otherwise(CosineReference.dot($"a", $"b") / denom).as("reference"))
       .collect()
     got.zipWithIndex.foreach { case (r, i) =>
       val k = if (r.isNullAt(0)) None else Some(r.getDouble(0))

@@ -245,7 +245,7 @@ class PipelineE2ESpec extends SparkSpec {
   }
 
   test("Runner serializes runs: a trigger during a run queues, FIFO (§2.10)") {
-    val runner = new Pipeline.Runner(maxConcurrent = 1)
+    val runner = new Pipeline.Runner()
     val order = scala.collection.mutable.ArrayBuffer.empty[String]
     lazy val second: Seq[Stage] =
       Seq(Stage("s2")(() => order += "second"))
@@ -261,7 +261,7 @@ class PipelineE2ESpec extends SparkSpec {
   }
 
   test("Runner: a failed run records its error and does not drop queued runs") {
-    val runner = new Pipeline.Runner(maxConcurrent = 1)
+    val runner = new Pipeline.Runner()
     val order = scala.collection.mutable.ArrayBuffer.empty[String]
     lazy val queued: Seq[Stage] = Seq(Stage("ok")(() => order += "ok"))
     runner.submit(Seq(Stage("boom") { () =>

@@ -1,6 +1,9 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.Success
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.graftbridge.SpecBridge
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -18,13 +21,43 @@ class IndexFidelityPropertySpec extends SparkSpec {
   private val params = SCTest.Parameters.default.withMinSuccessfulTests(3)
   private val runId = new AtomicInteger(0)
 
+  /** Checks `prop`, and that no task failed while it ran: a task that
+    * reads a dropped table fails in a job nobody awaits, so the property
+    * itself would still pass.
+    */
   private def check(prop: Prop): Unit = {
-    val res = SCTest.check(params, prop)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.reason != Success)
+          failures.add(s"stage ${e.stageId}: ${e.reason.toString.take(300)}")
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val res =
+      try SCTest.check(params, prop)
+      finally {
+        SpecBridge.drainListeners(spark)
+        spark.sparkContext.removeSparkListener(listener)
+      }
     assert(res.passed, res.status.toString) // status carries the counterexample
+    assert(failures.isEmpty, failures.toArray.mkString("\n"))
   }
 
-  private def dropAll(prefix: String, suffixes: Seq[String]): Unit =
+  /** AQE can answer an action before every stage it submitted has
+    * finished: once one join side materializes empty, the join becomes an
+    * empty relation and the stages already running for the other side
+    * (here the scan of `<prefix>_banded`) run out in the background.
+    * Dropping a table under them fails their tasks with FILE_NOT_EXIST, so
+    * the drop waits for the session's jobs to finish first.
+    */
+  private def dropAll(prefix: String, suffixes: Seq[String]): Unit = {
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (spark.sparkContext.statusTracker.getActiveJobIds().nonEmpty) {
+      assert(System.nanoTime() < deadline, "jobs still running 60 s after the action")
+      Thread.sleep(10)
+    }
     suffixes.foreach(s => spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$s"))
+  }
 
   test("bucketed IVF index roundtrip: ivfTopKFromIndex == in-query ivfTopK") {
     val vecsGen = Gen.listOfN(12, Gen.listOfN(4,

@@ -131,8 +131,8 @@ class ScaleSpec extends SparkSpec {
     val pairs = emb.crossJoin(a)
       .select(
         Similarity.cosine($"v", $"va").as("native"),
-        (Similarity.dot($"v", $"va")
-          / (Similarity.l2Norm($"v") * Similarity.l2Norm($"va"))).as("hof"))
+        (CosineReference.dot($"v", $"va")
+          / (CosineReference.l2Norm($"v") * CosineReference.l2Norm($"va"))).as("hof"))
       .as[(Double, Double)].collect()
     pairs.foreach { case (n, h) => assert(n == h, s"$n != $h") } // bit-equal
     // SQL surface, through the builder GraftExtensions injects

@@ -26,4 +26,11 @@ object SpecBridge {
   def cacheIsEmpty(spark: org.apache.spark.sql.SparkSession): Boolean =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager.isEmpty
+
+  /** Waits until every posted listener event has been delivered, so a
+    * spec's listener counts read after an action are complete
+    * (`listenerBus` is package-private to Spark).
+    */
+  def drainListeners(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }
