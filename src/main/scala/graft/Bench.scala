@@ -489,6 +489,7 @@ object Bench {
       System.err.println(s"[bench] round snapshot write failed: $e")
     }
     spark.stop()
+    graft.queries.QueryUtil.deleteScopedState(spark)
     println(out) // LAST line of output — the harness parses exactly this
   }
 }

@@ -41,5 +41,6 @@ object PlanDump {
       }
     }
     spark.stop()
+    graft.queries.QueryUtil.deleteScopedState(spark)
   }
 }

@@ -107,5 +107,6 @@ object Profile {
     println(f"TOTAL wall ${rows.map(_._2).sum}%.1f s  jobs ${rows.map(_._3).sum}  " +
       f"stages ${rows.map(_._4).sum}  tasks ${rows.map(_._5).sum}")
     spark.stop()
+    graft.queries.QueryUtil.deleteScopedState(spark)
   }
 }

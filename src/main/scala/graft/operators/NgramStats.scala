@@ -138,10 +138,9 @@ object NgramStats {
 
   /** BOILERPLATE detector: top-k n-gram shingles by DOCUMENT frequency —
     * shingles shared across many documents are headers, licenses,
-    * navigation chrome. This is the report that calibrates
-    * [[TextDedup.jaccardPairs]]'s `maxShingleDocFreq` cap (a shingle at
-    * document frequency f costs f² rows in the dedup self-join, so the
-    * head of this table IS the join-cost profile). Shingle text is carried
+    * navigation chrome. This is [[TextDedup.jaccardPairs]]'s join-cost
+    * profile: a shingle at document frequency f costs f² rows in the
+    * dedup self-join, so the head of this table is where that cost sits. Shingle text is carried
     * (a human reads this report), so it shuffles strings — the top-k keeps
     * it bounded; the dedup operators themselves stay on 8-byte hashes.
     */

@@ -38,8 +38,8 @@ import graft.functions.TextAnalysis
   * the shuffled term join instead of an executor OOM — see
   * [[bm25Rank]]). A stopword-grade term with df≈N produces a posting
   * row per document it touches — cap the query side (or pre-filter
-  * df/N > maxDf terms, the maxShingleDocFreq argument) when queries may
-  * contain stopwords; idf already scores such terms near 0.
+  * df/N > maxDf terms) when queries may contain stopwords; idf already
+  * scores such terms near 0.
   */
 object Retrieval {
 

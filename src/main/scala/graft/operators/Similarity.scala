@@ -920,8 +920,9 @@ object Similarity {
   /** Rebuild an [[IvfIndex]] from its persisted tables. The only driver
     * materialization is the centroid table (nCentroids rows — the same
     * bounded state the build holds); the corpus side stays a lazy scan.
-    * Loud validation instead of silent wrong answers (the
-    * crossLshPairsFromIndex rule): the table shapes, the dense 0..k-1
+    * Loud validation instead of silent wrong answers (the rule
+    * `TextDedup.crossLshPairsFromBandedIndex` applies to its stored
+    * meta): the table shapes, the dense 0..k-1
     * centroid-id space the assignment key joins on, and rectangular
     * centroid dims are all checked.
     */

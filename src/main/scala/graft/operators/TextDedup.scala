@@ -96,25 +96,9 @@ object TextDedup {
     * pairs are only docs sharing ≥1 shingle, so with high-order shingles
     * (n≥5) the join output stays near-linear in corpus size.
     */
-  /** @param maxShingleDocFreq 100TB cost lever: when set, shingles occurring
-    *   in more than this many documents (boilerplate headers, license text)
-    *   are dropped from the inverted index BEFORE the self-join — a shingle
-    *   with document frequency f produces f² join rows, so a single hot
-    *   shingle dominates the whole operator. Dropping affects candidate
-    *   generation and the intersection count (overlap carried only by hot
-    *   shingles is missed / undercounted), so results are exact iff the cap
-    *   is at or above the highest meaningful document frequency; `None`
-    *   (default) is fully exact.
-    */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                   n: Int = 5, minJaccard: Double = 0.5,
-                   maxShingleDocFreq: Option[Long] = None): DataFrame = {
-    val idx0 = shingleIndex(df, idCol, textCol, n)
-    val idx = maxShingleDocFreq.fold(idx0) { cap =>
-      val hot = idx0.groupBy(col("sh"))
-        .agg(count(lit(1)).as("df")).filter(col("df") > cap).select("sh")
-      idx0.join(hot, Seq("sh"), "left_anti")
-    }
+                   n: Int = 5, minJaccard: Double = 0.5): DataFrame = {
+    val idx = shingleIndex(df, idCol, textCol, n)
     // per-doc set sizes come from a cheap per-row projection (no second
     // scan of the exploded index); the self-join's two sides shuffle the
     // identical idx subplan on the same key, so Spark's ReuseExchange
@@ -202,15 +186,7 @@ object TextDedup {
     * similarity s is 1−(1−s^r)^b — with 16×2 defaults, &gt;0.99 at s=0.5 and
     * ≈1 beyond 0.8.
     */
-  /** @param verifyCandidatesOnly 100TB lever: when true, the verify stage
-    *   semi-joins the shingle sets down to candidate docs before the
-    *   collect_set aggregation, so only candidates' shingles shuffle —
-    *   near-dup candidates are a vanishing fraction of a web-scale corpus,
-    *   and shuffling every document's hashed set would dominate. The
-    *   filter recomputes the candidate subplan, which at small corpus
-    *   sizes costs more than the full-set shuffle it saves — hence off by
-    *   default and correct either way (spec-asserted equal).
-    * @param maxPairFactor opt-in production preflight
+  /** @param maxPairFactor opt-in production preflight
     *   ([[BlockingBudget.preflight]]): when set, the band buckets'
     *   candidate-pair volume is measured EAGERLY (before the join is
     *   returned) and the call throws — naming the hot buckets — if it
@@ -238,7 +214,6 @@ object TextDedup {
   def minHashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       n: Int = 5, numHashes: Int = 32, bands: Int = 16,
                       minJaccard: Double = 0.5,
-                      verifyCandidatesOnly: Boolean = false,
                       maxPairFactor: Option[Double] = None): DataFrame = {
     val banded0 = minHashBandedKeys(df, idCol, textCol, n, numHashes, bands)
     val banded = maxPairFactor.fold(banded0)(f =>
@@ -253,14 +228,7 @@ object TextDedup {
     // verify candidates with exact Jaccard over xxhash64'd shingle sets:
     // only (doc, array<long>) rows shuffle — 8 bytes per shingle, never the
     // n-gram text (the same 64-bit collision argument as shingleIndex)
-    val allSets = shingleIndex(df, idCol, textCol, n)
-    val filtered =
-      if (verifyCandidatesOnly) {
-        val candDocs = candidates.select(col("doc_a").as("doc"))
-          .union(candidates.select(col("doc_b").as("doc"))).distinct()
-        allSets.join(candDocs, Seq("doc"), "left_semi")
-      } else allSets
-    val sets = filtered
+    val sets = shingleIndex(df, idCol, textCol, n)
       .groupBy(col("doc")).agg(collect_set(col("sh")).as("sh_set"))
     verifyExactJaccard(candidates, "doc_a", "doc_b", sets, sets, minJaccard)
   }
@@ -609,84 +577,16 @@ object TextDedup {
       .agg(count(lit(1)).cast("bigint").as("n_collisions"))
       .select(col("doc").as(idCol), col("n_collisions"))
 
-  /** Public persistable verify-side index: (doc, sh_set array<long>) —
-    * each document's distinct hashed shingle set, the exact-Jaccard
-    * operand. With [[minHashSignatures]] this is everything the
-    * incremental dedup loop needs from the corpus; both are plain
-    * columnar frames, so an ingest pipeline computes them ONCE per
-    * document and persists them as tables (the sketch-as-data pattern —
-    * hll1's argument applied to dedup).
+  /** Verify-side index: (doc, sh_set array<long>) — each document's
+    * distinct hashed shingle set, the exact-Jaccard operand that
+    * [[saveLshIndexBucketed]] stores as `<prefix>_sets`, so a probe
+    * re-reads it instead of re-shingling the corpus (the sketch-as-data
+    * pattern — hll1's argument applied to dedup).
     */
   def shingleSets(df: DataFrame, idCol: String, textCol: String,
                   n: Int = 5): DataFrame =
     shingleIndex(df, idCol, textCol, n)
       .groupBy(col("doc")).agg(collect_set(col("sh")).as("sh_set"))
-
-  /** [[crossMinHashLshPairs]] from PERSISTED index tables: the corpus
-    * side arrives as its stored `(doc, sig)` signatures and
-    * `(doc, sh_set)` shingle sets — computed at ingest, roundtripped
-    * through parquet — so an increment re-reads index columns instead of
-    * re-shingling the corpus text. At 100 TB that is the difference
-    * between scanning a signature table (32 longs/doc) and re-tokenizing
-    * every document ever ingested, every increment. Output and recall
-    * semantics are identical to the text-side form (spec-asserted equal
-    * frame-for-frame; the mh1 oracle is il1's exact cross-Jaccard).
-    */
-  def crossLshPairsFromIndex(corpusSigs: DataFrame, corpusSets: DataFrame,
-                             batch: DataFrame, idCol: String, textCol: String,
-                             n: Int = 5, numHashes: Int = 32, bands: Int = 16,
-                             minJaccard: Double = 0.5): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    // index-shape guard: a persisted index built with different numHashes
-    // (or corrupted columns) would silently band-key-mismatch and return
-    // an empty/wrong pair set — fail loudly instead. One limit(1) probe
-    // (the SnapshotDiff uniqueness-guard pattern), metadata-cheap
-    Seq(("corpusSigs", corpusSigs, "sig"), ("corpusSets", corpusSets, "sh_set"))
-      .foreach { case (nm, idx, c) =>
-        require(idx.columns.contains("doc") && idx.columns.contains(c),
-          s"$nm: expected columns (doc, $c), got ${idx.columns.mkString(",")}")
-      }
-    corpusSigs.select(size(col("sig")).as("w")).limit(1).collect()
-      .foreach { row =>
-        require(row.getInt(0) == numHashes,
-          s"corpusSigs was built with numHashes=${row.getInt(0)} but the " +
-            s"batch side is using numHashes=$numHashes — rebuild the index " +
-            "or pass matching parameters (shingle n must match too; persist " +
-            "the build parameters alongside the index tables)")
-      }
-    val r = numHashes / bands
-    val cb = bandedKeys(corpusSigs, bands, r)
-    val bb = bandedKeys(minHashSignatures(batch, idCol, textCol, n, numHashes),
-      bands, r)
-    crossVerifiedPairs(cb, bb, corpusSets, batch, idCol, textCol, n,
-      minJaccard)
-  }
-
-  /** Shared tail of the cross-index forms: banded-key candidates →
-    * semi-joined exact-Jaccard verify. `cb`/`bb` are (doc, band, bh)
-    * frames for the corpus/batch sides; `corpusSets` the stored
-    * (doc, sh_set) verify operands; the batch's shingle sets build
-    * in-plan.
-    */
-  private def crossVerifiedPairs(cb: DataFrame, bb: DataFrame,
-                                 corpusSets: DataFrame, batch: DataFrame,
-                                 idCol: String, textCol: String, n: Int,
-                                 minJaccard: Double): DataFrame = {
-    val candidates = cb.as("a")
-      .join(bb.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh"))
-      .select(col("a.doc").as("corpus_id"), col("b.doc").as("batch_id"))
-      .distinct()
-    val cSets = corpusSets
-      .join(candidates.select(col("corpus_id").as("doc")).distinct(),
-        Seq("doc"), "left_semi")
-    val bSets = shingleIndex(batch, idCol, textCol, n)
-      .join(candidates.select(col("batch_id").as("doc")).distinct(),
-        Seq("doc"), "left_semi")
-      .groupBy(col("doc")).agg(collect_set(col("sh")).as("sh_set"))
-    verifyExactJaccard(candidates, "corpus_id", "batch_id", cSets, bSets,
-      minJaccard)
-  }
 
   /** Persist the LSH index as three MANAGED tables, laid out so the
     * per-increment joins ride the storage instead of re-shuffling the
@@ -694,10 +594,8 @@ object TextDedup {
     * to the il1 ingest loop):
     *
     *  - `<prefix>_meta` — ONE row (n, num_hashes, bands): the build
-    *    parameters live WITH the index, so the from-index entry point
-    *    reads them instead of trusting a caller to re-supply matching
-    *    values ([[crossLshPairsFromIndex]]'s numHashes probe guards one
-    *    mismatch direction; storing the parameters closes all of them).
+    *    parameters live WITH the index, so the probe reads them instead
+    *    of trusting a caller to re-supply matching values.
     *  - `<prefix>_banded` — the (doc, band, bh) banded keys, BUCKETED BY
     *    `bh`: the candidates join clusters on (band, bh), and a
     *    hash(bh) layout satisfies that (bh ⊆ {band, bh}), so the
@@ -736,9 +634,9 @@ object TextDedup {
     * corpus-side joins ride the bucket layout: candidates cluster on
     * the stored `bh` buckets, verify on the stored `doc` buckets, so an
     * increment shuffles only its own banded keys and shingle sets.
-    * Output is frame-identical to [[crossMinHashLshPairs]] /
-    * [[crossLshPairsFromIndex]] on the same corpus and batch
-    * (spec-pinned in `IvfBucketedIndexSpec`).
+    * Output is frame-identical to [[crossMinHashLshPairs]] on the same
+    * corpus and batch (spec-pinned in `LshBucketedIndexSpec`); mh1 and
+    * dc2 probe their corpus index through it.
     */
   def crossLshPairsFromBandedIndex(spark: org.apache.spark.sql.SparkSession,
                                    tablePrefix: String, batch: DataFrame,
@@ -763,11 +661,22 @@ object TextDedup {
       s"corrupt lsh meta: n=$n, num_hashes=$numHashes, bands=$bands " +
         "(need all >= 1 and bands | num_hashes)")
     val cb = read("banded", "doc", "band", "bh")
-    val corpusSets = read("sets", "doc", "sh_set")
     val bb = bandedKeys(
       minHashSignatures(batch, idCol, textCol, n, numHashes),
       bands, numHashes / bands)
-    crossVerifiedPairs(cb, bb, corpusSets, batch, idCol, textCol, n,
+    val candidates = cb.as("a")
+      .join(bb.as("b"),
+        col("a.band") === col("b.band") && col("a.bh") === col("b.bh"))
+      .select(col("a.doc").as("corpus_id"), col("b.doc").as("batch_id"))
+      .distinct()
+    val cSets = read("sets", "doc", "sh_set")
+      .join(candidates.select(col("corpus_id").as("doc")).distinct(),
+        Seq("doc"), "left_semi")
+    val bSets = shingleIndex(batch, idCol, textCol, n)
+      .join(candidates.select(col("batch_id").as("doc")).distinct(),
+        Seq("doc"), "left_semi")
+      .groupBy(col("doc")).agg(collect_set(col("sh")).as("sh_set"))
+    verifyExactJaccard(candidates, "corpus_id", "batch_id", cSets, bSets,
       minJaccard)
   }
 

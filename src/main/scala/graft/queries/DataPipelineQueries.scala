@@ -1,6 +1,8 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
+import graft.core.IndexTables
 import graft.operators.{Similarity, TextDedup}
 import graft.functions.TextAnalysis
 import graft.multimodal.Multimodal
@@ -59,6 +61,23 @@ object DataPipelineQueries {
       |  CAST(CAST(CAST(c AS DOUBLE) / CAST(na.n_sh + nb.n_sh - c AS DOUBLE) AS DECIMAL(18,6)) AS DOUBLE) AS jaccard
       |FROM p JOIN n na ON p.doc_a = na.doc_id JOIN n nb ON p.doc_b = nb.doc_id
       |WHERE CAST(c AS DOUBLE) / CAST(na.n_sh + nb.n_sh - c AS DOUBLE) >= 0.5""".stripMargin
+
+  /** The corpus LSH index mh1 and dc2 probe (il1's corpus, doc_id % 10
+    * != 0, at the default 5 / 32 / 16), built compute-if-absent once per
+    * dataset and application under the sim4/semd2 bucket count; `_sets`
+    * is the publish's marker. Returns the table prefix.
+    */
+  private def corpusLshIndex(s: SparkSession, d: String): String = {
+    val prefix = QueryUtil.scopedTable(s, d, "lsh")
+    QueryUtil.stateBuildGate.synchronized {
+      if (!s.catalog.tableExists(prefix + "_sets"))
+        TextDedup.saveLshIndexBucketed(
+          table(s, d, "documents").filter(col("doc_id") % 10 =!= 0),
+          "doc_id", "text", prefix,
+          nBuckets = s.conf.get("spark.sql.shuffle.partitions").toInt)
+    }
+    prefix
+  }
 
   val queries: Map[String, Q] = Map(
     // exact dedup via digest group-by
@@ -159,50 +178,40 @@ object DataPipelineQueries {
 
     // INCREMENTAL cluster maintenance — the persisted-state composition:
     // corpus-internal clusters (dc1's pair graph restricted to doc_id %
-    // 10 != 0) are converged once and WRITTEN AS A TABLE; the batch
-    // (doc_id % 10 = 0) generates cross pairs via banded MinHash (il1's
-    // path — mh1 proves the persisted-index variant yields the identical
-    // pair set), and incrementalCanonicalize merges them into the stored
-    // state touching only batch-reached components (untouched clusters
-    // pass through as a left-anti scan — DedupClustersSpec asserts
-    // byte-identity). Oracle = recursive-CTE closure over the UNION pair
-    // set, which the increment must equal exactly.
+    // 10 != 0) are converged once and published as a table; the batch
+    // (doc_id % 10 = 0) probes the corpus LSH index mh1 reads (il1's
+    // pair set), and incrementalCanonicalize merges the cross pairs into
+    // the stored state touching only batch-reached components (untouched
+    // clusters pass through as a left-anti scan — DedupClustersSpec
+    // asserts byte-identity). Oracle = recursive-CTE closure over the
+    // UNION pair set, which the increment must equal exactly.
     "dc2_incremental_clusters" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      val corpus = docs.filter(col("doc_id") % 10 =!= 0)
-      val batch = docs.filter(col("doc_id") % 10 === 0)
       // Persisted state is SETUP, not the operator: in production the
       // corpus closure AND the corpus LSH index exist as tables, and each
-      // batch pays only the O(batch) increment — batch-side signatures,
-      // band join against the STORED signatures (mh1 proves this pair
-      // set identical to the recompute-both-sides path), exact verify
-      // against the STORED shingle sets, and the touched-components-only
-      // cluster merge. Built compute-if-absent (scoped per dataset+app),
-      // so repeated runs in one process — bench's best-of-2 — time the
-      // increment, which is this operator's actual cost; the state build
-      // is deterministic, so reuse cannot change the result. The
-      // clusters/ marker is written LAST, so its presence implies the
-      // sigs/ and sets/ tables are complete too.
-      val base = QueryUtil.scopedTmp(s, d, "dc2-state")
-      val done = new org.apache.hadoop.fs.Path(base + "/clusters/_SUCCESS")
-      val fs = done.getFileSystem(s.sparkContext.hadoopConfiguration)
+      // batch pays only the O(batch) increment. Both are built
+      // compute-if-absent (scoped per dataset+app), so repeated runs in
+      // one process — bench's best-of-2 — time the increment; the state
+      // build is deterministic, so reuse cannot change the result. The
+      // closure is a plain (unbucketed) table and its own marker.
+      val index = corpusLshIndex(s, d)
+      val prefix = QueryUtil.scopedTable(s, d, "dc2")
       QueryUtil.stateBuildGate.synchronized {
-        if (!fs.exists(done)) {
-          TextDedup.minHashSignatures(corpus, "doc_id", "text", 5, 32)
-            .write.mode("overwrite").parquet(base + "/sigs")
-          TextDedup.shingleSets(corpus, "doc_id", "text", 5)
-            .write.mode("overwrite").parquet(base + "/sets")
-          graft.operators.DedupClusters.canonicalize(
+        if (!s.catalog.tableExists(prefix + "_clusters")) {
+          val corpus = table(s, d, "documents").filter(col("doc_id") % 10 =!= 0)
+          val closure = graft.operators.DedupClusters.canonicalize(
             TextDedup.jaccardPairs(corpus, "doc_id", "text"), "doc_a", "doc_b")
-            .write.mode("overwrite").parquet(base + "/clusters")
+          IndexTables.publish(s, prefix, "dc2")(
+            "clusters" -> (t => closure.write.format("parquet").saveAsTable(t)))
         }
       }
-      val newPairs = TextDedup.crossLshPairsFromIndex(
-        QueryUtil.stateTable(s, base + "/sigs"), QueryUtil.stateTable(s, base + "/sets"),
-        batch, "doc_id", "text")
+      val newPairs = TextDedup.crossLshPairsFromBandedIndex(s, index,
+        table(s, d, "documents").filter(col("doc_id") % 10 === 0),
+        "doc_id", "text")
         .select(col("corpus_id").as("doc_a"), col("batch_id").as("doc_b"))
       graft.operators.DedupClusters.incrementalCanonicalize(
-        QueryUtil.stateTable(s, base + "/clusters"), newPairs, "doc_a", "doc_b")
+        IndexTables.read(s, prefix, "dc2", "clusters", "member_id",
+          "canonical_id"),
+        newPairs, "doc_a", "doc_b")
     }),
 
     // contrastive pair mining over the d5b universe (planted near-dups):
@@ -491,34 +500,16 @@ object DataPipelineQueries {
         "doc_id", "text", n = 13)
     }),
 
-    // incremental LSH from the PERSISTED index (sketch-as-data): corpus
-    // signatures + shingle sets are written as parquet tables and read
-    // back, so the increment never re-shingles the corpus — same inputs
-    // and oracle as il1, proving the roundtrip changes nothing
-    "mh1_signature_reuse" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      val corpus = docs.filter(col("doc_id") % 10 =!= 0)
-      val batch = docs.filter(col("doc_id") % 10 === 0)
-      // dataset+run-scoped path: interleaved SF runs AND concurrent runs
-      // against the same dataset each get their own index. The index
-      // build is SETUP (computed at ingest in production), done
-      // compute-if-absent — repeated runs time the query-from-index
-      // path, which is the operator. sets/ marker written last ⇒ its
-      // presence implies sigs/ is complete.
-      val base = QueryUtil.scopedTmp(s, d, "mh1-index")
-      val done = new org.apache.hadoop.fs.Path(base + "/sets/_SUCCESS")
-      QueryUtil.stateBuildGate.synchronized {
-        if (!done.getFileSystem(s.sparkContext.hadoopConfiguration).exists(done)) {
-          TextDedup.minHashSignatures(corpus, "doc_id", "text", 5, 32)
-            .write.mode("overwrite").parquet(base + "/sigs")
-          TextDedup.shingleSets(corpus, "doc_id", "text", 5)
-            .write.mode("overwrite").parquet(base + "/sets")
-        }
-      }
-      TextDedup.crossLshPairsFromIndex(
-        QueryUtil.stateTable(s, base + "/sigs"), QueryUtil.stateTable(s, base + "/sets"),
-        batch, "doc_id", "text")
-    }),
+    // incremental LSH from the PERSISTED index (sketch-as-data): the
+    // batch probes the stored corpus index (banded keys + shingle sets as
+    // bucketed tables), so the increment never re-shingles the corpus —
+    // same inputs and oracle as il1, proving the roundtrip changes
+    // nothing. The index build is SETUP (computed at ingest in
+    // production), shared with dc2 and done once per dataset+app.
+    "mh1_signature_reuse" -> ((s, d) =>
+      TextDedup.crossLshPairsFromBandedIndex(s, corpusLshIndex(s, d),
+        table(s, d, "documents").filter(col("doc_id") % 10 === 0),
+        "doc_id", "text")),
 
     // EXACT incremental dedup via Bloom prefilter: batch = genuinely-new
     // docs (doc_id ≡ 0 mod 10) ∪ planted replays of corpus docs (doc_id ≡

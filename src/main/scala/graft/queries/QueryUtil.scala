@@ -56,14 +56,14 @@ object QueryUtil {
       spark.read.parquet(s"$dir/$name.parquet"))
   }
 
-  /** [[table]]'s memo for the compute-if-absent STATE tables (the
-    * dc2/mh1/zo2 scoped-tmp indexes): those directories are
-    * write-once per (dataset, app) — the `_SUCCESS`-marker gate under
+  /** [[table]]'s memo for the compute-if-absent path STATE (zo2's
+    * scoped-tmp index, the one path-state user left; the other stored
+    * indexes are managed tables): those directories are write-once per
+    * (dataset, app) — the `_SUCCESS`-marker gate under
     * [[stateBuildGate]] builds them exactly once and nothing mutates
     * them afterwards — so their relations (file listing + schema) are as
     * immutable as the fixture tables'. Re-resolving them cost one
-    * schema-inference job per read per execution (mh1 paid 2 of its 16
-    * jobs there). DO NOT route write-per-run scratch (ex1/ex2's
+    * schema-inference job per read per execution. DO NOT route write-per-run scratch (ex1/ex2's
     * roundtrip outputs) through this: a memoized relation pins the file
     * listing, and a re-written directory would read stale or missing
     * files.
@@ -121,13 +121,15 @@ object QueryUtil {
     * bench) from clobbering each other's overwrite.
     */
   /** JVM-wide gate serializing compute-if-absent STATE BUILDS (the
-    * marker check-then-write in dc2/mh1/sim4/zo2/semd2): two concurrent
-    * executions of one entry in the same JVM would otherwise both see
-    * the marker absent and overwrite each other's staging mid-write
-    * (the bk1/m8 memo race, path-marker form). Coarse by design — a
-    * build runs once per (dataset, app) and the gate never wraps the
-    * timed query itself; cross-JVM runs are already isolated by
-    * [[scopedTmp]]'s application-id suffix.
+    * marker check-then-write of zo2's path state and of the mh1/dc2,
+    * sim4 and semd2 managed tables, whose marker is the table the
+    * publish writes last): two concurrent executions of one entry in
+    * the same JVM would otherwise both see the marker absent and
+    * overwrite each other's staging mid-write (the bk1/m8 memo race).
+    * Coarse by design — a build runs once per (dataset, app) and the
+    * gate never wraps the timed query itself; cross-JVM runs are
+    * already isolated by the application-id suffix of [[scopedTmp]] and
+    * [[scopedTable]].
     */
   val stateBuildGate = new Object
 
@@ -135,13 +137,37 @@ object QueryUtil {
     System.getProperty("java.io.tmpdir") + s"/graft-$tag-" +
       dir.replaceAll("[^a-z0-9.]", "_") + "-" + spark.sparkContext.applicationId
 
-  /** [[scopedTmp]]'s scoping for a managed-table prefix (the sim4/semd2
-    * stored indexes): the same dataset and application suffixes, as one
-    * identifier.
+  /** [[scopedTmp]]'s scoping for a managed-table prefix (the mh1/dc2,
+    * sim4 and semd2 stored indexes): the same dataset and application
+    * suffixes, as one identifier.
     */
   def scopedTable(spark: SparkSession, dir: String, tag: String): String =
     s"graft_${tag}_${dir}_${spark.sparkContext.applicationId}"
       .replaceAll("[^A-Za-z0-9_]", "_")
+
+  /** Delete the application's scoped state: the [[scopedTmp]]
+    * directories and the warehouse directories of the [[scopedTable]]
+    * tables, i.e. every `graft*` entry of either directory whose name
+    * carries the application id. Call right after `spark.stop()`, which
+    * cancels every running stage, so nothing still reads them. A killed
+    * run leaves its state behind.
+    */
+  def deleteScopedState(spark: SparkSession): Unit = {
+    val app = spark.sparkContext.applicationId
+    val appTag = app.replaceAll("[^A-Za-z0-9_]", "_").toLowerCase
+    val conf = spark.sparkContext.hadoopConfiguration
+    Seq(System.getProperty("java.io.tmpdir"),
+        spark.conf.get("spark.sql.warehouse.dir")).foreach { dir =>
+      val root = new org.apache.hadoop.fs.Path(dir)
+      val fs = root.getFileSystem(conf)
+      if (fs.exists(root)) fs.listStatus(root).map(_.getPath)
+        .filter { p =>
+          p.getName.startsWith("graft") &&
+            (p.getName.contains(app) || p.getName.toLowerCase.contains(appTag))
+        }
+        .foreach(fs.delete(_, true))
+    }
+  }
 
   /** Cast every top-level DECIMAL output column to DOUBLE.
     *

@@ -186,8 +186,8 @@ object TrainPrepQueries {
     }),
 
     // boilerplate detector: top-20 5-gram shingles by document frequency —
-    // the report that calibrates jaccardPairs' maxShingleDocFreq join-cost
-    // cap (df² join rows per hot shingle)
+    // the hot shingles that drive jaccardPairs' join cost (df² join rows
+    // per hot shingle; LshBucketBudgetSpec bounds the total)
     "bp1_boilerplate" -> ((s, d) =>
       graft.operators.NgramStats.topShingles(
         table(s, d, "documents"), "doc_id", "text", n = 5, k = 20)),

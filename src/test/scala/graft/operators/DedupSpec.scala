@@ -30,20 +30,6 @@ class DedupSpec extends SparkSpec {
     assert(pairs.head.getDecimal(2).doubleValue() == 0.5)
   }
 
-  test("hot-shingle df-cutoff: exact when cap ≥ max df; prunes hot overlap") {
-    val exact = TextDedup.jaccardPairs(docs, "doc_id", "text")
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    val capped = TextDedup.jaccardPairs(docs, "doc_id", "text",
-      maxShingleDocFreq = Some(1000000L))
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    assert(capped == exact) // cap above every df → identical output
-    // an aggressive cap only ever removes pairs, never invents them
-    val aggressive = TextDedup.jaccardPairs(docs, "doc_id", "text",
-      maxShingleDocFreq = Some(1L))
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    assert(aggressive.subsetOf(exact))
-  }
-
   test("stripPrefix renames only prefixed columns; collisions fail fast") {
     val df = Seq((1L, 2.0, "x")).toDF("id", "mat_price", "mat_name")
     val out = Projections.stripPrefix(df, "mat_")
@@ -120,11 +106,6 @@ class DedupSpec extends SparkSpec {
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(exact.nonEmpty) // planted near-dups exist
     assert(lsh == exact)   // verify step kills FPs; banding recalls all
-    // the candidate-only verify path (the 100TB shuffle lever) is equal
-    val lshFiltered = TextDedup.minHashLshPairs(docs, "doc_id", "text",
-      verifyCandidatesOnly = true)
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    assert(lshFiltered == exact)
   }
 
   test("simhash bands recall every pair with hamming ≤ 3 (pigeonhole)") {

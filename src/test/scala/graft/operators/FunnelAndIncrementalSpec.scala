@@ -114,20 +114,15 @@ class IncrementalLshSpec extends SparkSpec {
   test("from-index cross LSH == the direct text-side path, roundtripped") {
     val corpus = docs.filter($"doc_id" % 10 =!= 0)
     val batch = docs.filter($"doc_id" % 10 === 0)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-mh-index").toString
-    TextDedup.minHashSignatures(corpus, "doc_id", "text", 5, 32)
-      .write.mode("overwrite").parquet(s"$base/sigs")
-    TextDedup.shingleSets(corpus, "doc_id", "text", 5)
-      .write.mode("overwrite").parquet(s"$base/sets")
+    TextDedup.saveLshIndexBucketed(corpus, "doc_id", "text",
+      tablePrefix = "graft_inc_lsh", nBuckets = 4)
     def norm(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, java.math.BigDecimal)].collect()
         .map(t => (t._1, t._2, t._3.toString)).toSet
     val direct = norm(
       TextDedup.crossMinHashLshPairs(corpus, batch, "doc_id", "text"))
-    val fromIndex = norm(TextDedup.crossLshPairsFromIndex(
-      spark.read.parquet(s"$base/sigs"), spark.read.parquet(s"$base/sets"),
-      batch, "doc_id", "text"))
+    val fromIndex = norm(TextDedup.crossLshPairsFromBandedIndex(spark,
+      "graft_inc_lsh", batch, "doc_id", "text"))
     assert(fromIndex == direct,
       s"missed: ${direct -- fromIndex}, extra: ${fromIndex -- direct}")
     assert(fromIndex.nonEmpty)

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
   * ([[Similarity.saveIvfIndexBucketed]]): the save → load → query path
   * must be frame-identical to querying the in-memory index (same
   * centroids, same assignments, same ranking), the load path must not
-  * train, and malformed index tables must fail loudly (the
-  * crossLshPairsFromIndex rule), not return silently-wrong neighbors.
+  * train, and malformed index tables must fail loudly (the rule the
+  * LSH index's stored meta follows), not return silently-wrong neighbors.
   */
 class IvfPersistSpec extends SparkSpec {
   import spark.implicits._

@@ -24,9 +24,8 @@ import org.apache.spark.sql.functions._
   * near-dups + ~0.2% exact dups collide in pairs (the operator's
   * recall working as intended), not crowds. Budget 4 is ~3.6× headroom;
   * a corpus whose buckets crowd past it has left the "near-dups are a
-  * vanishing fraction" regime the operator's scale argument (and the
-  * `verifyCandidatesOnly` lever) assumes, and should fail loudly
-  * rather than quietly square its shuffle.
+  * vanishing fraction" regime the operator's scale argument assumes,
+  * and should fail loudly rather than quietly square its shuffle.
   */
 class LshBucketBudgetSpec extends SparkSpec {
 
@@ -109,8 +108,7 @@ class LshBucketBudgetSpec extends SparkSpec {
     * Σ df² over shingle hashes. High-order shingles (5-grams) keep df
     * near 1 on natural text; a drifting corpus (template boilerplate, a
     * collapsing vocabulary) concentrates df and reverts the join toward
-    * n² — the exact risk `maxShingleDocFreq` exists to cap, measured
-    * here so the default (uncapped) path fails loudly when the regime
+    * n², measured here so the operator fails loudly when the regime
     * changes instead of silently squaring. With this, all three dedup
     * blocked-join families (prefix, LSH bands, inverted index) carry
     * the same frozen pair-volume bound.
@@ -129,7 +127,7 @@ class LshBucketBudgetSpec extends SparkSpec {
       f"factor ${vol.toDouble / rows}%.2f")
     assert(vol <= factor * rows,
       s"shingle-index volume $vol exceeds budget ${factor}·$rows — " +
-        "document-frequency is concentrating (cap with maxShingleDocFreq)")
+        "document-frequency is concentrating (hot shingles: see bp1)")
   }
 
   test("d4's shingle inverted index stays inside the crowding budget " +

@@ -46,33 +46,22 @@ class LshBucketedIndexSpec extends SparkSpec {
   }
 
   test("both corpus-side joins ride the buckets: strictly fewer " +
-      "exchanges than the path-persisted index form") {
+      "exchanges than the in-plan cross form") {
     TextDedup.saveLshIndexBucketed(docs, "doc_id", "text",
       tablePrefix = "graft_lshb_spec2", nBuckets = 4)
-    // path-persisted baseline: same index content, plain parquet
-    val p = s"/tmp/graft-lsh-spec2-${java.util.UUID.randomUUID()}"
-    TextDedup.minHashSignatures(docs, "doc_id", "text", 5, 32)
-      .write.parquet(p + "/sigs")
-    TextDedup.shingleSets(docs, "doc_id", "text", 5)
-      .write.parquet(p + "/sets")
+    def direct = TextDedup.crossMinHashLshPairs(docs, batch, "doc_id", "text")
+    def viaIndex = TextDedup.crossLshPairsFromBandedIndex(
+      spark, "graft_lshb_spec2", batch, "doc_id", "text")
     withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val ePath = hashExchanges(TextDedup.crossLshPairsFromIndex(
-        spark.read.parquet(p + "/sigs"), spark.read.parquet(p + "/sets"),
-        batch, "doc_id", "text"))
-      val eBucketed = hashExchanges(TextDedup.crossLshPairsFromBandedIndex(
-        spark, "graft_lshb_spec2", batch, "doc_id", "text"))
-      assert(eBucketed < ePath,
+      val eDirect = hashExchanges(direct)
+      val eBucketed = hashExchanges(viaIndex)
+      assert(eBucketed < eDirect,
         s"bucketed banded+sets must elide corpus-side exchanges: " +
-          s"path $ePath vs bucketed $eBucketed")
+          s"in-plan $eDirect vs bucketed $eBucketed")
     }
     // and the two forms agree on the pairs themselves
-    val a = TextDedup.crossLshPairsFromIndex(
-      spark.read.parquet(p + "/sigs"), spark.read.parquet(p + "/sets"),
-      batch, "doc_id", "text").collect().map(_.toSeq).toSet
-    val b = TextDedup.crossLshPairsFromBandedIndex(
-      spark, "graft_lshb_spec2", batch, "doc_id", "text")
-      .collect().map(_.toSeq).toSet
-    assert(a == b)
+    assert(direct.collect().map(_.toSeq).toSet ==
+      viaIndex.collect().map(_.toSeq).toSet)
   }
 
   test("corrupt meta parameters fail loudly, not with wrong banding") {

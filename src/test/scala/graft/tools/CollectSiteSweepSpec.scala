@@ -92,9 +92,6 @@ class CollectSiteSweepSpec extends AnyFunSuite {
     Entry("operators/SnapshotDiff.scala",
       ".count().filter(col(\"count\") > 1).limit(1).collect()",
       "limited", "1-row duplicate-key existence probe"),
-    Entry("operators/TextDedup.scala",
-      "corpusSigs.select(size(col(\"sig\")).as(\"w\")).limit(1).collect()",
-      "limited", "1-row signature-width probe"),
     Entry("operators/TextDedup.scala", "val m = meta.collect()",
       "meta-row", "LSH index meta — row count require'd == 1"),
     Entry("operators/TextDedup.scala",
