@@ -23,25 +23,13 @@ object Curation {
     * every pairwise-connected group's minimum element chain.
     */
   def nearDupDrops(docs: DataFrame, idCol: String, textCol: String,
-                   minJaccard: Double,
-                   maxPairFactor: Option[Double] = None): DataFrame =
-    TextDedup.minHashLshPairs(docs, idCol, textCol, minJaccard = minJaccard,
-        maxPairFactor = maxPairFactor)
+                   minJaccard: Double): DataFrame =
+    TextDedup.minHashLshPairs(docs, idCol, textCol, minJaccard = minJaccard)
       .select(col("doc_b").as(idCol)).distinct()
 
-  /** @param maxPairFactor opt-in pair-volume preflight on the near-dup
-    *   stage ([[TextDedup.minHashLshPairs]]'s guard — fail fast, hot
-    *   buckets named, when corpus drift degrades the LSH blocking).
-    *   Inherits that operator's shared-cache contract: a guarded call
-    *   leaves the banded-keys cache the returned pipeline reads;
-    *   release after consuming via
-    *   `TextDedup.minHashBandedKeys(docs, idCol, textCol).unpersist()`
-    *   (the defaults here match that operator's banding defaults).
-    */
   def curate(docs: DataFrame, idCol: String, textCol: String,
              minQuality: Double = 0.4, lang: String = "en",
-             minJaccard: Double = 0.5,
-             maxPairFactor: Option[Double] = None): DataFrame = {
+             minJaccard: Double = 0.5): DataFrame = {
     val quality: Column =
       TextAnalysis.qualityScore(col(textCol)).cast("decimal(18,6)")
 
@@ -52,7 +40,7 @@ object Curation {
 
     docs
       .join(exactSurvivors, idCol)
-      .join(nearDupDrops(docs, idCol, textCol, minJaccard, maxPairFactor),
+      .join(nearDupDrops(docs, idCol, textCol, minJaccard),
         Seq(idCol), "left_anti")
       .withColumn("quality", quality)
       // gate on the rounded decimal so the cut is engine-stable

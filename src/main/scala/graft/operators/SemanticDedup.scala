@@ -48,51 +48,20 @@ object SemanticDedup {
     * a hard-coded cell count keeps E|cell| growing with the corpus and
     * within-cell pair work quadratic-with-n/C, which is exactly how a
     * "sub-quadratic" dedup silently degrades as data grows 100×.
-    *
-    * @param maxPairFactor opt-in pair-volume preflight
-    *   ([[BlockingBudget.preflightSelf]] on the CELL id — the ANN
-    *   analogue of the text families' guards): fail fast, hottest cells
-    *   named, when the within-cell candidate volume Σ|cell|² exceeds
-    *   `maxPairFactor · (membership rows)`. Degenerate embeddings — a
-    *   broken upstream encoder emitting constant or zero vectors — crowd
-    *   every row into ONE k-means cell regardless of the C ≈ √n
-    *   auto-sizing, squaring the cell self-join with no plan-shape
-    *   change; only the pair volume sees it. FACTOR SEMANTICS differ
-    *   from the LSH families: a balanced layout measures
-    *   volume/rows ≈ E|cell| = n·probes/C (≈ √n at the auto-sizing), so
-    *   the budget is a small multiple of the cell size the caller's
-    *   sizing implies, not a corpus-independent constant; degeneration
-    *   drives the ratio toward n. Guard cost: ONE extra
-    *   assignment-and-count pass over the corpus (the membership frame
-    *   is pruned to its cell-id column). Deliberately NOT the LSH
-    *   shared-materialization shape — the membership frame carries the
-    *   corpus EMBEDDINGS (dim × 8 B per row; the
-    *   `prefixBlockedLinkage` class), so nothing is persisted and no
-    *   release contract exists; the repeated-run production posture is
-    *   the persisted index ([[incrementalPairsFromIndex]]), where the
-    *   guard's corpus side reads the STORED cell-id column at
-    *   pruned-columnar-scan cost. Default `None`: no extra work, plan
-    *   byte-identical (the guard is a separate eager action; the
-    *   returned plan never changes).
     */
   def semanticDupPairs(df: DataFrame, idCol: String, vecCol: String,
                        nClusters: Int, threshold: Double,
-                       assignProbes: Int = 1, seed: Long = 42L,
-                       maxPairFactor: Option[Double] = None): DataFrame = {
+                       assignProbes: Int = 1, seed: Long = 42L): DataFrame = {
     require(assignProbes >= 1, s"assignProbes must be >= 1: $assignProbes")
-    Similarity.requireCosineThreshold(threshold)
     // before the eager count + k-means below (thresholds validate before
     // eager work — the r12 rule)
-    maxPairFactor.foreach(f => require(f > 0, s"maxPairFactor must be > 0: $f"))
+    Similarity.requireCosineThreshold(threshold)
     val c = if (nClusters > 0) nClusters else Similarity.ivfSizing(df.count())
     // one assignment pass yields both the index and the memberships —
     // assigning twice would pay the O(n·k·dim) centroid scoring per
     // consumer (code-review finding, closed)
     val (_, members) = Similarity.ivfIndexAndMembers(df, idCol, vecCol,
       c, probes = assignProbes, seed = seed)
-    maxPairFactor.foreach(f =>
-      BlockingBudget.preflightSelf(members, col("cluster"), f,
-        "semanticDupPairs"))
     // membership frames carry nrm: norms once per vector, dot-only per
     // within-cell pair (see [[Similarity.cosineFromNorms]])
     val a = members.select(col("cluster"), col("vid").as("_sd_ida"),
@@ -128,28 +97,15 @@ object SemanticDedup {
     * recall, the [[semanticDupPairs]] argument). Ids need not be
     * disjoint; a batch vector never matches the corpus vector with the
     * same id (self-pair guard).
-    *
-    * @param maxPairFactor opt-in cross pair-volume preflight
-    *   ([[BlockingBudget.preflight]] on the cell id, the cross form of
-    *   [[semanticDupPairs]]'s guard): budget is `maxPairFactor ·
-    *   max(corpus, batch) · assignProbes` membership rows — the larger
-    *   side, so the bound stays linear in the corpus an append-only
-    *   ingest loop accumulates (the `crossMinHashLshPairs` convention;
-    *   the row counts are raw-input counts × probes, exact because every
-    *   vector gets exactly `assignProbes` memberships). Guard cost: one
-    *   extra assignment-and-count pass per side; nothing persisted (the
-    *   membership frames carry embeddings — see [[semanticDupPairs]]).
     */
   def incrementalPairs(corpus: DataFrame, batch: DataFrame,
                        idCol: String, vecCol: String,
                        nClusters: Int, threshold: Double,
-                       assignProbes: Int = 2, seed: Long = 42L,
-                       maxPairFactor: Option[Double] = None): DataFrame = {
+                       assignProbes: Int = 2, seed: Long = 42L): DataFrame = {
     require(assignProbes >= 1, s"assignProbes must be >= 1: $assignProbes")
     // validate BEFORE the k-means training below — a bad threshold must
     // not cost an O(n·k·dim) scoring pass before it throws
     Similarity.requireCosineThreshold(threshold)
-    maxPairFactor.foreach(f => require(f > 0, s"maxPairFactor must be > 0: $f"))
     // the corpus is centroid-scored ONCE: the same assignment pass
     // produces the index (for the batch side's probes) and the corpus
     // memberships (code-review finding, closed)
@@ -157,9 +113,7 @@ object SemanticDedup {
       vecCol, nClusters, probes = assignProbes, seed = seed)
     crossPairs(
       Similarity.clusterAssignments(index, batch, idCol, vecCol, assignProbes),
-      corpusMembers, threshold, maxPairFactor,
-      refRows = math.max(corpus.count(), batch.count()) * assignProbes,
-      op = "incrementalPairs")
+      corpusMembers, threshold)
   }
 
   // ---------------------------------------------------------------------
@@ -220,26 +174,14 @@ object SemanticDedup {
     * count is fixed at build time on the corpus side; `assignProbes`
     * here governs the batch side and should match the build for the
     * documented recall.
-    *
-    * @param maxPairFactor opt-in cross preflight, as [[incrementalPairs]]
-    *   — and here the guard is the PRODUCTION-cheap form the text
-    *   families get from their shared banding cache: the corpus side of
-    *   the per-cell counts reads the STORED members table's cell-id
-    *   column (a pruned columnar scan — no k-means, no assignment UDF),
-    *   so only the small batch is centroid-scored twice. Budget
-    *   denominator: `max(stored membership rows, batch rows ·
-    *   assignProbes)`.
     */
   def incrementalPairsFromIndex(centroidsDf: DataFrame, membersDf: DataFrame,
                                 batch: DataFrame, idCol: String,
                                 vecCol: String, threshold: Double,
-                                assignProbes: Int = 2,
-                                maxPairFactor: Option[Double] = None)
-      : DataFrame = {
+                                assignProbes: Int = 2): DataFrame = {
     require(assignProbes >= 1, s"assignProbes must be >= 1: $assignProbes")
     // before the centroid collect+validation in loadIvfIndex below
     Similarity.requireCosineThreshold(threshold)
-    maxPairFactor.foreach(f => require(f > 0, s"maxPairFactor must be > 0: $f"))
     val mCols = membersDf.columns.toSet
     require(Set("vid", "v", "nrm", "cluster").subsetOf(mCols),
       s"semantic members table needs (vid, v, nrm, cluster), got " +
@@ -251,26 +193,14 @@ object SemanticDedup {
         col("cluster").as("centroid")))
     crossPairs(
       Similarity.clusterAssignments(index, batch, idCol, vecCol, assignProbes),
-      membersDf, threshold, maxPairFactor,
-      refRows = math.max(membersDf.count(),
-        batch.count() * assignProbes),
-      op = "incrementalPairsFromIndex")
+      membersDf, threshold)
   }
 
   /** Shared verify core: batch memberships × corpus memberships on the
     * cluster id, exact cosine, threshold, self-pair guard, overlap dedup.
-    * `refRows` is by-name: the side counts are only paid when the guard
-    * is on.
     */
   private def crossPairs(batchMembers: DataFrame, corpusMembers: DataFrame,
-                         threshold: Double,
-                         maxPairFactor: Option[Double] = None,
-                         refRows: => Long = 0L,
-                         op: String = ""): DataFrame = {
-    maxPairFactor.foreach(f =>
-      BlockingBudget.preflight(batchMembers, col("cluster"),
-        corpusMembers, col("cluster"), f, refRows, op))
-    // backstop — both public entry points validate before their eager work
+                         threshold: Double): DataFrame = {
     // membership frames carry nrm: dot-only per cross pair
     val corpusM = corpusMembers
       .select(col("cluster"), col("vid").as("_sd_cid"),

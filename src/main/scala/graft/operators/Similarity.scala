@@ -551,7 +551,7 @@ object Similarity {
     // closure: a closure-captured matrix is serialized into the task
     // binary and re-shipped once per STAGE that touches the index —
     // at the C ≈ √n auto-sizing on a 1e9-row corpus that is a
-    // √(1e9)·dim·8 B ≈ 16 MB task binary for every probe/build/guard
+    // √(1e9)·dim·8 B ≈ 16 MB task binary for every probe/build
     // stage, where the broadcast ships once per EXECUTOR (torrent) and
     // the task binary carries only the handle. Identical results and
     // plan shape; at spec scale (C ≤ a few hundred, ≈130 KB) the
@@ -635,15 +635,11 @@ object Similarity {
     * [[knnGraphApprox]] handles the same shape with one int-key shuffle
     * per side). The route is now SIZED: `broadcastQueries` forces either
     * shape; `None` (default) estimates the exploded payload from one
-    * `count()` of the query side — a driver-cheap aggregation the guard
-    * path already shares via the same lazy count — and broadcasts only
-    * at or under [[Broadcasts.QueryBroadcastBudgetBytes]]. Results are
-    * hash-identical either way (same join predicate, same cosine;
-    * pinned in `IvfRoutePlanSpec`); only the physical exchange differs.
-    *
-    * `maxPairFactor` (opt-in, default `None`) runs the cross pair-volume
-    * preflight over the exact blocking key this join scans on — probe id
-    * vs home centroid id (see [[guardIvfCells]]).
+    * `count()` of the query side — a driver-cheap aggregation — and
+    * broadcasts only at or under [[Broadcasts.QueryBroadcastBudgetBytes]].
+    * Results are hash-identical either way (same join predicate, same
+    * cosine; pinned in `IvfRoutePlanSpec`); only the physical exchange
+    * differs.
     *
     * ROUTE-COUNT COST (the one eager job the auto route can pay): with
     * `broadcastQueries = None` the size estimate first asks Catalyst for
@@ -666,8 +662,6 @@ object Similarity {
     */
   private def ivfScored(index: IvfIndex, queries: DataFrame, idCol: String,
                         vecCol: String, nProbe: Int,
-                        maxPairFactor: Option[Double] = None,
-                        op: String = "",
                         broadcastQueries: Option[Boolean] = None,
                         knownQueryRows: Option[Long] = None)
       : (DataFrame, Boolean) = {
@@ -676,10 +670,8 @@ object Similarity {
       .select(col("vid").as("qid"), col("v").as("qv"), col("nrm").as("qnrm"),
         explode(array((0 until nProbe).map(i => col(s"c$i")): _*))
           .as("probe"))
-    // one count serves both the auto-route and the guard's refRows; lazy
-    // so a forced route with the guard off pays neither
+    // lazy: a forced route, or a proven row bound that fits, never counts
     lazy val qRows = knownQueryRows.getOrElse(queries.count())
-    guardIvfCells(q, index, maxPairFactor, refRows = qRows * nProbe, op)
     // per exploded row: dim doubles (the query vector, duplicated per
     // probe in the hashed relation) + qid/nrm/probe + array header —
     // a deliberate overestimate, erring toward the shuffle
@@ -702,41 +694,6 @@ object Similarity {
         cosineFromNorms(col("v"), col("qv"), col("nrm"), col("qnrm")))
     (scored, viaBroadcast)
   }
-
-  /** The IVF families' pair-volume preflight ([[BlockingBudget.preflight]]
-    * on the CELL id — the ANN analogue of the text-blocking guards): the
-    * candidate volume of a probe join is Σ_c |probes(c)|·|home(c)|, and a
-    * degenerate embedding space (a broken upstream encoder emitting
-    * constant or zero vectors) crowds every row into ONE k-means cell
-    * REGARDLESS of the C ≈ √n auto-sizing — the scan degrades toward
-    * |queries|·n with no plan-shape change; only the pair volume sees it.
-    *
-    * Budget is `maxPairFactor · max(corpus rows, query probe rows)` — the
-    * larger side, the `crossMinHashLshPairs` convention. FACTOR
-    * SEMANTICS: a balanced layout measures volume/refRows ≈
-    * nProbe · E|cell| = nProbe · n/C (≈ nProbe·√n at the auto-sizing), so
-    * the budget is a small multiple of the cell size the caller's sizing
-    * implies — not a corpus-independent constant like the LSH factors;
-    * degeneration drives the ratio toward n.
-    *
-    * Cost when on: one per-side count aggregation over the cell ids. The
-    * home side reads `index.vectors`'s `centroid` column — a pruned
-    * columnar scan when the index is LOADED from storage (the production
-    * repeated-run posture, [[loadIvfIndex]]); for an in-query index it
-    * re-runs the assignment UDF once more (the scoped-guard cost,
-    * deliberate: the cell frames carry corpus EMBEDDINGS, so the LSH
-    * families' shared-materialization persist would cache corpus-sized
-    * vector data — the `prefixBlockedLinkage` class). `refRows` is
-    * by-name so the side counts are only paid when the guard is on.
-    */
-  private def guardIvfCells(q: DataFrame, index: IvfIndex,
-                            maxPairFactor: Option[Double],
-                            refRows: => Long, op: String): Unit =
-    maxPairFactor.foreach { f =>
-      BlockingBudget.preflight(q, col("probe"),
-        index.vectors, col("centroid"), f,
-        math.max(index.vectors.count(), refRows), op)
-    }
 
   /** Per-vector cluster memberships under an index's coarse quantizer:
     * each row of `df` exploded to its `probes` nearest centroids as
@@ -770,10 +727,6 @@ object Similarity {
     * query shuffle to the final per-query window (lossless: a global
     * winner must win its own bucket).
     *
-    * @param maxPairFactor opt-in cell pair-volume preflight
-    *   ([[guardIvfCells]]): fail fast, hottest cells named, when a
-    *   degenerate embedding space crowds the probe join. Default `None`:
-    *   no extra work beyond the route's one query-side count.
     * @param broadcastQueries force the probe join's query side on
     *   (`Some(true)`) or off (`Some(false)`) the broadcast; `None`
     *   (default) sizes it against [[Broadcasts.QueryBroadcastBudgetBytes]].
@@ -781,10 +734,9 @@ object Similarity {
     */
   def ivfTopK(index: IvfIndex, queries: DataFrame, idCol: String,
               vecCol: String, k: Int, nProbe: Int,
-              maxPairFactor: Option[Double] = None,
               broadcastQueries: Option[Boolean] = None): DataFrame = {
     val (scored, viaBroadcast) = ivfScored(index, queries, idCol, vecCol,
-      nProbe, maxPairFactor, "ivfTopK", broadcastQueries)
+      nProbe, broadcastQueries)
     val ranked =
       if (viaBroadcast) scored
       else scored
@@ -830,14 +782,8 @@ object Similarity {
     * ≤ nProbe·k survivors per node shuffle to the final per-node window.
     * Ordering matches [[ivfTopK]]: full-precision cosine desc, neighbor
     * id asc tie-break; DECIMAL(18,4) on output only.
-    *
-    * @param maxPairFactor opt-in cell pair-volume preflight
-    *   ([[guardIvfCells]]) over the probe-vs-home join this build runs;
-    *   budget `maxPairFactor · n · nProbe`. Default `None`: plan
-    *   byte-identical.
     */
-  def knnGraphApprox(index: IvfIndex, k: Int, nProbe: Int,
-                     maxPairFactor: Option[Double] = None): DataFrame = {
+  def knnGraphApprox(index: IvfIndex, k: Int, nProbe: Int): DataFrame = {
     require(k >= 1, s"k must be positive: $k")
     require(nProbe >= 1, s"nProbe must be positive: $nProbe")
     val q = assign(index.vectors.select(col("vid"), col("v"), col("nrm")),
@@ -845,11 +791,6 @@ object Similarity {
       .select(col("vid").as("qid"), col("v").as("qv"), col("nrm").as("qnrm"),
         explode(array((0 until nProbe).map(i => col(s"c$i")): _*))
           .as("probe"))
-    // queries = corpus here, so both refRows candidates are the corpus
-    // side; the factor's healthy reading is nProbe·E|cell| (≈ nProbe·√n
-    // at C≈√n — the documented n^1.5 candidate volume), per guardIvfCells
-    guardIvfCells(q, index, maxPairFactor,
-      refRows = index.vectors.count() * nProbe, "knnGraphApprox")
     val scored = index.vectors
       .select(col("vid"), col("v"), col("nrm"), col("centroid"))
       .join(q, col("centroid") === col("probe") && col("vid") =!= col("qid"))
@@ -948,18 +889,14 @@ object Similarity {
 
   /** [[ivfTopK]] over the persisted tables — the increment's entry point.
     * By construction this path CANNOT train: it only reads the stored
-    * centroid matrix and the stored assignments. With `maxPairFactor`
-    * set, the guard's corpus side is a pruned columnar scan of the
-    * stored `centroid` column — the production-cheap form of
-    * [[guardIvfCells]] (no assignment UDF re-run on the corpus).
+    * centroid matrix and the stored assignments.
     */
   def ivfTopKFromIndex(centroidsDf: DataFrame, vectorsDf: DataFrame,
                        queries: DataFrame, idCol: String, vecCol: String,
                        k: Int, nProbe: Int,
-                       maxPairFactor: Option[Double] = None,
                        broadcastQueries: Option[Boolean] = None): DataFrame =
     ivfTopK(loadIvfIndex(centroidsDf, vectorsDf), queries, idCol, vecCol,
-      k, nProbe, maxPairFactor, broadcastQueries)
+      k, nProbe, broadcastQueries)
 
   /** CONTRASTIVE training-pair assembly — the pair-mining step of an
     * embedding-model pipeline, composed from the two similarity families:
@@ -1002,7 +939,7 @@ object Similarity {
     // degrades to a cartesian, and its bounded-anchor contract is the
     // documented reason NegativesIvf exists.
     // counted ONCE per call: the id-hint gate here and the IVF paths'
-    // route/guard below share this number via knownQueryRows (the
+    // route below share this number via knownQueryRows (the
     // anchors frame IS ivfScored's query frame), so negative mining
     // never re-executes the anchor plan for a second estimate
     val aRows = anchors.count()
@@ -1027,16 +964,15 @@ object Similarity {
           .select(col("anchor"), col("vid"),
             cosineFromNorms(col("v"), col("qv"), col("nrm"), col("qnrm"))
               .as("_cp_cos"))
-      case NegativesIvf(nCentroids, nProbe, seed, maxPairFactor) =>
+      case NegativesIvf(nCentroids, nProbe, seed) =>
         val index = ivfIndex(df, idCol, vecCol, nCentroids, seed)
-        ivfScored(index, anchors, idCol, vecCol, nProbe, maxPairFactor,
-          "contrastivePairs", knownQueryRows = Some(aRows))._1
+        ivfScored(index, anchors, idCol, vecCol, nProbe,
+          knownQueryRows = Some(aRows))._1
           .select(col("qid").as("anchor"), col("vid"),
             col("cosine").as("_cp_cos"))
-      case NegativesFromIndex(centroidsDf, vectorsDf, nProbe, maxPairFactor) =>
+      case NegativesFromIndex(centroidsDf, vectorsDf, nProbe) =>
         ivfScored(loadIvfIndex(centroidsDf, vectorsDf), anchors, idCol,
-          vecCol, nProbe, maxPairFactor, "contrastivePairs",
-          knownQueryRows = Some(aRows))._1
+          vecCol, nProbe, knownQueryRows = Some(aRows))._1
           .select(col("qid").as("anchor"), col("vid"),
             col("cosine").as("_cp_cos"))
     }
@@ -1074,24 +1010,18 @@ case object NegativesBruteForce extends NegativeMining
   * against a stable corpus should build once ([[Similarity.saveIvfIndexBucketed]])
   * and mine with [[NegativesFromIndex]], which cannot train by
   * construction.
-  *
-  * `maxPairFactor` opts the negative-mining probe join into the cell
-  * pair-volume preflight (the `Similarity.guardIvfCells` contract).
   */
 final case class NegativesIvf(nCentroids: Int, nProbe: Int,
-                              seed: Long = 42L,
-                              maxPairFactor: Option[Double] = None)
+                              seed: Long = 42L)
     extends NegativeMining
 
 /** Probe a PERSISTED IVF index (the [[Similarity.saveIvfIndexBucketed]] tables):
   * the repeated-mining form of [[NegativesIvf]] — reads the stored
-  * centroid matrix and assignments, trains nothing; its `maxPairFactor`
-  * guard reads the stored `centroid` column at pruned-scan cost.
+  * centroid matrix and assignments, trains nothing.
   */
 final case class NegativesFromIndex(centroidsDf: DataFrame,
                                     vectorsDf: DataFrame,
-                                    nProbe: Int,
-                                    maxPairFactor: Option[Double] = None)
+                                    nProbe: Int)
     extends NegativeMining
 
 /** Vectors tagged with their centroid partition + the centroid matrix. */

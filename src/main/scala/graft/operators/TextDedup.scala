@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Document-deduplication operators for large-scale training-data pipelines.
@@ -186,39 +186,10 @@ object TextDedup {
     * similarity s is 1−(1−s^r)^b — with 16×2 defaults, &gt;0.99 at s=0.5 and
     * ≈1 beyond 0.8.
     */
-  /** @param maxPairFactor opt-in production preflight
-    *   ([[BlockingBudget.preflight]]): when set, the band buckets'
-    *   candidate-pair volume is measured EAGERLY (before the join is
-    *   returned) and the call throws — naming the hot buckets — if it
-    *   exceeds `maxPairFactor · (banded key rows)`, the
-    *   `LshBucketBudgetSpec` accounting. The guard a scheduled dedup
-    *   job wants against a corpus drifting toward boilerplate: bucket
-    *   crowding reverts the join toward n² with no plan-shape change.
-    *   Default `None`: no extra work, no plan change.
-    *
-    *   SHARED MATERIALIZATION — the guarded call persists the
-    *   [[minHashBandedKeys]] frame and the RETURNED join plan reads
-    *   that cache, so signatures+banding (the dominant derivation
-    *   cost) materialize once for guard plus join instead of twice
-    *   (measured: the guard-scoped form paid ~1.8× on a probe-shaped
-    *   pipeline, ARCHITECTURE.md §Round-14). The cache therefore
-    *   outlives the call — release it after consuming the result via
-    *   the handle: `minHashBandedKeys(df, …same args…).unpersist()`
-    *   (the CacheManager matches equivalent plans; spec-proven in
-    *   `BlockingPreflightSpec`). The il2/`bloomNewDocs` contract
-    *   shape: a documented caller-released cache, not a leak — it is
-    *   banding-sized ((doc, band, hash) per band per doc, never
-    *   document text), and a FAILED preflight releases it before
-    *   throwing.
-    */
   def minHashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       n: Int = 5, numHashes: Int = 32, bands: Int = 16,
-                      minJaccard: Double = 0.5,
-                      maxPairFactor: Option[Double] = None): DataFrame = {
-    val banded0 = minHashBandedKeys(df, idCol, textCol, n, numHashes, bands)
-    val banded = maxPairFactor.fold(banded0)(f =>
-      guardBanded(banded0, struct(col("band"), col("bh")), f,
-        "minHashLshPairs"))
+                      minJaccard: Double = 0.5): DataFrame = {
+    val banded = minHashBandedKeys(df, idCol, textCol, n, numHashes, bands)
     val candidates = banded.as("a")
       .join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh")
@@ -255,9 +226,9 @@ object TextDedup {
     * keys shared by the self-join ([[minHashLshPairs]]) and cross-corpus
     * ([[crossMinHashLshPairs]]) variants. `private[graft]` so the
     * bucket-crowding budget spec audits the EXACT key expression the
-    * joins use (`LshBucketBudgetSpec` pins Σ bucketsize² via
-    * [[BlockingBudget]] — the same pair-volume cost model that caught
-    * fz1's saturating prefix).
+    * joins use (`LshBucketBudgetSpec` pins Σ bucketsize² through the
+    * spec-side `BlockingReference` — the same pair-volume cost model
+    * that caught fz1's saturating prefix).
     */
   private[graft] def bandedKeys(sigs: DataFrame, bands: Int, r: Int): DataFrame =
     sigs.select(col("doc"),
@@ -268,219 +239,16 @@ object TextDedup {
         .as(Seq("band", "bh")))
 
   /** The (doc, band, bh) banded LSH bucket keys of [[minHashLshPairs]] /
-    * [[crossMinHashLshPairs]] end-to-end from the raw corpus — public for
-    * two jobs: (a) building a STORED LSH index (sign once per corpus
-    * generation, join increments against the saved frame — the il1/il2
-    * ingest shape); (b) the guard-cache RELEASE HANDLE — a guarded call
-    * (`maxPairFactor`) persists exactly this frame and the returned join
-    * reads the cache, so the caller releases it after consuming the
-    * result by calling `.unpersist()` on an equivalently-constructed
-    * frame (Spark's CacheManager matches plans structurally, so
-    * `minHashBandedKeys(df, …same args…).unpersist()` drops the
-    * operator's internal cache — spec-proven in `BlockingPreflightSpec`).
+    * [[crossMinHashLshPairs]] end-to-end from the raw corpus — also the
+    * `_banded` table of a stored LSH index ([[saveLshIndexBucketed]]).
     */
-  def minHashBandedKeys(df: DataFrame, idCol: String, textCol: String,
-                        n: Int = 5, numHashes: Int = 32,
-                        bands: Int = 16): DataFrame = {
+  private[graft] def minHashBandedKeys(df: DataFrame, idCol: String,
+                                       textCol: String, n: Int = 5,
+                                       numHashes: Int = 32,
+                                       bands: Int = 16): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     bandedKeys(minHashSignatures(df, idCol, textCol, n, numHashes),
       bands, numHashes / bands)
-  }
-
-  /** The guarded families' shared materialization: persist the banded-key
-    * frame, preflight its pair volume ([[BlockingBudget.preflightSelf]]
-    * — its one profile aggregation doubles as the cache's materializing
-    * action), and hand the PERSISTED frame back for the join plan to
-    * read. On preflight failure the cache is released before the throw
-    * (nothing to reuse — no join is returned); on success it stays, per
-    * the caller-releases contract documented on each `maxPairFactor`
-    * param.
-    */
-  private def guardBanded(banded: DataFrame, key: Column, maxPairFactor: Double,
-                          op: String): DataFrame = {
-    // Default StorageLevel (MEMORY_AND_DISK, compressed columnar) —
-    // right for the guard's job-scoped life. A pipeline that wants the
-    // banding to OUTLIVE a job (the true 100 TB posture: sign once per
-    // corpus generation, reuse across increments) should SAVE the
-    // public banded-keys frame as a table instead of relying on this
-    // cache — executor storage is per-application and a cached 100 TB
-    // corpus's banding (~tens of bytes × bands per doc) belongs in
-    // storage, not memory pressure.
-    val b = banded.persist()
-    try {
-      BlockingBudget.preflightSelf(b, key, maxPairFactor, op)
-      warnIfGuardCachesAccumulate(op, b)
-      b
-    } catch { case t: Throwable => b.unpersist(false); throw t }
-  }
-
-  /** Leak early-warning for the caller-releases cache contract: a loop of
-    * guarded calls over CHANGING inputs that never releases accumulates
-    * one materialized cache entry per iteration — correct results, growing
-    * executor storage, and nothing fails until memory pressure does. The
-    * passing-guard path registers its cache here and warns on stderr when
-    * the OUTSTANDING guard caches reach [[GuardCacheWarnEntries]], naming
-    * the release mechanisms.
-    *
-    * The registry counts GUARD caches only, keyed by (session identity,
-    * canonicalized plan) — the plan alone would merge two SESSIONS
-    * guarding structurally identical inputs into one entry (cache
-    * entries are per-session state, so that merge undercounts; the
-    * identity hash is the public, cast-free session discriminator — a
-    * warn-only counter tolerates its theoretical collisions). Re-guarding
-    * the same input IN one session reuses one CacheManager entry, so the
-    * registry must too. Released entries prune via
-    * `Dataset.storageLevel` — a public lookup that consults the
-    * CacheManager, so EVERY release path (handle `unpersist`, the loan
-    * wrapper, `clearCache`) empties it — at BOTH collection points:
-    * every guarded call, and the loan wrapper's exit (so a process that
-    * guards through the wrapper retains nothing once it stops).
-    * Retention contract: LIVE entries are retained BY DESIGN — they are
-    * the leak being counted; a RELEASED frame is retained only until
-    * the next guarded call or wrapper exit (driver-side plan objects,
-    * no executor storage). Weak references were considered and
-    * REJECTED: the registered frame is unreachable the moment the
-    * guarded call returns (callers hold the returned JOIN, whose plan
-    * references logical plans, not this `DataFrame` object), so the
-    * first GC cycle would clear every entry and silently disarm the
-    * warning — an observer that vanishes exactly when the leak it
-    * watches for is live. The first cut counted the whole session's
-    * persistent RDDs instead, which false-alarmed after ONE guarded
-    * call whenever unrelated deliberate persists (il2's bloom gate, a
-    * user's own caches, a parallel test suite) were live —
-    * review-caught: a leak warning that cries wolf on a healthy session
-    * trains callers to ignore the one real signal it exists to give.
-    */
-  private val GuardCacheWarnEntries = 4
-
-  private val guardCaches = scala.collection.mutable.LinkedHashMap
-    .empty[(Int, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-      DataFrame]
-
-  /** Drop registry entries whose cache is gone. Try guards an entry
-    * whose session has since stopped (its CacheManager lookup would
-    * throw) — a dead session holds no cache.
-    */
-  private def pruneReleasedGuardCaches(): Unit = guardCaches.synchronized {
-    guardCaches.filterInPlace((_, d) => scala.util.Try(
-      d.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-      .getOrElse(false))
-  }
-
-  private def warnIfGuardCachesAccumulate(op: String,
-                                          dfs: DataFrame*): Unit = {
-    val n = guardCaches.synchronized {
-      pruneReleasedGuardCaches()
-      dfs.foreach(df => guardCaches.update(
-        (System.identityHashCode(df.sparkSession),
-          df.queryExecution.analyzed.canonicalized), df))
-      guardCaches.size
-    }
-    if (n >= GuardCacheWarnEntries)
-      Console.err.println(s"[graft] $op: $n guard banded-keys caches " +
-        "outstanding after this guarded call - a loop of guarded calls " +
-        "must release each iteration's cache via the public banded-keys " +
-        "handles or TextDedup.releasingGuardCaches (see the " +
-        "maxPairFactor contract)")
-  }
-
-  /** Loan-pattern release for guarded calls — the MECHANISM form of the
-    * caller-releases cache contract: run `body`, then unconditionally
-    * `unpersist` every given banded-keys handle, so a loop issuing
-    * guarded calls over CHANGING inputs (per-batch ingest) cannot
-    * accumulate cache entries even if it forgets the release. Handles
-    * are the public banded-keys frames ([[minHashBandedKeys]] /
-    * [[simHashBandedKeys]] / [[simHashBandedKeys128]]) constructed
-    * with the same arguments as the guarded call — plan-equivalence
-    * does the matching; releasing a handle that was never persisted is
-    * a no-op, so the wrapper is safe around code whose guard may trip
-    * (the failure path already released).
-    *
-    * CONTRACT — ENFORCED BY MECHANISM: the body must CONSUME the
-    * guarded result (run an action — count/collect/write — as the
-    * example does). Returning the lazy `Dataset` out of the wrapper
-    * would defeat the shared materialization: the cache is released
-    * before the join ever executes, and the deferred action silently
-    * re-derives signatures+banding from scratch — correct results,
-    * but paying the exact premium the sharing exists to eliminate.
-    * Because that misuse is invisible (nothing fails, everything is
-    * just slower), the wrapper REJECTS a `Dataset`-typed body result
-    * with `IllegalArgumentException` instead of documenting the rule
-    * away (the lgK-floor/double-product pattern: close the foot-gun in
-    * code). The check traverses SHALLOW containers — tuples/case
-    * classes (`Product`), `Iterable`s, and arrays — so `(count, df)`
-    * or `Some(df)` cannot smuggle the lazy frame out either; it does
-    * NOT chase arbitrary object graphs (a `Dataset` hidden in a custom
-    * class field passes — at that point the caller is working to
-    * defeat the guard rail, not tripping over it). A caller that
-    * genuinely wants the lazy frame to outlive the caches should not
-    * use the loan wrapper — hold the handles and release them after
-    * consuming, per the `maxPairFactor` contract.
-    *
-    * {{{
-    * TextDedup.releasingGuardCaches(
-    *     TextDedup.minHashBandedKeys(batch, "id", "text")) {
-    *   TextDedup.minHashLshPairs(batch, "id", "text",
-    *     maxPairFactor = Some(32.0)).count()
-    * }
-    * }}}
-    */
-  def releasingGuardCaches[T](handles: DataFrame*)(body: => T): T =
-    try {
-      val result = body
-      require(!containsLazyDataset(result),
-        "releasingGuardCaches body returned a lazy Dataset or a deferred " +
-          "producer that could hide one (an Iterator — toLocalIterator " +
-          "included — a view, or a LazyList/Stream, directly or inside " +
-          "a tuple/Option/collection): the wrapper releases the guard " +
-          "caches on exit, so a deferred plan would silently re-derive " +
-          "its banding from scratch — consume the result inside the " +
-          "body (count/collect/write) and return the consumed value, " +
-          "or skip the wrapper and release the banded-keys handles " +
-          "yourself after the action")
-      result
-    } finally {
-      handles.foreach(_.unpersist(false))
-      // second collection point (see the registry scaladoc): a process
-      // that guards exclusively through this wrapper retains no
-      // released frames once it stops issuing guarded calls
-      pruneReleasedGuardCaches()
-    }
-
-  /** Shallow container traversal for the consume-contract check: finds a
-    * `Dataset` at the top level or inside tuples/case classes,
-    * `Iterable`s, and arrays. `Row` is exempt — a collected `Row` is
-    * CONSUMED data (and `Row` is a `Product`, so without the exemption a
-    * `collect()`ed result would be walked field-by-field for nothing).
-    *
-    * DEFERRED PRODUCERS are rejected WITHOUT traversal, for two reasons:
-    * (a) `df.toLocalIterator()` (a `java.util.Iterator`, not an
-    * `Iterable`) defers one Spark job PER PARTITION past the cache
-    * release — the one accidental lazy escape a caller reaches for in
-    * good faith, and it carries no `Dataset` for traversal to find;
-    * (b) traversing a `LazyList`/view/`Iterator` FORCES it on the driver
-    * inside this require — a lazily-produced body result would be fully
-    * evaluated (or hang, if unbounded) before the caches release, which
-    * is both a surprise cost and exactly the deferred-past-release
-    * execution the contract forbids. A body that legitimately computes
-    * something lazy should materialize it (`toList`) before returning —
-    * eager is what "consumed" means here.
-    */
-  private def containsLazyDataset(x: Any): Boolean = x match {
-    case _: Dataset[_] => true
-    case _: org.apache.spark.sql.Row => false
-    // deferred producers: reject unconditionally, never traverse (order
-    // matters — LazyList/Stream/views are Iterables, so these cases must
-    // precede the Iterable walk)
-    case _: Iterator[_] => true
-    case _: java.util.Iterator[_] => true
-    case _: scala.collection.View[_] => true
-    case _: LazyList[_] => true
-    case _: scala.collection.immutable.Stream[_] => true
-    case p: Product => p.productIterator.exists(containsLazyDataset)
-    case i: Iterable[_] => i.exists(containsLazyDataset)
-    case a: Array[_] => a.exists(containsLazyDataset)
-    case _ => false
   }
 
   /** INCREMENTAL near-dup scan: a NEW batch against an EXISTING corpus via
@@ -497,42 +265,12 @@ object TextDedup {
     * takes the raw corpus and builds both in-plan, which is the same plan
     * with the storage round-trip elided.
     */
-  /** @param maxPairFactor opt-in [[BlockingBudget.preflight]] (see
-    *   [[minHashLshPairs]]): budget is `maxPairFactor · max(corpus,
-    *   batch banded key rows)` — the larger side, so the bound stays
-    *   linear in the corpus an append-only ingest loop accumulates.
-    *   Shared materialization as in [[minHashLshPairs]]: BOTH sides'
-    *   [[minHashBandedKeys]] frames are persisted, the returned join
-    *   reads the caches, and the caller releases them after consuming
-    *   (`minHashBandedKeys(corpus, …).unpersist();
-    *   minHashBandedKeys(batch, …).unpersist()`). A failed preflight
-    *   releases both before throwing.
-    */
   def crossMinHashLshPairs(corpus: DataFrame, batch: DataFrame,
                            idCol: String, textCol: String,
                            n: Int = 5, numHashes: Int = 32, bands: Int = 16,
-                           minJaccard: Double = 0.5,
-                           maxPairFactor: Option[Double] = None): DataFrame = {
-    val cb0 = minHashBandedKeys(corpus, idCol, textCol, n, numHashes, bands)
-    val bb0 = minHashBandedKeys(batch, idCol, textCol, n, numHashes, bands)
-    val (cb, bb) = maxPairFactor match {
-      case Some(f) =>
-        // one signature+banding materialization per side serves the
-        // guard's counts/volume/profile AND the returned join
-        val c = cb0.persist()
-        val b = bb0.persist()
-        try {
-          BlockingBudget.preflight(c, struct(col("band"), col("bh")),
-            b, struct(col("band"), col("bh")), f,
-            math.max(c.count(), b.count()), "crossMinHashLshPairs")
-          // both sides' caches are the caller's to release — register both
-          warnIfGuardCachesAccumulate("crossMinHashLshPairs", c, b)
-          (c, b)
-        } catch { case t: Throwable =>
-          c.unpersist(false); b.unpersist(false); throw t
-        }
-      case None => (cb0, bb0)
-    }
+                           minJaccard: Double = 0.5): DataFrame = {
+    val cb = minHashBandedKeys(corpus, idCol, textCol, n, numHashes, bands)
+    val bb = minHashBandedKeys(batch, idCol, textCol, n, numHashes, bands)
     val candidates = cb.as("a")
       .join(bb.as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh"))
@@ -933,13 +671,10 @@ object TextDedup {
   }.asNonNullable()
 
   /** The (doc, simhash, band, bv) 16-bit band-bucket keys of
-    * [[simHashPairs]] — public as that form's stored-index block and
-    * guard-cache release handle (see [[minHashBandedKeys]]: a guarded
-    * call persists exactly this frame;
-    * `simHashBandedKeys(df, …).unpersist()` releases it).
+    * [[simHashPairs]].
     */
-  def simHashBandedKeys(df: DataFrame, idCol: String,
-                        textCol: String): DataFrame =
+  private[graft] def simHashBandedKeys(df: DataFrame, idCol: String,
+                                       textCol: String): DataFrame =
     simHashes(df, idCol, textCol).select(col("doc"), col("simhash"),
       posexplode(array((0 until 4).map(i =>
         shiftrightunsigned(col("simhash"), i * 16).bitwiseAND(lit(0xffffL))): _*))
@@ -974,18 +709,9 @@ object TextDedup {
     * remains for the 64-bit fingerprint contract.
     */
   def simHashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3,
-                   maxPairFactor: Option[Double] = None): DataFrame = {
+                   maxHamming: Int = 3): DataFrame = {
     require(maxHamming <= 3, "4-band pigeonhole guarantee holds up to 3")
-    // opt-in preflight (see minHashLshPairs, incl. the shared-cache /
-    // caller-releases contract): for THIS form it doubles as the
-    // regime check — 16-bit bands crowd on low-entropy corpora (the
-    // documented bound that motivated simHashPairs128), and a budgeted
-    // caller finds out before the join, not after
-    val banded0 = simHashBandedKeys(df, idCol, textCol)
-    val banded = maxPairFactor.fold(banded0)(f =>
-      guardBanded(banded0, struct(col("band"), col("bv")), f,
-        "simHashPairs"))
+    val banded = simHashBandedKeys(df, idCol, textCol)
     banded.as("a")
       .join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bv") === col("b.bv")
@@ -1021,17 +747,10 @@ object TextDedup {
     * surface) are found by both.
     */
   def simHashPairs128(df: DataFrame, idCol: String, textCol: String,
-                      maxHamming: Int = 3,
-                      maxPairFactor: Option[Double] = None): DataFrame = {
+                      maxHamming: Int = 3): DataFrame = {
     require(maxHamming <= 3,
       "5-piece / 2-clean combination guarantee holds up to 3")
-    // opt-in preflight over the exact combination-band keys the join
-    // uses — the production form of LshBucketBudgetSpec's d3b budget;
-    // shared-cache / caller-releases contract as in minHashLshPairs
-    val banded0 = simHashBandedKeys128(df, idCol, textCol)
-    val banded = maxPairFactor.fold(banded0)(f =>
-      guardBanded(banded0, struct(col("band"), col("bv")), f,
-        "simHashPairs128"))
+    val banded = simHashBandedKeys128(df, idCol, textCol)
     banded.as("a")
       .join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bv") === col("b.bv")
@@ -1090,12 +809,9 @@ object TextDedup {
       .select(col("doc"), col("sh_hi"), col("sh_lo"),
         col("c._1").as("band"), col("c._2").as("bv"))
 
-  /** [[simHash128BandKeys]] end-to-end from the raw corpus — public as
-    * [[simHashPairs128]]'s stored-index block and guard-cache release
-    * handle (see [[minHashBandedKeys]]).
-    */
-  def simHashBandedKeys128(df: DataFrame, idCol: String,
-                           textCol: String): DataFrame =
+  /** [[simHash128BandKeys]] end-to-end from the raw corpus. */
+  private[graft] def simHashBandedKeys128(df: DataFrame, idCol: String,
+                                          textCol: String): DataFrame =
     simHash128BandKeys(simHashes128(df, idCol, textCol))
 
   /** PREFIX-BLOCKED fuzzy record linkage — the fz1 query's shape as a
@@ -1125,21 +841,11 @@ object TextDedup {
     * The edit distance is computed ONCE in a projection then filtered:
     * it is the dominant per-pair cost and Spark does not CSE a filter
     * expression with a later select's copy.
-    *
-    * @param maxPairFactor opt-in [[BlockingBudget.preflight]] over the
-    *   exact block keys this join uses, budget `maxPairFactor ·
-    *   |corpus|` (the `FuzzyBlockingBudgetSpec` accounting) — the
-    *   guard a scheduled linkage job wants against corpus drift
-    *   degrading the prefix (one dominant boilerplate head, an
-    *   empty-field default). Fails with the hot prefixes named, before
-    *   any per-pair work. Default `None`: no extra work, no plan
-    *   change.
     */
   def prefixBlockedLinkage(queries: DataFrame, qIdCol: String,
                            qTextCol: String,
                            corpus: DataFrame, idCol: String, textCol: String,
-                           prefixLen: Int, maxEdit: Int,
-                           maxPairFactor: Option[Double] = None): DataFrame = {
+                           prefixLen: Int, maxEdit: Int): DataFrame = {
     require(prefixLen >= 1, s"prefixLen must be >= 1: $prefixLen")
     require(maxEdit >= 0, s"maxEdit must be >= 0: $maxEdit")
     locally {
@@ -1163,22 +869,6 @@ object TextDedup {
         s"queries and corpus must not share the columns this join " +
           s"references (ambiguous in the join/projection); colliding: " +
           s"${collide.distinct.mkString(", ")}")
-    }
-    maxPairFactor.foreach { f =>
-      // guard-SCOPED persist (not the LSH families' shared cache): here
-      // the guard's derivation is a cheap substring projection, not the
-      // join's dominant work — the join must read the FULL text columns
-      // for levenshtein, so a shared cache would have to hold corpus-
-      // sized text to save one prefix scan. Slim key projections are
-      // persisted so the corpus row count (same rows as the raw frame)
-      // and the preflight share one scan of each input, then released.
-      val qk = queries
-        .select(substring(col(qTextCol), 1, prefixLen).as("k")).persist()
-      val ck = corpus
-        .select(substring(col(textCol), 1, prefixLen).as("k")).persist()
-      try BlockingBudget.preflight(qk, col("k"), ck, col("k"), f,
-        ck.count(), "prefixBlockedLinkage")
-      finally { qk.unpersist(false); ck.unpersist(false) }
     }
     queries.join(corpus,
         substring(col(qTextCol), 1, prefixLen)

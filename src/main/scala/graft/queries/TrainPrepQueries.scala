@@ -261,9 +261,8 @@ object TrainPrepQueries {
           concat(substring(col("title"), 1, 14),
             substring(col("title"), 16, 30)).as("q_title"))
       // round-13: the join body moved to the reusable operator (same
-      // plan expression-for-expression); production callers opt into
-      // the pair-volume preflight via maxPairFactor — the oracle form
-      // keeps it off (the budget lives in FuzzyBlockingBudgetSpec)
+      // plan expression-for-expression); its pair-volume budget lives in
+      // FuzzyBlockingBudgetSpec
       graft.operators.TextDedup.prefixBlockedLinkage(batch, "q_id", "q_title",
         titles, "doc_id", "title", prefixLen = 14, maxEdit = 2)
     }),

@@ -38,13 +38,23 @@ object SparkSpec {
     org.apache.spark.sql.graftbridge.SpecBridge.registerFunctions(ext, spark)
   }
 
-  // one session for the whole test JVM; suites share it
+  /** One session for the whole test JVM; suites share it. Tests fork, so
+    * the JVM exits after its suites: a shutdown hook then deletes the
+    * session's warehouse and its application-scoped `/tmp` state. It is
+    * ordered after Spark's own hook, which stops the context, and before
+    * Hadoop closes its cached file systems.
+    */
   lazy val session: SparkSession = {
+    val warehouse = s"/tmp/graft-test-warehouse-${java.util.UUID.randomUUID()}"
     val s = graft.core.Sessions.builder(cores, "graft-test")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft-test-warehouse-${java.util.UUID.randomUUID()}")
+      .config("spark.sql.warehouse.dir", warehouse)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(() => {
+      graft.queries.QueryUtil.deleteScopedState(s)
+      val root = new org.apache.hadoop.fs.Path(warehouse)
+      root.getFileSystem(s.sparkContext.hadoopConfiguration).delete(root, true)
+    }, org.apache.hadoop.fs.FileSystem.SHUTDOWN_HOOK_PRIORITY + 20)
     s
   }
 }

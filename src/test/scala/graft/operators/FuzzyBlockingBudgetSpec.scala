@@ -71,7 +71,7 @@ class FuzzyBlockingBudgetSpec extends SparkSpec {
   test("a degenerate blocking key TRIPS the budget (the invariant detects " +
     "the failure mode, not just friendly data)") {
     // every title opens with the same 22 chars (≥ the 14-char block
-    // key) — the hot-prefix drift the production preflight exists to
+    // key) — the hot-prefix drift this budget exists to
     // catch (one dominant boilerplate pattern, an empty-field default,
     // a language whose titles all open identically). Volume becomes
     // |batch|·n ≈ n²/10 ≫ factor·n.
@@ -97,8 +97,8 @@ class FuzzyBlockingBudgetSpec extends SparkSpec {
     val profDf = BlockingReference.blockProfile(
       left, col("k"), right, col("k"))
     // pairs is DOUBLE by design: a >3e9-row degenerate block would make
-    // a long n·n throw under ANSI (Spark 4 default) or wrap — fail the
-    // guard OPEN — under non-ANSI; the double product can do neither
+    // a long n·n throw under ANSI (Spark 4 default) or wrap — pass the
+    // budget OPEN — under non-ANSI; the double product can do neither
     // (exact to 2^53, order-preserving beyond). Plan-level guarantee:
     assert(profDf.schema("pairs").dataType ==
       org.apache.spark.sql.types.DoubleType)
@@ -110,5 +110,40 @@ class FuzzyBlockingBudgetSpec extends SparkSpec {
     assert(prof.head._4 == 2.0)
     assert(BlockingReference.candidatePairVolume(
       left, col("k"), right, col("k")) == 4L)
+  }
+
+  test("prefixBlockedLinkage: colliding column names fail fast at the " +
+    "API boundary, not as an ambiguous-reference AnalysisException " +
+    "inside the join") {
+    val corpus = spark.range(10).select(col("id").as("doc_id"),
+      md5(col("id").cast("string")).as("title"))
+    // same names both sides — the realistic mistake (joining a frame
+    // against a filtered copy of itself without renaming)
+    val e = intercept[IllegalArgumentException] {
+      TextDedup.prefixBlockedLinkage(corpus, "doc_id", "title",
+        corpus, "doc_id", "title", prefixLen = 4, maxEdit = 2)
+    }
+    assert(e.getMessage.contains("must not share the columns this join " +
+      "references"), e.getMessage)
+    assert(e.getMessage.contains("doc_id"), e.getMessage)
+    // resolution is case-insensitive by default — so is the require
+    val shouting = corpus.select(col("doc_id").as("Q_ID"),
+      col("title").as("q_title"))
+    val e2 = intercept[IllegalArgumentException] {
+      TextDedup.prefixBlockedLinkage(shouting, "Q_ID", "q_title",
+        corpus.withColumnRenamed("doc_id", "q_id"), "q_id", "title",
+        prefixLen = 4, maxEdit = 2)
+    }
+    assert(e2.getMessage.contains("q_id"), e2.getMessage)
+    // the require covers only columns the join REFERENCES: a shared
+    // passenger column the plan never touches stays legal (Spark
+    // raises ambiguity on reference, not presence — rejecting any
+    // shared name would break valid callers)
+    val qWithTs = corpus.select(col("doc_id").as("q_id"),
+      col("title").as("q_title"), lit("2026-01-01").as("ingest_ts"))
+    val cWithTs = corpus.withColumn("ingest_ts", lit("2026-01-02"))
+    val okRows = TextDedup.prefixBlockedLinkage(qWithTs, "q_id", "q_title",
+      cWithTs, "doc_id", "title", prefixLen = 4, maxEdit = 0)
+    assert(okRows.count() == 10) // every record matches itself exactly
   }
 }

@@ -15,9 +15,9 @@ import graft.SparkSpec
   * a Structured Streaming job calling an operator per micro-batch) each
   * leaked registration pins executor storage memory until the session
   * dies, and under `MEMORY_AND_DISK` silently converts storage pressure
-  * into disk churn. The round-13 preflight guards made the discipline
-  * explicit (persist scoped to the guard, unpersist in `finally`); this
-  * sweep freezes it for every current and future operator.
+  * into disk churn. The discipline is a persist scoped to the work that
+  * reads it, unpersisted in `finally`; this sweep freezes it for every
+  * current and future operator.
   *
   * Plan-time, not execution-time: `DataFrame.persist` REGISTERS in the
   * CacheManager eagerly even though materialization is lazy, so riding
@@ -38,23 +38,11 @@ import graft.SparkSpec
   *     unpersist-between-generations the caller's contract. That is a
   *     documented cache, not a leak.
   *
-  * A query leaking OUTSIDE the allowlist fails until it either adopts
-  * the guard-scoped persist/unpersist shape or documents its cache as
+  * A query leaking OUTSIDE the allowlist fails until it either scopes
+  * its persist (unpersist in `finally`) or documents its cache as
   * il2 does (and lands here with a justification). An allowlisted entry
   * that STOPS leaking should be removed — the spec flags that too, so
   * the list can only shrink or be re-justified, never rot.
-  *
-  * Round 14 note — a second il2-pattern cache exists OUTSIDE this
-  * sweep's sight: the guarded LSH entry points (`maxPairFactor` on
-  * [[graft.operators.TextDedup.minHashLshPairs]]-family) persist their
-  * banded-keys frame so the preflight and the returned join share one
-  * signature+banding materialization, released by the caller through
-  * the public banded-keys handle. It does NOT get an allowlist entry
-  * here because no catalog query constructs with the guard (it is
-  * production-opt-in), so an entry would trip this spec's own anti-rot
-  * assertion; the cache contract — present after a passing guarded
-  * call, absent after a failed one, released by the handle — is frozen
-  * in `BlockingPreflightSpec` instead.
   */
 class CacheLeakSpec extends SparkSpec {
 
@@ -68,9 +56,9 @@ class CacheLeakSpec extends SparkSpec {
     assert(undocumented.isEmpty,
       s"construction-time cache leaks with no documented contract: " +
         s"${undocumented.toSeq.sorted.mkString(", ")} — scope the " +
-        "persist to the work that needs it (unpersist in finally, the " +
-        "preflight-guard shape) or document the cache as part of the " +
-        "operator's contract and justify it in this spec's allowlist")
+        "persist to the work that needs it (unpersist in finally) or " +
+        "document the cache as part of the operator's contract and " +
+        "justify it in this spec's allowlist")
     val stale = documentedCaches -- leaked
     assert(stale.isEmpty,
       s"allowlisted entries no longer cache at construction: " +

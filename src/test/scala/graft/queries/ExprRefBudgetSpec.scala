@@ -31,6 +31,10 @@ import graft.SparkSpec
   * minimum: UNDER budget is an improvement (re-run `CostlyExprAudit` and
   * tighten); OVER budget fails until the new reference is reviewed — the
   * reviewer asks "same stage (CSE-reclaimed) or new per-row work?".
+  *
+  * `CostlyExprAudit` is defined in `ScanPruningAudit.scala` (same
+  * package); run it with
+  * `Test/runMain graft.queries.CostlyExprAudit [sfDir] [q1,q2]`.
   */
 class ExprRefBudgetSpec extends SparkSpec {
 

@@ -59,15 +59,6 @@ class CollectSiteSweepSpec extends AnyFunSuite {
       "metadata", "touched-partition values of an upsert batch — " +
         "partition-grain (r20: collected once pre-write; the emptied " +
         "probe now rides the write via observe)"),
-    Entry("operators/BlockingBudget.scala",
-      "val vol = profile.agg(coalesce(sum(col(\"pairs\")), lit(0d)))",
-      "scalar-aggregate", "1-row pair-volume sum (guarded form)"),
-    Entry("operators/BlockingBudget.scala",
-      "coalesce(sum(col(\"left_n\")), lit(0L))).head()",
-      "scalar-aggregate", "1-row (volume, left rows) pair"),
-    Entry("operators/BlockingBudget.scala",
-      "profile.orderBy(col(\"pairs\").desc).limit(5)",
-      "limited", "hottest-5 cells for the failure message"),
     // (r21: the DedupClusters changed-label convergence count no longer
     // materializes through head() — it rides the round's noop-sink
     // materialization as an observe() accumulator, so there is no
