@@ -5,7 +5,8 @@ import scala.util.control.NonFatal
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    require(args.length == 2, "usage: graft.Verify <sfDir> <outDir>")
+    val (sfDir, outDir) = (args(0), args(1))
     val spark = graft.core.Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -31,10 +31,14 @@ object IndexTables {
     }
   }
 
-  /** A write of `df` as a parquet table bucketed and sorted by `col`. */
-  def bucketed(df: DataFrame, nBuckets: Int, col: String): String => Unit = {
+  /** A write of `df` as a parquet table bucketed and sorted by `cols`.
+    * A join rides the buckets only when its keys are exactly `cols`.
+    */
+  def bucketed(df: DataFrame, nBuckets: Int, cols: String*): String => Unit = {
     require(nBuckets >= 1, s"nBuckets must be positive: $nBuckets")
-    name => df.write.format("parquet").bucketBy(nBuckets, col).sortBy(col)
+    name => df.write.format("parquet")
+      .bucketBy(nBuckets, cols.head, cols.tail: _*)
+      .sortBy(cols.head, cols.tail: _*)
       .saveAsTable(name)
   }
 

@@ -143,7 +143,7 @@ object BpeStats {
     * left-to-right compaction pass.
     */
   private def segmentCount(word: String, merges: Array[Array[String]]): Int = {
-    var toks = new Array[String](word.length)
+    val toks = new Array[String](word.length)
     var n = word.length
     var i = 0
     while (i < n) { toks(i) = String.valueOf(word.charAt(i)); i += 1 }

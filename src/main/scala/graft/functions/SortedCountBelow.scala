@@ -80,6 +80,7 @@ case class SortedCountBelow(left: Expression, right: Expression)
     case (LongType, true) => "countBelowLongNullable"
     case (FloatType, true) => "countBelowFloatNullable"
     case (DoubleType, true) => "countBelowDoubleNullable"
+    case (t, _) => SortedCountBelow.unsupported(t)
   }
 
   // interpreted-path dispatch resolved ONCE per expression instance —
@@ -103,6 +104,7 @@ case class SortedCountBelow(left: Expression, right: Expression)
         (a, v) => SortedCountBelow.countBelowFloatNullable(a, v.asInstanceOf[Float])
       case (DoubleType, true) =>
         (a, v) => SortedCountBelow.countBelowDoubleNullable(a, v.asInstanceOf[Double])
+      case (t, _) => SortedCountBelow.unsupported(t)
     }
 
   override def nullSafeEval(arr: Any, v: Any): Any =
@@ -119,6 +121,12 @@ case class SortedCountBelow(left: Expression, right: Expression)
 }
 
 object SortedCountBelow {
+
+  /** The dispatch arm for an element type `checkInputDataTypes` rejects:
+    * unreachable on a resolved expression.
+    */
+  private def unsupported(t: DataType): Nothing =
+    throw new IllegalStateException(s"sorted_count_below: unsupported element type $t")
 
   /** Column surface: elements of sorted `arr` strictly below `value`. */
   def sortedCountBelow(arr: Column, value: Column): Column =

@@ -1,6 +1,6 @@
 package graft.model
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{GameConstants, PipelineConfig, TableStore}
 import graft.ai.LlmClient
@@ -9,9 +9,10 @@ import graft.ingest.{CsvSource, LandingZone, Schemas}
 /** Auxiliary-dimension ETL ≙ `/root/reference/src/notebooks/modelling/
   * auxillary_dims.py`.
   *
-  * Stages every landing-zone dim/linkage CSV as a temp view
-  * (`auxillary_dims.py:48-69`), translating `categories`/`genres` names to
-  * English via the AI function (`auxillary_dims.py:14-27,64-67`), then
+  * Reads every dim/linkage CSV of this run's landing zone as a local
+  * frame (the temp views of `auxillary_dims.py:48-69`), translating
+  * `categories`/`genres` names to English via the AI function
+  * (`auxillary_dims.py:14-27,64-67`), then
   * flattens each linkage × reference pair with a left join to appid-grain
   * `dim_*` tables (`auxillary_dims.py:73-97` — J1).
   *
@@ -38,27 +39,29 @@ final class AuxDimsJob(spark: SparkSession, store: TableStore,
   def run(): Unit = {
     val files = LandingZone.route(config.rawLocation)
 
-    // stage reference dims + linkages as temp views (`auxillary_dims.py:48-69`)
-    files.foreach {
+    // read the reference dims and linkages this landing zone holds
+    // (`auxillary_dims.py:48-69`) as local frames: nothing outlives the
+    // run, so a file gone from the zone cannot be flattened from an
+    // earlier run's state
+    val refs: Map[String, DataFrame] = files.collect {
       case LandingZone.StandardDim(path, table) =>
-        CsvSource.read(spark, path, Schemas.refDim)
-          .createOrReplaceTempView(s"stage_$table")
+        table -> CsvSource.read(spark, path, Schemas.refDim)
       case LandingZone.TranslatedDim(path, table) =>
-        CsvSource.read(spark, path, Schemas.refDim)
+        table -> CsvSource.read(spark, path, Schemas.refDim)
           .withColumn("name", translateUdf(col("name")))
-          .createOrReplaceTempView(s"stage_$table")
+    }.toMap
+    val links: Map[String, DataFrame] = files.collect {
       case LandingZone.Linkage(path, table, key) =>
-        CsvSource.read(spark, path, Schemas.linkage(key))
-          .createOrReplaceTempView(s"linkage_$table")
-      case _ => () // applications/reviews handled by their own jobs
-    }
+        table -> CsvSource.read(spark, path, Schemas.linkage(key))
+    }.toMap
 
     // flatten: linkage LEFT JOIN reference on key = id → dim_* tables
     // (`auxillary_dims.py:92-97`); dims are small → broadcast
     linkageRefs.foreach { case (linkTable, (refTable, key)) =>
-      if (spark.catalog.tableExists(s"linkage_$linkTable")) {
-        val link = spark.table(s"linkage_$linkTable")
-        val ref = broadcast(spark.table(s"stage_$refTable"))
+      links.get(linkTable).foreach { link =>
+        require(refs.contains(refTable), s"landing zone has " +
+          s"$linkTable.csv but no $refTable.csv to flatten it with")
+        val ref = broadcast(refs(refTable))
         val dim = link.join(ref, link(key) === ref(GameConstants.DimId), "left")
         store.save(dim, "dim", refTable)
       }

@@ -22,8 +22,8 @@ final class GamesDimJob(spark: SparkSession, store: TableStore,
       // F2 — `auxillary_dims.py:118` + `utilities.py:11`
       .filter(col("type").isin(GameConstants.GameTypes: _*))
       // P4 — `auxillary_dims.py:124-126`
-      .na.fill(Map("mat_initial_price" -> 0.0, "mat_final_price" -> 0.0,
-        "mat_currency" -> "USD"))
+      .na.fill(Map[String, Any]("mat_initial_price" -> 0.0,
+        "mat_final_price" -> 0.0, "mat_currency" -> "USD"))
       // F3 — `auxillary_dims.py:128-130`
       .filter((col("is_free") && col("mat_initial_price") === 0)
         || !col("is_free"))

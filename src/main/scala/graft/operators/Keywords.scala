@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.TextAnalysis
 
 /** TF-IDF keyword extraction — the "top distinguishing terms per document"
   * operator of a corpus-analysis pipeline.

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.TextAnalysis
 
 /** Corpus-trained bigram language-model scoring — the classical fluency /
   * perplexity quality signal of a pretraining-data pipeline (the CCNet /

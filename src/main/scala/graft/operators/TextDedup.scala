@@ -161,21 +161,21 @@ object TextDedup {
         col("jaccard").cast("decimal(18,6)").as("jaccard"))
   }
 
-  /** MinHash signatures: hash function i is the salted digest
-    * xxhash64(i, shingle); sig(i) = min over the doc's shingles. Salting
-    * (instead of the classic a·h+b mod p) keeps the expressions overflow-free
-    * under ANSI mode while staying deterministic and uniform. One shuffle
-    * (the groupBy), all expressions codegen'd.
+  /** MinHash signatures (doc, sig) over a [[shingleSets]] frame: hash
+    * function i is the salted digest xxhash64(i, shingle), and sig(i) =
+    * `array_min(transform(sh_set, s -> xxhash64(i, s)))`, the min over the
+    * doc's shingles. Salting (instead of the classic a·h+b mod p) keeps the
+    * expressions overflow-free under ANSI mode while staying deterministic
+    * and uniform. Taken from the sets the exact-Jaccard verify reads, so an
+    * LSH pair form shingles each side once and bands and verifies from
+    * that one pass. `private[graft]` so specs check the pair forms against
+    * the signatures they band.
     */
-  def minHashSignatures(df: DataFrame, idCol: String, textCol: String,
-                        n: Int, numHashes: Int): DataFrame = {
-    val idx = shingleIndex(df, idCol, textCol, n)
-    val mins = (0 until numHashes).map(i =>
-      min(xxhash64(lit(i), col("sh"))).as(s"_m$i"))
-    idx.groupBy(col("doc")).agg(mins.head, mins.tail: _*)
-      .select(col("doc"),
-        array((0 until numHashes).map(i => col(s"_m$i")): _*).as("sig"))
-  }
+  private[graft] def minHashSignatures(sets: DataFrame,
+                                       numHashes: Int): DataFrame =
+    sets.select(col("doc"), array((0 until numHashes).map(i =>
+      array_min(transform(col("sh_set"), s => xxhash64(lit(i), s)))): _*)
+      .as("sig"))
 
   /** MinHash + banded LSH near-dup pairs, verified with exact Jaccard.
     *
@@ -185,28 +185,30 @@ object TextDedup {
     * Jaccard so the output has no false positives. Recall for pairs at
     * similarity s is 1−(1−s^r)^b — with 16×2 defaults, &gt;0.99 at s=0.5 and
     * ≈1 beyond 0.8.
+    *
+    * One pass: the corpus is shingled once into [[shingleSets]]; the band
+    * keys are derived from those sets and the verify joins the same frame,
+    * so the planner reuses its exchange instead of re-shingling.
     */
   def minHashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       n: Int = 5, numHashes: Int = 32, bands: Int = 16,
                       minJaccard: Double = 0.5): DataFrame = {
-    val banded = minHashBandedKeys(df, idCol, textCol, n, numHashes, bands)
+    val sets = shingleSets(df, idCol, textCol, n)
+    val banded = setBandedKeys(sets, numHashes, bands)
     val candidates = banded.as("a")
       .join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh")
           && col("a.doc") < col("b.doc"))
       .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
       .distinct()
-    // verify candidates with exact Jaccard over xxhash64'd shingle sets:
-    // only (doc, array<long>) rows shuffle — 8 bytes per shingle, never the
-    // n-gram text (the same 64-bit collision argument as shingleIndex)
-    val sets = shingleIndex(df, idCol, textCol, n)
-      .groupBy(col("doc")).agg(collect_set(col("sh")).as("sh_set"))
     verifyExactJaccard(candidates, "doc_a", "doc_b", sets, sets, minJaccard)
   }
 
   /** Exact-Jaccard verification of candidate pairs against hashed
     * shingle-set frames (`(doc, sh_set: array<long>)`) — the shared final
-    * stage of [[minHashLshPairs]] and [[crossMinHashLshPairs]].
+    * stage of every MinHash-LSH pair form. Only (doc, array<long>) rows
+    * shuffle — 8 bytes per shingle, never the n-gram text (the same 64-bit
+    * collision argument as [[shingleIndex]]).
     */
   private def verifyExactJaccard(candidates: DataFrame,
                                  aCol: String, bCol: String,
@@ -223,8 +225,8 @@ object TextDedup {
         col("jaccard").cast("decimal(18,6)").as("jaccard"))
 
   /** (doc, band, band-hash) rows for a signature frame — the LSH bucket
-    * keys shared by the self-join ([[minHashLshPairs]]) and cross-corpus
-    * ([[crossMinHashLshPairs]]) variants. `private[graft]` so the
+    * keys shared by every MinHash-LSH pair form and the stored index's
+    * `_banded` table. `private[graft]` so the
     * bucket-crowding budget spec audits the EXACT key expression the
     * joins use (`LshBucketBudgetSpec` pins Σ bucketsize² through the
     * spec-side `BlockingReference` — the same pair-volume cost model
@@ -238,54 +240,56 @@ object TextDedup {
           slice(col("sig"), bI * r + 1, lit(r)).cast("array<string>")))))
         .as(Seq("band", "bh")))
 
-  /** The (doc, band, bh) banded LSH bucket keys of [[minHashLshPairs]] /
-    * [[crossMinHashLshPairs]] end-to-end from the raw corpus — also the
-    * `_banded` table of a stored LSH index ([[saveLshIndexBucketed]]).
+  /** The (doc, band, bh) banded LSH bucket keys of a [[shingleSets]]
+    * frame — also the `_banded` table of a stored LSH index
+    * ([[saveLshIndexBucketed]]).
     */
-  private[graft] def minHashBandedKeys(df: DataFrame, idCol: String,
-                                       textCol: String, n: Int = 5,
-                                       numHashes: Int = 32,
-                                       bands: Int = 16): DataFrame = {
+  private def setBandedKeys(sets: DataFrame, numHashes: Int,
+                            bands: Int): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    bandedKeys(minHashSignatures(df, idCol, textCol, n, numHashes),
-      bands, numHashes / bands)
+    bandedKeys(minHashSignatures(sets, numHashes), bands, numHashes / bands)
+  }
+
+  /** The cross-corpus probe shared by [[crossMinHashLshPairs]] and
+    * [[crossLshPairsFromBandedIndex]]: the batch's band keys come from its
+    * shingle sets `bSets`, the (corpus_id, batch_id) candidates are built
+    * once, and the verify consumes them once against `cSets` and the same
+    * `bSets` — no semi-join re-reads either side.
+    */
+  private def crossVerifiedPairs(cBanded: DataFrame, cSets: DataFrame,
+                                 bSets: DataFrame, numHashes: Int,
+                                 bands: Int, minJaccard: Double): DataFrame = {
+    val bBanded = setBandedKeys(bSets, numHashes, bands)
+    val candidates = cBanded.as("a")
+      .join(bBanded.as("b"),
+        col("a.band") === col("b.band") && col("a.bh") === col("b.bh"))
+      .select(col("a.doc").as("corpus_id"), col("b.doc").as("batch_id"))
+      .distinct()
+    verifyExactJaccard(candidates, "corpus_id", "batch_id", cSets, bSets,
+      minJaccard)
   }
 
   /** INCREMENTAL near-dup scan: a NEW batch against an EXISTING corpus via
     * banded MinHash — the ingest-time shape of [[minHashLshPairs]]. Only
-    * (corpus doc, batch doc) bucket collisions become candidates and the
-    * exact-Jaccard verify semi-joins both shingle-set sides down to
-    * candidates, so per-increment cost is proportional to the batch and
-    * its collisions, not the corpus.
+    * (corpus doc, batch doc) bucket collisions become candidates, and the
+    * exact-Jaccard verify joins them to both shingle-set sides.
     *
-    * At scale the corpus side's signatures and hashed shingle sets are
-    * computed ONCE and stored (a signatures table keyed by doc — both are
-    * plain DataFrames, `TableStore.save` does it); each increment then
-    * signs only the batch and joins against the stored index. This method
-    * takes the raw corpus and builds both in-plan, which is the same plan
-    * with the storage round-trip elided.
+    * One pass per side: each side is shingled once into [[shingleSets]],
+    * its band keys are derived from those sets, and the verify joins the
+    * same two frames, so the candidates are computed and consumed once.
+    * At scale the corpus side's banded keys and shingle sets are computed
+    * ONCE and stored ([[saveLshIndexBucketed]]); each increment then signs
+    * only the batch and probes the stored index
+    * ([[crossLshPairsFromBandedIndex]]). This method builds both in-plan,
+    * which is the same plan with the storage round-trip elided.
     */
   def crossMinHashLshPairs(corpus: DataFrame, batch: DataFrame,
                            idCol: String, textCol: String,
                            n: Int = 5, numHashes: Int = 32, bands: Int = 16,
                            minJaccard: Double = 0.5): DataFrame = {
-    val cb = minHashBandedKeys(corpus, idCol, textCol, n, numHashes, bands)
-    val bb = minHashBandedKeys(batch, idCol, textCol, n, numHashes, bands)
-    val candidates = cb.as("a")
-      .join(bb.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh"))
-      .select(col("a.doc").as("corpus_id"), col("b.doc").as("batch_id"))
-      .distinct()
-    val cSets = shingleIndex(corpus, idCol, textCol, n)
-      .join(candidates.select(col("corpus_id").as("doc")).distinct(),
-        Seq("doc"), "left_semi")
-      .groupBy(col("doc")).agg(collect_set(col("sh")).as("sh_set"))
-    val bSets = shingleIndex(batch, idCol, textCol, n)
-      .join(candidates.select(col("batch_id").as("doc")).distinct(),
-        Seq("doc"), "left_semi")
-      .groupBy(col("doc")).agg(collect_set(col("sh")).as("sh_set"))
-    verifyExactJaccard(candidates, "corpus_id", "batch_id", cSets, bSets,
-      minJaccard)
+    val cSets = shingleSets(corpus, idCol, textCol, n)
+    crossVerifiedPairs(setBandedKeys(cSets, numHashes, bands), cSets,
+      shingleSets(batch, idCol, textCol, n), numHashes, bands, minJaccard)
   }
 
   /** Exact n-gram COLLISION decontamination — the GPT-3/PaLM rule: a
@@ -335,14 +339,16 @@ object TextDedup {
     *    parameters live WITH the index, so the probe reads them instead
     *    of trusting a caller to re-supply matching values.
     *  - `<prefix>_banded` — the (doc, band, bh) banded keys, BUCKETED BY
-    *    `bh`: the candidates join clusters on (band, bh), and a
-    *    hash(bh) layout satisfies that (bh ⊆ {band, bh}), so the
-    *    corpus-side exchange of EVERY increment disappears. Storing the
+    *    (band, bh): exactly the candidates join's keys, so the planner
+    *    shuffles only the batch side into the stored buckets and the
+    *    corpus-side exchange of EVERY increment disappears (a layout by
+    *    `bh` alone does not co-partition with a (band, bh) join, and the
+    *    planner then shuffles both sides and drops the bucketed scan). Storing the
     *    banding directly also skips re-deriving it from signatures per
     *    increment (the round-14 shared-materialization insight, made
     *    durable).
     *  - `<prefix>_sets` — the (doc, sh_set) exact-Jaccard operands,
-    *    BUCKETED BY `doc`: the verify semi-join clusters on `doc`, and
+    *    BUCKETED BY `doc`: the verify join clusters on `doc`, and
     *    this is the WIDE table (full shingle sets) whose per-increment
     *    shuffle hurts most.
     *
@@ -360,8 +366,8 @@ object TextDedup {
       "meta" -> graft.core.IndexTables.single(
         Seq((n, numHashes, bands)).toDF("n", "num_hashes", "bands")),
       "banded" -> graft.core.IndexTables.bucketed(
-        minHashBandedKeys(corpus, idCol, textCol, n, numHashes, bands),
-        nBuckets, "bh"),
+        setBandedKeys(shingleSets(corpus, idCol, textCol, n), numHashes,
+          bands), nBuckets, "band", "bh"),
       "sets" -> graft.core.IndexTables.bucketed(
         shingleSets(corpus, idCol, textCol, n), nBuckets, "doc"))
   }
@@ -370,9 +376,12 @@ object TextDedup {
     * the increment's production entry point. Build parameters come from
     * the index's own meta table — nothing to mismatch — and the two
     * corpus-side joins ride the bucket layout: candidates cluster on
-    * the stored `bh` buckets, verify on the stored `doc` buckets, so an
+    * the stored (band, bh) buckets, verify on the stored `doc` buckets, so an
     * increment shuffles only its own banded keys and shingle sets.
-    * Output is frame-identical to [[crossMinHashLshPairs]] on the same
+    * One pass: `_banded` is scanned once by the one candidates join, the
+    * batch is shingled once (its band keys and verify sets both come
+    * from that [[shingleSets]] frame), and `_sets` joins the candidates
+    * on its `doc` buckets. Output is frame-identical to [[crossMinHashLshPairs]] on the same
     * corpus and batch (spec-pinned in `LshBucketedIndexSpec`); mh1 and
     * dc2 probe their corpus index through it.
     */
@@ -398,24 +407,9 @@ object TextDedup {
     require(n >= 1 && numHashes >= 1 && bands >= 1 && numHashes % bands == 0,
       s"corrupt lsh meta: n=$n, num_hashes=$numHashes, bands=$bands " +
         "(need all >= 1 and bands | num_hashes)")
-    val cb = read("banded", "doc", "band", "bh")
-    val bb = bandedKeys(
-      minHashSignatures(batch, idCol, textCol, n, numHashes),
-      bands, numHashes / bands)
-    val candidates = cb.as("a")
-      .join(bb.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh"))
-      .select(col("a.doc").as("corpus_id"), col("b.doc").as("batch_id"))
-      .distinct()
-    val cSets = read("sets", "doc", "sh_set")
-      .join(candidates.select(col("corpus_id").as("doc")).distinct(),
-        Seq("doc"), "left_semi")
-    val bSets = shingleIndex(batch, idCol, textCol, n)
-      .join(candidates.select(col("batch_id").as("doc")).distinct(),
-        Seq("doc"), "left_semi")
-      .groupBy(col("doc")).agg(collect_set(col("sh")).as("sh_set"))
-    verifyExactJaccard(candidates, "corpus_id", "batch_id", cSets, bSets,
-      minJaccard)
+    crossVerifiedPairs(read("banded", "doc", "band", "bh"),
+      read("sets", "doc", "sh_set"), shingleSets(batch, idCol, textCol, n),
+      numHashes, bands, minJaccard)
   }
 
   /** EXACT incremental dedup with a Bloom prefilter — the membership-test

@@ -30,7 +30,8 @@ object CoreQueries {
     // P4 — fillna defaults (`auxillary_dims.py:124-126`)
     "p4_fillna" -> ((s, d) =>
       table(s, d, "customer")
-        .na.fill(Map("c_acctbal" -> 0.0, "c_mktsegment" -> "UNKNOWN"))
+        .na.fill(Map[String, Any]("c_acctbal" -> 0.0,
+          "c_mktsegment" -> "UNKNOWN"))
         .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))),
 
     // F1 — conjunctive spam filter shape (`reviews_fact.py:129-133`)

@@ -1,12 +1,13 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs: the [[graft.core.Sessions]] profile at
   * a fixed 4 cores, so specs do not depend on the host.
   */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   /** Runs `body` with the given session confs set, then restores each key:
@@ -23,6 +24,22 @@ trait SparkSpec extends AnyFunSuite {
       case (k, None)    => spark.conf.unset(k)
     }
   }
+
+  private val tempDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]
+
+  /** A fresh directory `<system temp>/<prefix><random>`, deleted with
+    * everything in it once the suite's tests have run.
+    */
+  def tempDir(prefix: String): java.io.File = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs.add(dir)
+    dir
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteDirectory(d))
+    finally super.afterAll()
 }
 
 object SparkSpec {

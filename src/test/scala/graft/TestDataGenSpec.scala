@@ -17,7 +17,7 @@ class TestDataGenSpec extends SparkSpec {
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
   private lazy val genDir = {
-    val dir = s"/tmp/graft-testdatagen-${System.nanoTime()}"
+    val dir = tempDir("graft-testdatagen").getAbsolutePath
     TestDataGen.generate(spark, dir, scale = 0.02)
     dir
   }
@@ -40,7 +40,7 @@ class TestDataGenSpec extends SparkSpec {
   }
 
   test("content is a pure function of ids: regeneration is identical") {
-    val dir2 = s"/tmp/graft-testdatagen-${System.nanoTime()}-b"
+    val dir2 = tempDir("graft-testdatagen-b").getAbsolutePath
     TestDataGen.generate(spark, dir2, scale = 0.02)
     // order-free content compare on the two most derivation-heavy tables
     Seq("documents", "lineitem").foreach { t =>

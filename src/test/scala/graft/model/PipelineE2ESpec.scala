@@ -68,6 +68,31 @@ class PipelineE2ESpec extends SparkSpec {
     } finally store.dropAll()
   }
 
+  test("AuxDimsJob flattens only the linkages its own landing zone holds") {
+    // a second run in the same session, over a zone without
+    // application_publishers.csv, must not flatten that linkage from
+    // anything the first run left behind
+    val zone = tempDir("graft-aux-zone")
+    new java.io.File(rawZone).listFiles()
+      .filter(_.getName != "application_publishers.csv")
+      .foreach(f => java.nio.file.Files.copy(f.toPath,
+        new java.io.File(zone, f.getName).toPath))
+    val first = freshConfig()
+    val second = freshConfig().copy(rawLocation = zone.getAbsolutePath)
+    val store1 = new TableStore(spark, first)
+    val store2 = new TableStore(spark, second)
+    try {
+      new AuxDimsJob(spark, store1, first, translator).run()
+      assert(store1.exists("dim", "publishers"))
+      new AuxDimsJob(spark, store2, second, translator).run()
+      assert(!store2.exists("dim", "publishers"),
+        "dim_publishers rebuilt from a linkage this landing zone lacks")
+      assert(store2.load("dim", "developers").count() == 3)
+      assert(store2.exists("dim", "categories") &&
+        store2.exists("dim", "genres"))
+    } finally { store1.dropAll(); store2.dropAll() }
+  }
+
   test("ReviewsFactJob: filters, scoring, weighting, idempotent increments") {
     val config = freshConfig()
     val store = new TableStore(spark, config)
@@ -274,7 +299,7 @@ class PipelineE2ESpec extends SparkSpec {
   }
 
   test("raw layer registers as queryable raw_* views (S7 catalog face)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-raw").toString
+    val dir = tempDir("graft-raw").getAbsolutePath
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/things.csv"), "id,name\n1,alpha\n2,beta\n")
     val store = new TableStore(spark, freshConfig())

@@ -75,7 +75,8 @@ class CurationPropertySpec extends SparkSpec {
         .as[(Long, BigDecimal, String)].collect()
         .map { case (id, q, l) => id -> ((q, l)) }.toMap
       val sigs = TextDedup
-        .minHashSignatures(df, "doc_id", "text", n, numHashes)
+        .minHashSignatures(TextDedup.shingleSets(df, "doc_id", "text", n),
+          numHashes)
         .as[(Long, Seq[Long])].collect().toMap
 
       val shingle = docs.map { case (id, t) =>

@@ -149,8 +149,7 @@ class DedupClustersSpec extends SparkSpec {
         useReliableCheckpoint = true)
     }
     assert(ex.getMessage.contains("setCheckpointDir"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    sc.setCheckpointDir(dir)
+    sc.setCheckpointDir(tempDir("graft-ckpt").getAbsolutePath)
     try {
       val g = DedupClusters.canonicalize(pairs, "doc_a", "doc_b",
         useReliableCheckpoint = true)

@@ -37,7 +37,7 @@ class LshBucketBudgetSpec extends SparkSpec {
   private def bucketVolume(dir: String): (Long, Long) = {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val sigs = TextDedup.minHashSignatures(
-      docs, "doc_id", "text", n = 5, numHashes = 32)
+      TextDedup.shingleSets(docs, "doc_id", "text", n = 5), numHashes = 32)
     val banded = TextDedup.bandedKeys(sigs, bands = 16, r = 2)
       .select(struct(col("band"), col("bh")).as("k"))
     (BlockingReference.candidatePairVolume(
@@ -153,7 +153,7 @@ class LshBucketBudgetSpec extends SparkSpec {
           "returned for this host"))
         .as("text"))
     val sigs = TextDedup.minHashSignatures(
-      docs, "doc_id", "text", n = 5, numHashes = 32)
+      TextDedup.shingleSets(docs, "doc_id", "text", n = 5), numHashes = 32)
     val banded = TextDedup.bandedKeys(sigs, bands = 16, r = 2)
       .select(struct(col("band"), col("bh")).as("k"))
     val vol = BlockingReference.candidatePairVolume(

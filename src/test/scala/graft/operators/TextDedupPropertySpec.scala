@@ -148,10 +148,10 @@ class TextDedupPropertySpec extends SparkSpec {
       val got = TextDedup.crossMinHashLshPairs(cDf, bDf,
         "doc_id", "text", n, numHashes, bands, t)
         .select("corpus_id", "batch_id").as[(Long, Long)].collect().toSet
-      val cSigs = TextDedup.minHashSignatures(cDf, "doc_id", "text",
-        n, numHashes).as[(Long, Seq[Long])].collect().toMap
-      val bSigs = TextDedup.minHashSignatures(bDf, "doc_id", "text",
-        n, numHashes).as[(Long, Seq[Long])].collect().toMap
+      val cSigs = TextDedup.minHashSignatures(TextDedup.shingleSets(cDf,
+        "doc_id", "text", n), numHashes).as[(Long, Seq[Long])].collect().toMap
+      val bSigs = TextDedup.minHashSignatures(TextDedup.shingleSets(bDf,
+        "doc_id", "text", n), numHashes).as[(Long, Seq[Long])].collect().toMap
       val expected = (for {
         (ca, ct) <- corpus; (ba, bt) <- batch
         sa <- cSigs.get(ca); sb <- bSigs.get(ba)
@@ -190,7 +190,8 @@ class TextDedupPropertySpec extends SparkSpec {
         .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
       // band collision decided on the operator's own signatures by RAW
       // slice equality — this pins the banding join + verify stage
-      val sigs = TextDedup.minHashSignatures(df, "doc_id", "text", n, numHashes)
+      val sigs = TextDedup.minHashSignatures(
+        TextDedup.shingleSets(df, "doc_id", "text", n), numHashes)
         .as[(Long, Seq[Long])].collect().toMap
       val expected = (for {
         i <- docs.indices; j <- (i + 1) until docs.length
@@ -202,5 +203,29 @@ class TextDedupPropertySpec extends SparkSpec {
       } yield (ia, ib)).toSet
       got == expected
     })
+  }
+
+  test("set-derived MinHash signatures == per-hash min of xxhash64(i, sh) " +
+      "over the exploded shingles, bit for bit") {
+    import org.apache.spark.sql.functions._
+    val numHashes = 8
+    // reference: the per-hash min over the exploded (doc, sh) index
+    def exploded(df: org.apache.spark.sql.DataFrame, n: Int) =
+      TextDedup.shingleIndex(df, "doc_id", "text", n).groupBy(col("doc"))
+        .agg(array((0 until numHashes).map(i =>
+          min(xxhash64(lit(i), col("sh")))): _*).as("sig"))
+        .as[(Long, Seq[Long])].collect().toMap
+    def fromSets(df: org.apache.spark.sql.DataFrame, n: Int) =
+      TextDedup.minHashSignatures(
+        TextDedup.shingleSets(df, "doc_id", "text", n), numHashes)
+        .as[(Long, Seq[Long])].collect().toMap
+    check(Prop.forAll(corpusGen) { docs =>
+      val df = docs.toDF("doc_id", "text")
+      fromSets(df, 2) == exploded(df, 2)
+    })
+    val harness = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select("doc_id", "text")
+    val sigs = fromSets(harness, 5)
+    assert(sigs.nonEmpty && sigs == exploded(harness, 5))
   }
 }

@@ -123,7 +123,8 @@ class ThetaSpec extends SparkSpec {
     // answer later set questions from the stored table
     val df = ((0L until 1000L).map(("a", _)) ++
       (600L until 1600L).map(("b", _))).toDF("grp", "k")
-    val dir = s"/tmp/graft-theta-store-${System.nanoTime()}"
+    val dir = new java.io.File(tempDir("graft-theta-store"), "sketches")
+      .getAbsolutePath
     ThetaSketches.groupSketchFrame(df, "grp", "k").write.parquet(dir)
     val loaded = spark.read.parquet(dir).collect().map { r =>
       r.getString(0) -> org.apache.datasketches.theta.Sketches

@@ -20,8 +20,8 @@ class EventStreamsSpec extends SparkSpec {
     * like the batch frame.
     */
   private def eventStream(prefix: String): DataFrame = {
-    val dir = Files.createTempDirectory(prefix)
-    Files.copy(Paths.get(s"$sf/events.parquet"), dir.resolve("e.parquet"),
+    val dir = tempDir(prefix)
+    Files.copy(Paths.get(s"$sf/events.parquet"), dir.toPath.resolve("e.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
     QueryUtil.normalizeTs(spark.readStream
       .schema(spark.read.parquet(s"$sf/events.parquet").schema)

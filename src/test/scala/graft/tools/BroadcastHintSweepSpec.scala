@@ -60,7 +60,7 @@ class BroadcastHintSweepSpec extends AnyFunSuite {
         "bounded by the documented driver-safe touched-partition count; " +
         "this arm only runs past MaxTouchedPredicateLiterals, where a " +
         "literal predicate would bloat the plan"),
-    Entry("model/AuxDimsJob.scala", "broadcast(spark.table(s\"stage_$refTable\"))",
+    Entry("model/AuxDimsJob.scala", "broadcast(refs(refTable))",
       "bounded-dim", "reference dims (auxillary_dims.py parity): model-bounded"),
     Entry("operators/Broadcasts.scala", "broadcast(df) else df",
       "sized-gate", "the shared sized route itself"),
